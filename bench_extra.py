@@ -1,16 +1,16 @@
 """Extra measurement harness for the r07 optimization round (guide §1.4):
-noop-sink isolation of the headline queries plus stage-level breakdowns of
-the two dominant ones (pipeline_audit, minhash_near_dups).
+noop-sink isolation of the headline queries plus a stage-level breakdown of
+minhash_near_dups (the pipeline_audit layers are in perfbench's traced
+webtext_run ladder).
 
 NOT the driver bench — bench.py stays frozen; this file exists so
 OPTIMIZATION_r07.md can cite per-stage numbers.
 
 Usage:
   python bench_extra.py queries [names...]   # noop-isolated per-query times
-  python bench_extra.py pipeline             # pipeline_audit stage breakdown
   python bench_extra.py minhash              # minhash stage breakdown
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, QS_BENCH_DOCS (pipeline docs),
-     QS_REPEAT (default 3, reports min)
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, QS_REPEAT (default 3, reports
+     min)
 """
 
 from __future__ import annotations
@@ -25,7 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPEAT = int(os.environ.get("QS_REPEAT", "3"))
-N_DOCS = int(os.environ.get("QS_BENCH_DOCS", "300000"))
 
 HEADLINE = [
     "quality_filter_decisions", "exact_dup_stats", "token_stats_by_lang",
@@ -74,74 +73,6 @@ def cmd_queries(names):
         print(name, json.dumps(out[name]), flush=True)
     print(json.dumps({"mode": "queries", "sf_dir": SF_DIR, "cpus": CPUS,
                       "results": out}))
-    spark.stop()
-
-
-def _pages(spark):
-    from qualityspark import synth
-    path = f"/tmp/qs_bench_pages_{N_DOCS}.parquet"
-    if not os.path.exists(path):
-        (synth.pages_df(spark, N_DOCS, partitions=64)
-         .write.mode("overwrite").parquet(path))
-    return spark.read.parquet(path)
-
-
-def cmd_pipeline():
-    from pyspark.sql import functions as F
-    from qualityspark import constants as C
-    from qualityspark.rules.heuristics import signal_columns
-    from qualityspark.rules.udfs import with_model_columns
-    from qualityspark.rules.dedup import with_dedup_flags, text_sha_expr
-    from qualityspark.caching import tracked_cache
-    from qualityspark.pipeline import audit
-    from qualityspark.scoring import with_scores
-
-    spark = _spark()
-    pages = _pages(spark)
-    out = {}
-
-    # warmup (codegen/JIT) on a small same-schema corpus, same as bench.py
-    from qualityspark import synth
-    warm_path = "/tmp/qs_bench_pages_warm_30000.parquet"
-    if not os.path.exists(warm_path):
-        (synth.pages_df(spark, 30000, partitions=64)
-         .write.mode("overwrite").parquet(warm_path))
-    warm = spark.read.parquet(warm_path)
-    for _ in range(2):
-        _noop(audit(warm))
-        from qualityspark.caching import release_caches
-        release_caches()
-
-    out["scan_only"] = _time(spark, "scan only", lambda: _noop(pages))
-    out["signals_only"] = _time(
-        spark, "signals", lambda: _noop(signal_columns(pages)))
-    out["signals_model"] = _time(
-        spark, "signals+model",
-        lambda: _noop(with_model_columns(signal_columns(pages))
-                      .drop("html", "text")))
-
-    def _to_dedup():
-        narrow = tracked_cache(pages.select(
-            text_sha_expr().alias("text_sha"), "url", "warc_ts"))
-        df = with_model_columns(signal_columns(pages))
-        df = df.withColumn("text_sha", text_sha_expr()).drop("html", "text")
-        _noop(with_dedup_flags(df, narrow=narrow))
-    out["plus_dedup"] = _time(spark, "signals+model+dedup", _to_dedup)
-    out["full_audit"] = _time(spark, "full audit", lambda: _noop(audit(pages)))
-
-    # model pass alone over the narrowest projection (text, lang)
-    def _model_only():
-        from qualityspark.rules.udfs import model_pass
-        _noop(pages.select(model_pass()(F.col("text"), F.col("lang"))
-                           .alias("_m")))
-    out["model_only"] = _time(spark, "model only", _model_only)
-
-    def _sha_only():
-        _noop(pages.select(text_sha_expr().alias("s"), "url", "warc_ts"))
-    out["narrow_sha_only"] = _time(spark, "narrow sha", _sha_only)
-
-    print(json.dumps({"mode": "pipeline", "n_docs": N_DOCS, "cpus": CPUS,
-                      "results": out}, indent=1))
     spark.stop()
 
 
@@ -206,8 +137,6 @@ if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if mode == "queries":
         cmd_queries(sys.argv[2:])
-    elif mode == "pipeline":
-        cmd_pipeline()
     elif mode == "minhash":
         cmd_minhash()
     else:

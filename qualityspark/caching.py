@@ -12,8 +12,8 @@ a session that runs many queries would accumulate executor storage until
 eviction pressure hurts every subsequent job.
 
 Protocol: builders wrap their persist in ``tracked_cache``; whoever
-materializes the final result (pipeline.run, io.run_resumable, bench and
-gate harnesses) calls ``release_caches`` afterwards.  Releasing is safe
+materializes the final result (io.run_resumable, bench and gate
+harnesses) calls ``release_caches`` afterwards.  Releasing is safe
 at any point after the consuming job finishes — Spark unpersist is
 idempotent and non-blocking here."""
 

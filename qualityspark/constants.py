@@ -18,6 +18,12 @@ from __future__ import annotations
 
 import re
 
+# ASCII whitespace, the ONE token-boundary class of every signal: Java regex
+# ``\s`` is ASCII-only, so this spelling (a regex character-class body)
+# means the same set under Python ``re``, Java regex and DuckDB's RE2.  The
+# tokenizer, strips and the SQL oracles all derive their classes from it.
+ASCII_WS = r" \t\n\r\f\x0b"
+
 # ---------------------------------------------------------------------------
 # Null-like tokens (reference checks/universal_checks.py:7-11)
 # ---------------------------------------------------------------------------
@@ -93,9 +99,14 @@ TOXICITY_WORDS = (
     "motherfucker", "piss", "pissed", "shit", "shitty", "slut",
     "wanker", "whore",
 )
+# oracle.scrub_and_hits trusts the token-level tox_hint as exact only
+# because every entry is plain lowercase ASCII letters (sre IGNORECASE on
+# ASCII == str.lower equality)
+assert all(w.isascii() and w.isalpha() and w.islower()
+           for w in TOXICITY_WORDS), "TOXICITY_WORDS must be lowercase ASCII"
 TOXICITY_SET = frozenset(TOXICITY_WORDS)
 MAX_TOXICITY_DENSITY = 0.02       # toxic tokens / tokens
-_TOX_WS = r"[ \t\n\r\f\x0b]"
+_TOX_WS = "[" + ASCII_WS + "]"
 # python-re mask pattern over the RAW text (case-insensitive): token-
 # delimited so it masks exactly the tokens the density rule counts
 TOXICITY_MASK_RE = re.compile(

@@ -1,12 +1,14 @@
 """End-to-end audit pipeline (reference query lifecycle, SURVEY.md §3.1,
 re-staged for Spark's execution model):
 
-  stage 1 (no shuffle)  : JVM signal projection (rules/heuristics.py)
-                          + ONE Arrow model pass (rules/udfs.py)
+  stage 1 (no shuffle)  : whole-string JVM signals (rules/heuristics.py)
+                          + ONE Arrow model pass carrying the model-bound
+                          and token/line signals (rules/udfs.py)
   stage 2 (1-2 shuffles): keep-first dedup windows (rules/dedup.py)
   stage 3 (no shuffle)  : scoring / grade / keep / rules_fired (scoring.py)
-  stage 4               : sinks — audited table, lineage (explode, no extra
-                          shuffle), metrics (one tiny agg shuffle)
+
+The sinks (audited table, lineage, metrics) are written by
+``io.run_resumable``, the CLI ``run`` path.
 
 Catalyst handles predicate pushdown/column pruning on the scan; AQE
 coalesces post-shuffle partitions and splits skewed ones (hot-domain /
@@ -22,9 +24,8 @@ from qualityspark import constants as C
 from qualityspark.rules.heuristics import signal_columns
 from qualityspark.rules.udfs import with_model_columns
 from qualityspark.rules.dedup import with_dedup_flags, text_sha_expr
-from qualityspark.caching import tracked_cache, release_caches
-from qualityspark.scoring import (with_scores, with_business_rules,
-                                  lineage_table, metrics_table)
+from qualityspark.caching import tracked_cache
+from qualityspark.scoring import with_scores, with_business_rules
 
 RESULT_COLUMNS = ["url", "warc_ts", "lang", "lang_pred", "lang_prob",
                   "perplexity", "score", "grade", "keep", "rules_fired",
@@ -56,12 +57,8 @@ def audit(pages: DataFrame, as_of: str = C.AS_OF_TS, cfg=None) -> DataFrame:
     if tb:
         narrow_cols.append(F.col(tb))
     narrow = tracked_cache(pages.select(*narrow_cols))
-    # token/line-derived signals ride the Arrow model pass (r7): the JVM
-    # regex-alternation forms measured ~8 s of the 300k-doc signal stage,
-    # vs ~60 us/doc for the shared-tokenization textstats computation in
-    # the pass that already holds the text (values identical, pinned)
-    df = signal_columns(pages, as_of=as_of, cfg=cfg, model_signals=True)
-    df = with_model_columns(df, cfg=cfg, signals_from_model=True)
+    df = signal_columns(pages, as_of=as_of)
+    df = with_model_columns(df, cfg=cfg)
     df = df.withColumn("text_sha", text_sha_expr())
     df = df.drop("html", "text")
     df = with_dedup_flags(df, narrow=narrow, tiebreaker=tb)
@@ -69,27 +66,3 @@ def audit(pages: DataFrame, as_of: str = C.AS_OF_TS, cfg=None) -> DataFrame:
     df = with_scores(df, cfg=cfg)
     return df
 
-
-def audited_result(pages: DataFrame, as_of: str = C.AS_OF_TS,
-                   cfg=None) -> DataFrame:
-    return audit(pages, as_of, cfg=cfg).select(*RESULT_COLUMNS)
-
-
-def run(spark, pages: DataFrame, out_dir: str, run_id: str = "run0",
-        as_of: str = C.AS_OF_TS, cfg=None) -> dict:
-    """Full run with sinks.  Returns dict of paths."""
-    df = audit(pages, as_of, cfg=cfg)
-    result = df.select(*RESULT_COLUMNS)
-    result.write.mode("overwrite").parquet(f"{out_dir}/audited")
-    audited = spark.read.parquet(f"{out_dir}/audited")
-    lineage_table(audited, cfg=cfg).write.mode("overwrite").parquet(
-        f"{out_dir}/lineage")
-    metrics_table(audited, run_id, cfg=cfg).write.mode("overwrite").parquet(
-        f"{out_dir}/metrics")
-    kept = audited.filter("keep")
-    (kept.select("url", "warc_ts", "lang", "lang_pred",
-                 F.col("scrubbed_text").alias("text"))
-     .write.mode("overwrite").parquet(f"{out_dir}/kept"))
-    release_caches()    # the audited parquet is on disk; narrow is done
-    return {"audited": f"{out_dir}/audited", "lineage": f"{out_dir}/lineage",
-            "metrics": f"{out_dir}/metrics", "kept": f"{out_dir}/kept"}

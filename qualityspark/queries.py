@@ -28,7 +28,7 @@ from qualityspark.rules import scalestats as S
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB dialect == ANSI here)
 # ---------------------------------------------------------------------------
-WS = r"[ \t\n\r\f\x0b]"
+WS = "[" + C.ASCII_WS + "]"
 SQL_STRIP = ("regexp_replace(regexp_replace({col}, '^" + WS + "+', ''), '"
              + WS + "+$', '')")
 NULL_LIKE_SQL = "(" + ", ".join(
@@ -1792,9 +1792,9 @@ def quality_filter_decisions(spark, sf_dir):
     # (regexp_count / bounded-alternation extract_all / array_distinct
     # over the token array) measured ~2.9 s of the 3.7 s query at 50k
     # docs — interpreted alternation scans — vs ~45 us/doc for the shared
-    # tokenization.  Values are the textstats definitions, pinned equal
-    # to the JVM forms (tests/test_parity.py, test_r7_fixes fuzz); the
-    # decision arithmetic below stays JVM-side and identical.
+    # tokenization.  Values are the textstats definitions, checked by the
+    # DuckDB oracle; the decision arithmetic below stays JVM-side and
+    # identical.
     from qualityspark.rules.udfs import token_counts_pass
     tc = token_counts_pass()(F.col("text"))
     wc = tc["wc"]
@@ -2217,7 +2217,8 @@ def _audit_signal_sql() -> str:
     allowed = ", ".join(f"'{lg}'" for lg in C.ALLOWED_LANGS)
     # URL_RE with Java's \s spelled as the explicit ASCII-WS class (RE2's
     # \s omits \x0b)
-    url_re = r"^https?://[A-Za-z0-9.-]+(?::\d+)?(?:/[^ \t\n\r\f\x0b]*)?$"
+    url_re = (r"^https?://[A-Za-z0-9.-]+(?::\d+)?(?:/[^" + C.ASCII_WS
+              + "]*)?$")
 
     flags = {
         "TEXT_NULL_LIKE": "is_null",
@@ -2267,7 +2268,7 @@ def _audit_signal_sql() -> str:
         "WHITESPACE_UNSTRIPPED":
             f"(NOT is_null AND coalesce(regexp_matches(text, "
             f"'^{WS}|{WS}$') AND regexp_matches(text, "
-            f"'[^ \\t\\n\\r\\f\\x0b]'), false))",
+            f"'[^{C.ASCII_WS}]'), false))",
         "TRUNCATION_SIGNS":
             f"(NOT is_null AND coalesce(regexp_matches(text, "
             f"'(\\.\\.\\.|…){WS}*$'), false))",

@@ -1,17 +1,21 @@
-"""Per-document quality signals as native Spark Column expressions.
+"""Whole-string document signals as native Spark Column expressions.
 
-Every function here mirrors one pure-Python definition in
-``qualityspark.textstats`` (the oracle); tests assert exact equality over the
-synthetic corpus.  All expressions stay inside Tungsten whole-stage codegen —
-no Python in this module's runtime path.
+Each function mirrors one pure-Python definition in
+``qualityspark.textstats`` (the oracle); ``tests/test_parity.py`` asserts
+the pipeline equals the oracle over the synthetic corpus.  These
+expressions stay inside Tungsten whole-stage codegen — no Python in this
+module's runtime path.
 
-Expression-design notes for 100 TB:
-* ``tokens``/``lines`` are computed ONCE in ``with_base_columns`` and shared
-  by all downstream signals (Catalyst collapses the projections; the arrays
-  materialize once per row in codegen).
-* Everything is null-safe: signals are typed booleans/doubles, never throw
-  (the reference wraps each check in try/except —
-  reference core/check_engine.py:145-169; expressions can't throw per-row).
+The token/line-derived signals (word counts and ratios, stopwords,
+toxicity, caps, repetition) have ONE implementation,
+``textstats.signal_stats``, evaluated in the Arrow model pass
+(rules/udfs.py).  The token helpers kept here (``tokens_expr``,
+``word_ngrams``, ``repetition_3gram``) serve the registry queries, neardup
+and the Python-free ``streaming.stream_metrics``.
+
+Everything is null-safe: signals are typed booleans/doubles, never throw
+(the reference wraps each check in try/except —
+reference core/check_engine.py:145-169; expressions can't throw per-row).
 """
 
 from __future__ import annotations
@@ -23,8 +27,8 @@ from pyspark.sql import functions as F
 
 from qualityspark import constants as C
 
-WS_CLASS = r"[ \t\n\r\f\x0b]"
-NON_WS_CLASS = r"[^ \t\n\r\f\x0b]"
+WS_CLASS = "[" + C.ASCII_WS + "]"
+NON_WS_CLASS = "[^" + C.ASCII_WS + "]"
 
 
 def _empty():
@@ -60,30 +64,10 @@ _NULL_LIKE_RE = ("^" + WS_CLASS + "*(?iu:"
                  + ")?" + WS_CLASS + r"*\z")
 
 
-def _bounded_words_re(words) -> str:
-    """Pattern matching any of ``words`` as a whole whitespace-delimited
-    token of an ALREADY-LOWERCASED string (== membership of the lowercased
-    token in the word set).  Case-sensitive on purpose: (?iu) matching
-    costs per-char Unicode case folding in Java regex (measured ~20% of
-    the whole 4-core pipeline); one lower() pass over the text is far
-    cheaper and matches str.lower() semantics."""
-    return ("(?:^|(?<=" + WS_CLASS + "))(?:"
-            + "|".join(_java_escape(w) for w in words)
-            + ")(?=" + WS_CLASS + r"|\z)")
-
-
 def strip_ws(col: Column) -> Column:
     return F.regexp_replace(
         F.regexp_replace(col, "^" + WS_CLASS + "+", ""),
         WS_CLASS + r"+$", "")
-
-
-def lstrip_ws(col: Column) -> Column:
-    return F.regexp_replace(col, "^" + WS_CLASS + "+", "")
-
-
-def rstrip_ws(col: Column) -> Column:
-    return F.regexp_replace(col, WS_CLASS + r"+$", "")
 
 
 def is_null_like(col: Column) -> Column:
@@ -100,113 +84,6 @@ def tokens_expr(text: Column) -> Column:
     """ASCII-whitespace tokens, empties dropped (== textstats.tokenize)."""
     return F.filter(F.split(F.coalesce(text, _empty()), WS_CLASS + "+"),
                     lambda t: t != _empty())
-
-
-def count_occurrences(text: Column, literal: str) -> Column:
-    """Non-overlapping occurrence count via replace-length arithmetic
-    (plain substring replace, no regex engine)."""
-    t = F.coalesce(text, _empty())
-    return ((F.length(t) - F.length(F.replace(t, F.lit(literal), _empty())))
-            / len(literal)).cast("long")
-
-
-def with_base_columns(df: DataFrame, text: str = "text",
-                      lang: str = "lang") -> DataFrame:
-    """Adds shared intermediates: tokens, tokens_lower, n_words, lines."""
-    # single withColumns call: one analysis pass instead of four (chained
-    # withColumn is quadratic in plan-analysis time).  No token ARRAY is
-    # materialized any more: the last consumer (3-gram repetition) moved
-    # into the Arrow model pass in r7 (rules/udfs.py — the zip_with gram
-    # chain was interpreted and dominated the signal stage); every other
-    # signal is a one-pass string expression (see module header).  n_words
-    # via regexp_count == size(tokens): tokens are maximal non-WS runs.
-    return df.withColumns({
-        "_n_words": F.regexp_count(F.coalesce(F.col(text), _empty()),
-                                   F.lit(NON_WS_CLASS + "+")),
-        "_lines": F.when(F.col(text).isNull() | (F.col(text) == ""),
-                         F.array().cast("array<string>"))
-                   .otherwise(F.split(F.col(text), "\n", -1)),
-    })
-
-
-WS_CHARS = " \t\n\r\f\x0b"
-
-
-def mean_word_len(text: Column, n: Column) -> Column:
-    """sum(len(token)) == count of non-whitespace chars.  translate() is a
-    plain char-map scan — far cheaper than any regex pass (regexp_count
-    is RuntimeReplaceable to size(regexp_extract_all(..)): it ALLOCATES a
-    match string per hit, ruinous for per-char counting)."""
-    t = F.coalesce(text, _empty())
-    total = F.length(F.translate(t, WS_CHARS, ""))
-    return F.when(n > 0, total.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def alpha_word_ratio(text: Column, n: Column) -> Column:
-    """Tokens containing a letter, counted in one regexp_count pass: each
-    maximal non-whitespace run holding a letter yields exactly one greedy
-    whitespace-bounded match.  Backtracking is quadratic only WITHIN a
-    letterless token (tokens are short, so bounded); measured fastest of
-    the three candidate forms (direct 0.6-1.0 s vs per-token
-    filter+rlike 3.8 s vs letterless-complement 5.8 s on 300k docs)."""
-    hits = F.regexp_count(
-        F.coalesce(text, _empty()),
-        F.lit(NON_WS_CLASS + "*[A-Za-z]" + NON_WS_CLASS + "*"))
-    return F.when(n > 0, hits.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def symbol_word_ratio(text: Column, n: Column) -> Column:
-    cnt = (count_occurrences(text, "#") + count_occurrences(text, "...")
-           + count_occurrences(text, "…"))
-    return F.when(n > 0, cnt.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def bullet_line_ratio(lines: Column) -> Column:
-    # anchored pattern folds the per-line lstrip allocation into the match
-    nl = F.size(lines)
-    hits = F.size(F.filter(
-        lines, lambda l: l.rlike("^" + WS_CLASS + r"*[•\-*]")))
-    return F.when(nl > 0, hits.cast("double") / nl).otherwise(F.lit(0.0))
-
-
-def ellipsis_line_ratio(lines: Column) -> Column:
-    nl = F.size(lines)
-    hits = F.size(F.filter(
-        lines, lambda l: l.rlike(r"(\.\.\.|…)" + WS_CLASS + r"*\z")))
-    return F.when(nl > 0, hits.cast("double") / nl).otherwise(F.lit(0.0))
-
-
-def _per_lang(lang: Column, table: dict, fn) -> Column:
-    """when-chain over the (tiny, fixed) language table; fallback 'en'."""
-    expr = fn(table["en"])
-    for lg in sorted(table):
-        if lg == "en":
-            continue
-        expr = F.when(lang == lg, fn(table[lg])).otherwise(expr)
-    return expr
-
-
-def stopword_density(text_lower: Column, n: Column, lang: Column) -> Column:
-    """Stopword hits in ONE regexp_count pass over the lowercased text:
-    the whitespace-bounded alternation is exactly `token.lower() in
-    stopword_set` per token (lower() once per doc replaces per-char
-    Unicode case folding inside the regex)."""
-    def density(words):
-        hits = F.regexp_count(text_lower,
-                              F.lit(_bounded_words_re(sorted(words))))
-        return F.when(n > 0, hits.cast("double") / n).otherwise(F.lit(0.0))
-    return _per_lang(lang, C.STOPWORDS, density)
-
-
-def required_stopword_hits(text_lower: Column, lang: Column) -> Column:
-    """Distinct required stopwords present: ONE regexp_extract_all pass
-    collects the (few) bounded matches, distinct + size counts the words
-    — replaces building + hashing a full per-token array."""
-    def hits(words):
-        found = F.regexp_extract_all(
-            text_lower, F.lit("(" + _bounded_words_re(sorted(words)) + ")"))
-        return F.size(F.array_distinct(found))
-    return _per_lang(lang, C.REQUIRED_STOPWORDS, hits)
 
 
 def word_ngrams(toks: Column, k: int) -> Column:
@@ -236,8 +113,8 @@ def _word_ngram_hashes(toks: Column, k: int) -> Column:
     """word_ngrams variant producing chained xxhash64 fingerprints instead
     of joined strings: distinct-count equal up to a 2^-64-per-pair hash
     collision (~90 grams/doc -> <1e-15 per document; the oracle computes
-    the exact string distinct and tests/test_parity.py pins equality over
-    the corpus).  Benchmarked on 300k docs at 4 cores: string-concat
+    the exact string distinct and tests/test_streaming.py pins equality
+    over the corpus).  Benchmarked on 300k docs at 4 cores: string-concat
     grams 10.6 s, array<struct> grams 16.2 s (array_distinct over structs
     is a QUADRATIC pairwise scan — only atomic element types get the open
     hash set), chained-hash grams 9.0 s."""
@@ -256,20 +133,6 @@ def repetition_3gram(toks: Column, n: Column) -> Column:
     ratio = F.lit(1.0) - (F.size(F.array_distinct(grams)).cast("double")
                           / F.size(grams))
     return F.when(n >= 3, ratio).otherwise(F.lit(0.0))
-
-
-_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_LOWER = _UPPER.lower()
-
-
-def caps_ratio(text: Column) -> Column:
-    # char-class counting via translate (char-map scan, no regex): see
-    # mean_word_len for why regexp_count is the wrong tool here
-    t = F.coalesce(text, _empty())
-    upper = F.length(t) - F.length(F.translate(t, _UPPER, ""))
-    letters = F.length(t) - F.length(F.translate(t, _UPPER + _LOWER, ""))
-    return F.when(letters > 0,
-                  upper.cast("double") / letters).otherwise(F.lit(0.0))
 
 
 def has_control_chars(text: Column) -> Column:
@@ -298,29 +161,23 @@ def url_is_malformed(url: Column) -> Column:
 
 
 def signal_columns(df: DataFrame, as_of: str = C.AS_OF_TS,
-                   cfg=None, model_signals: bool = False) -> DataFrame:
-    """One projection adding every JVM-side rule signal as ``sig_<RULE>``.
+                   model_signals: bool = True) -> DataFrame:
+    """One projection adding every whole-string rule signal as
+    ``sig_<RULE>``: null-like, url, control chars, timestamps, whitespace,
+    truncation and lang-allowed.
 
-    Model-bound signals (LANG_MISMATCH, PERPLEXITY_HIGH, HTML_BINARY_JUNK,
-    PII_*) are added separately by the Arrow pass (rules/udfs.py).
+    The token/line-derived signals and every model-bound signal
+    (LANG_MISMATCH, PERPLEXITY_HIGH, HTML_BINARY_JUNK, PII_*) are added by
+    the Arrow pass (rules/udfs.with_model_columns), which also supplies
+    ``_n_words``.
 
-    ``model_signals=True`` (the batch pipeline): skip the token/line-
-    derived signals — they come from the Arrow model pass instead
-    (udfs.with_model_columns(signals_from_model=True), which also supplies
-    ``_n_words``).  Those JVM forms are interpreted regex alternation
-    scans measured ~8 s of the 300k-doc signal stage, while the pass that
-    already tokenizes every document computes the same textstats-defined
-    values for ~60 us/doc.  The default (False) keeps the full JVM set:
-    the Python-free streaming metrics path and the registry queries use
-    these expressions unchanged, and tests pin them equal to textstats.
-
-    ``cfg`` (qualityspark.config.RunConfig) retunes the scalar thresholds;
-    None means the constants defaults.  Signals are computed regardless of
-    ``disabled_rules`` — disabling is a SCORING decision (the rule stops
-    firing/deducting, config.RunConfig.doc_rules) so that one audited
-    table can be re-scored under several configs without recompute."""
-    from qualityspark.config import resolve
-    cfg = resolve(cfg)
+    None of these signals takes a tunable threshold, so no RunConfig is
+    needed: disabled rules are a SCORING decision (config.RunConfig.
+    doc_rules), which lets one audited table be re-scored under several
+    configs without recompute."""
+    # model_signals accepts only True; kept for the frozen perfbench ladder
+    if model_signals is not True:
+        raise ValueError("signal_columns: model_signals must be True")
     text, url, ts, lang = (F.col("text"), F.col("url"), F.col("warc_ts"),
                            F.col("lang"))
     text_null = is_null_like(text)
@@ -342,49 +199,4 @@ def signal_columns(df: DataFrame, as_of: str = C.AS_OF_TS,
             not_null & (~F.coalesce(lang.isin(*C.ALLOWED_LANGS),
                                     F.lit(False))),
     }
-    if not model_signals:
-        df = with_base_columns(df)
-        n, lines = (F.col("_n_words"), F.col("_lines"))
-        # shared by both stopword signals; whole-stage codegen CSEs the
-        # duplicate subtree so the lower() pass runs once per row
-        text_lower = F.lower(F.coalesce(text, _empty()))
-        mwl = mean_word_len(text, n)
-        sig.update({
-            "WORDS_TOO_FEW": not_null & (n < cfg.param("MIN_WORDS")),
-            "WORDS_TOO_MANY": not_null & (n > cfg.param("MAX_WORDS")),
-            "MEAN_WORD_LEN_OOB":
-                not_null & ((mwl < cfg.param("MIN_MEAN_WORD_LEN"))
-                            | (mwl > cfg.param("MAX_MEAN_WORD_LEN"))),
-            "SYMBOL_WORD_RATIO_HIGH":
-                not_null & (symbol_word_ratio(text, n)
-                            > cfg.param("MAX_SYMBOL_WORD_RATIO")),
-            "BULLET_LINES_HIGH":
-                not_null & (bullet_line_ratio(lines)
-                            > cfg.param("MAX_BULLET_LINE_RATIO")),
-            "ELLIPSIS_LINES_HIGH":
-                not_null & (ellipsis_line_ratio(lines)
-                            > cfg.param("MAX_ELLIPSIS_LINE_RATIO")),
-            "ALPHA_RATIO_LOW":
-                not_null & (alpha_word_ratio(text, n)
-                            < cfg.param("MIN_ALPHA_WORD_RATIO")),
-            "REQUIRED_STOPWORDS_MISSING":
-                not_null & (required_stopword_hits(text_lower, lang)
-                            < cfg.param("MIN_REQUIRED_STOPWORDS")),
-            "STOPWORD_DENSITY_LOW":
-                not_null & (stopword_density(text_lower, n, lang)
-                            < cfg.param("MIN_STOPWORD_DENSITY")),
-            "TOXICITY_HIGH":
-                not_null & (F.when(n > 0, F.regexp_count(
-                    text_lower,
-                    F.lit(_bounded_words_re(sorted(C.TOXICITY_WORDS))))
-                    .cast("double") / n).otherwise(F.lit(0.0))
-                    > cfg.param("MAX_TOXICITY_DENSITY")),
-            # REPETITION_HIGH comes from the Arrow model pass on the batch
-            # pipeline; the streaming metrics path adds its own JVM copy
-            # (streaming.stream_metrics)
-            "CAPS_RATIO_HIGH":
-                not_null & (caps_ratio(text)
-                            > cfg.param("MAX_CAPS_RATIO")),
-        })
-    out = df.withColumns({f"sig_{rule}": expr for rule, expr in sig.items()})
-    return out.drop("_lines") if not model_signals else out
+    return df.withColumns({f"sig_{rule}": expr for rule, expr in sig.items()})

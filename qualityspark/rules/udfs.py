@@ -6,13 +6,21 @@ runs in ONE pandas UDF so each row crosses the JVM↔Python boundary once.
 Models are module-level: loaded once per executor python worker, not per
 batch (the iterator form's usual benefit, achieved via import caching).
 
+The same pass is the ONLY implementation of the token/line-derived
+signals: it calls ``textstats.signal_stats`` (the oracle's own definition)
+on one shared tokenization per document, so those signals ride a boundary
+crossing the model pass pays anyway.  ``with_model_columns`` turns the
+struct into ``sig_*`` columns with JVM-side threshold comparisons; the
+whole-string signals come from ``heuristics.signal_columns``.
+
 Outputs one struct column:
   lang_pred / lang_prob  — n-gram langid (fastText slot)
   perplexity             — char-trigram LM score (KenLM slot)
-  nul_frac               — NUL fraction of first 8 KiB of html
-                           (reference core/data_loader.py:82-89 analog)
-  scrubbed_text          — PII-masked text (byte-identical to oracle)
-  pii_hits               — array of PII pattern names found
+  scrub_diff / pii_hits  — PII-masked text (byte-identical to oracle; only
+                           shipped when it differs) and pattern names found
+  n_words .. rep_ratio   — the signal_stats metrics
+The NUL fraction of the html head (HTML_BINARY_JUNK) is computed JVM-side
+(``nul_fraction_expr``) so binary payloads never cross the Arrow pipe.
 """
 
 from __future__ import annotations
@@ -42,13 +50,12 @@ def _model_pass_fn(text: pd.Series, lang: pd.Series) -> pd.DataFrame:
     langs = lang.tolist()
     diffs = [None] * n
     hits_out = [[]] * n
-    # EVERY token/line-derived signal metric lives in this pass since r7
-    # (first REPETITION_HIGH, then the rest — see textstats.signal_stats):
-    # the JVM forms are interpreted regex alternation scans measured ~8 s
-    # of the 300k-doc signal stage, while one shared tokenization plus set
-    # lookups cost ~60 us/doc in the pass that already holds the text.
-    # Values are the textstats definitions EXACTLY — the same module the
-    # oracle uses — so parity is structural.
+    # EVERY token/line-derived signal metric lives in this pass (see
+    # textstats.signal_stats): interpreted JVM regex alternation scans
+    # measured ~8 s of the 300k-doc signal stage, while one shared
+    # tokenization plus set lookups cost ~60 us/doc in the pass that
+    # already holds the text.  Values are the textstats definitions
+    # EXACTLY — the same module the oracle uses — so parity is structural.
     zeros = (0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0, 0.0, 0.0, 0.0)
     stats = [zeros] * n
     # ONE tokenization per doc feeds signal_stats AND the langid/ppl
@@ -112,10 +119,10 @@ def _token_counts_fn(text: pd.Series) -> pd.DataFrame:
     """Per-doc token counts for the SQL-decision queries: word count,
     letter-containing-token count, distinct required-'en'-stopword hits,
     distinct token count.  Each is the textstats definition (one shared
-    tokenization), which tests pin equal to the JVM regexp forms the
-    queries previously evaluated — those interpreted alternation scans
-    measured ~2.9 s of the 3.7 s quality_filter_decisions query at 50k
-    docs vs ~45 us/doc here."""
+    tokenization), checked by the queries' DuckDB oracles — the JVM
+    regexp forms the queries previously evaluated (interpreted
+    alternation scans) measured ~2.9 s of the 3.7 s
+    quality_filter_decisions query at 50k docs vs ~45 us/doc here."""
     from qualityspark import textstats as T
     req_set = T._REQ_SETS["en"]
     wcs, als, rqs, dts = [], [], [], []
@@ -161,22 +168,24 @@ def nul_fraction_expr() -> F.Column:
 
 
 def with_model_columns(df: DataFrame, cfg=None,
-                       signals_from_model: bool = False) -> DataFrame:
-    """Adds the model struct fields + derived rule signals.  ``cfg``
-    retunes MAX_NUL_FRACTION / MIN_LANG_PROB / MAX_PERPLEXITY.
-
-    ``signals_from_model=True`` (the batch pipeline): additionally emit
-    every token/line-derived signal from the struct's raw metrics — the
-    caller must have run ``signal_columns(..., model_signals=True)`` so
-    those signals aren't computed twice.  Threshold comparisons stay
-    JVM-side against ``cfg`` exactly as the heuristics forms wrote them;
-    the raw metrics are the textstats definitions (see _model_pass_fn),
-    which tests pin equal to the JVM expressions."""
+                       signals_from_model: bool = True) -> DataFrame:
+    """Adds the model struct fields, ``_n_words`` and every model-bound and
+    token/line-derived rule signal; the caller has run
+    ``heuristics.signal_columns`` (this reads its ``sig_TEXT_NULL_LIKE``).
+    The raw metrics are the textstats definitions (see _model_pass_fn);
+    threshold comparisons stay JVM-side against ``cfg``, which retunes
+    every threshold here."""
+    # signals_from_model accepts only True; kept for the frozen perfbench
+    # ladder
+    if signals_from_model is not True:
+        raise ValueError("with_model_columns: signals_from_model must be True")
     from qualityspark.config import resolve
     cfg = resolve(cfg)
     df = df.withColumn("_m", model_pass()(F.col("text"), F.col("lang")))
-    text_null = F.col("sig_TEXT_NULL_LIKE")
-    cols = {
+    not_null = ~F.col("sig_TEXT_NULL_LIKE")
+    n = F.col("_m.n_words")
+    mwl = F.col("_m.mean_word_len")
+    return df.withColumns({
         "lang_pred": F.col("_m.lang_pred"),
         "lang_prob": F.col("_m.lang_prob"),
         "perplexity": F.col("_m.perplexity"),
@@ -188,56 +197,47 @@ def with_model_columns(df: DataFrame, cfg=None,
         "sig_HTML_BINARY_JUNK":
             nul_fraction_expr() > cfg.param("MAX_NUL_FRACTION"),
         "sig_LANG_MISMATCH":
-            (~text_null)
+            not_null
             & F.col("lang").isin(*C.ALLOWED_LANGS)
             & (F.col("_m.lang_pred") != "und")
             & (F.col("_m.lang_pred") != F.col("lang"))
             & (F.col("_m.lang_prob") >= cfg.param("MIN_LANG_PROB")),
         "sig_PERPLEXITY_HIGH":
-            (~text_null)
+            not_null
             & (F.col("_m.perplexity") > cfg.param("MAX_PERPLEXITY")),
-        # moved from heuristics.signal_columns (r7): see _model_pass_fn
         "sig_REPETITION_HIGH":
-            (~text_null)
+            not_null
             & (F.col("_m.rep_ratio") > cfg.param("MAX_REPETITION_3GRAM")),
-    }
-    for name, _rx, _sev in C.PII_PATTERNS:
-        cols[f"sig_PII_{name}"] = F.array_contains(F.col("_m.pii_hits"),
-                                                   name)
-    if signals_from_model:
-        not_null = ~text_null
-        n = F.col("_m.n_words")
-        mwl = F.col("_m.mean_word_len")
-        cols.update({
-            "_n_words": n,
-            "sig_WORDS_TOO_FEW": not_null & (n < cfg.param("MIN_WORDS")),
-            "sig_WORDS_TOO_MANY": not_null & (n > cfg.param("MAX_WORDS")),
-            "sig_MEAN_WORD_LEN_OOB":
-                not_null & ((mwl < cfg.param("MIN_MEAN_WORD_LEN"))
-                            | (mwl > cfg.param("MAX_MEAN_WORD_LEN"))),
-            "sig_SYMBOL_WORD_RATIO_HIGH":
-                not_null & (F.col("_m.symbol_ratio")
-                            > cfg.param("MAX_SYMBOL_WORD_RATIO")),
-            "sig_BULLET_LINES_HIGH":
-                not_null & (F.col("_m.bullet_ratio")
-                            > cfg.param("MAX_BULLET_LINE_RATIO")),
-            "sig_ELLIPSIS_LINES_HIGH":
-                not_null & (F.col("_m.ellipsis_ratio")
-                            > cfg.param("MAX_ELLIPSIS_LINE_RATIO")),
-            "sig_ALPHA_RATIO_LOW":
-                not_null & (F.col("_m.alpha_ratio")
-                            < cfg.param("MIN_ALPHA_WORD_RATIO")),
-            "sig_REQUIRED_STOPWORDS_MISSING":
-                not_null & (F.col("_m.req_hits")
-                            < cfg.param("MIN_REQUIRED_STOPWORDS")),
-            "sig_STOPWORD_DENSITY_LOW":
-                not_null & (F.col("_m.stop_density")
-                            < cfg.param("MIN_STOPWORD_DENSITY")),
-            "sig_TOXICITY_HIGH":
-                not_null & (F.col("_m.tox_density")
-                            > cfg.param("MAX_TOXICITY_DENSITY")),
-            "sig_CAPS_RATIO_HIGH":
-                not_null & (F.col("_m.caps_ratio")
-                            > cfg.param("MAX_CAPS_RATIO")),
-        })
-    return df.withColumns(cols).drop("_m")
+        **{f"sig_PII_{name}": F.array_contains(F.col("_m.pii_hits"), name)
+           for name, _rx, _sev in C.PII_PATTERNS},
+        "_n_words": n,
+        "sig_WORDS_TOO_FEW": not_null & (n < cfg.param("MIN_WORDS")),
+        "sig_WORDS_TOO_MANY": not_null & (n > cfg.param("MAX_WORDS")),
+        "sig_MEAN_WORD_LEN_OOB":
+            not_null & ((mwl < cfg.param("MIN_MEAN_WORD_LEN"))
+                        | (mwl > cfg.param("MAX_MEAN_WORD_LEN"))),
+        "sig_SYMBOL_WORD_RATIO_HIGH":
+            not_null & (F.col("_m.symbol_ratio")
+                        > cfg.param("MAX_SYMBOL_WORD_RATIO")),
+        "sig_BULLET_LINES_HIGH":
+            not_null & (F.col("_m.bullet_ratio")
+                        > cfg.param("MAX_BULLET_LINE_RATIO")),
+        "sig_ELLIPSIS_LINES_HIGH":
+            not_null & (F.col("_m.ellipsis_ratio")
+                        > cfg.param("MAX_ELLIPSIS_LINE_RATIO")),
+        "sig_ALPHA_RATIO_LOW":
+            not_null & (F.col("_m.alpha_ratio")
+                        < cfg.param("MIN_ALPHA_WORD_RATIO")),
+        "sig_REQUIRED_STOPWORDS_MISSING":
+            not_null & (F.col("_m.req_hits")
+                        < cfg.param("MIN_REQUIRED_STOPWORDS")),
+        "sig_STOPWORD_DENSITY_LOW":
+            not_null & (F.col("_m.stop_density")
+                        < cfg.param("MIN_STOPWORD_DENSITY")),
+        "sig_TOXICITY_HIGH":
+            not_null & (F.col("_m.tox_density")
+                        > cfg.param("MAX_TOXICITY_DENSITY")),
+        "sig_CAPS_RATIO_HIGH":
+            not_null & (F.col("_m.caps_ratio")
+                        > cfg.param("MAX_CAPS_RATIO")),
+    }).drop("_m")

@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from qualityspark import constants as C
-from qualityspark.rules.heuristics import is_null_like, signal_columns
+from qualityspark.rules.heuristics import (NON_WS_CLASS, is_null_like,
+                                           repetition_3gram, signal_columns,
+                                           tokens_expr)
 from qualityspark.rules.udfs import with_model_columns
 from qualityspark.scoring import with_scores
 
@@ -39,13 +41,14 @@ def stream_pages(spark: SparkSession, input_dir: str) -> DataFrame:
 
 def stream_audit(pages: DataFrame, watermark: str = "1 hour",
                  dedup_urls: bool = True, cfg=None) -> DataFrame:
-    """Stateless signals + model pass + scoring on a stream; optional
-    state-bounded url dedup within the watermark.  ``cfg``: the same
-    RunConfig the batch path takes (thresholds / disabled rules /
-    overrides / business rules) — stateless expressions, so the streaming
-    reconfiguration is identical."""
+    """Stateless signals + model pass + scoring on a stream (the same
+    signal calls as pipeline.audit); optional state-bounded url dedup
+    within the watermark.  ``cfg``: the same RunConfig the batch path
+    takes (thresholds / disabled rules / overrides / business rules) —
+    stateless expressions, so the streaming reconfiguration is
+    identical."""
     from qualityspark.scoring import with_business_rules
-    df = signal_columns(pages, cfg=cfg)
+    df = signal_columns(pages)
     df = with_model_columns(df, cfg=cfg)
     df = with_business_rules(df, cfg=cfg)
     # streaming has no global keep-first; dup flags default false and exact
@@ -149,19 +152,24 @@ def stream_dedup_stateful(pages: DataFrame,
 def stream_metrics(pages: DataFrame, window: str = "1 hour",
                    watermark: str = "2 hours") -> DataFrame:
     """Watermarked windowed quality metrics (late data folded in until the
-    watermark passes)."""
+    watermark passes).
+
+    The one Python-free path: the token-derived rules it aggregates are
+    JVM expressions built here (word count == number of maximal non-WS
+    runs == len(textstats.tokenize); the interpreted 3-gram chain is
+    affordable on small windowed batches), equal to the Arrow pass's
+    textstats values (tests/test_streaming.py pins the counts)."""
     df = signal_columns(pages)
-    # sig_REPETITION_HIGH moved into the batch Arrow model pass in r7;
-    # this stateless metrics stream stays Python-free, so it computes the
-    # signal with the JVM expression the batch signal stage used before
-    # (identical semantics; this path aggregates small windowed batches,
-    # where the interpreted gram chain is affordable)
-    from qualityspark.rules.heuristics import repetition_3gram, tokens_expr
-    df = df.withColumn(
-        "sig_REPETITION_HIGH",
-        (~F.col("sig_TEXT_NULL_LIKE"))
-        & (repetition_3gram(tokens_expr(F.col("text")), F.col("_n_words"))
-           > C.MAX_REPETITION_3GRAM))
+    text = F.col("text")
+    n = F.regexp_count(F.coalesce(text, F.lit("")),
+                       F.lit(NON_WS_CLASS + "+"))
+    not_null = ~F.col("sig_TEXT_NULL_LIKE")
+    df = df.withColumns({
+        "sig_WORDS_TOO_FEW": not_null & (n < C.MIN_WORDS),
+        "sig_REPETITION_HIGH":
+            not_null & (repetition_3gram(tokens_expr(text), n)
+                        > C.MAX_REPETITION_3GRAM),
+    })
     aggs = [F.count(F.lit(1)).alias("n_docs")]
     for rule in ("TEXT_NULL_LIKE", "WORDS_TOO_FEW", "ENCODING_ANOMALY",
                  "WHITESPACE_UNSTRIPPED", "REPETITION_HIGH"):

@@ -1,14 +1,22 @@
 """Pure-Python per-document signal functions.
 
-These are the *definition* of every heuristic signal.  The Spark pipeline
-re-expresses each one as a native Column expression (rules/heuristics.py);
-``tests/test_parity.py`` asserts expression == this module for every synthetic
-document, so any Java-vs-Python semantic drift (regex dialect, split
-behaviour) is caught immediately.
+These are the *definition* of every heuristic signal, shared by the
+pure-Python oracle (``qualityspark.oracle``) and the pipeline:
+
+* the token/line-derived signals reach the pipeline ONLY through
+  ``signal_stats``, which the single Arrow pass calls per document
+  (rules/udfs.py) — one implementation, so oracle parity is structural;
+  ``tests/test_r7_fixes.py`` pins ``signal_stats`` equal to the individual
+  functions below;
+* the whole-string signals (null-like, control chars, whitespace,
+  truncation, url) are re-expressed as JVM Column expressions in
+  rules/heuristics.py; ``tests/test_parity.py`` asserts the pipeline equals
+  the oracle for every synthetic document, so any Java-vs-Python semantic
+  drift (regex dialect, split behaviour) is caught immediately.
 
 Tokenization contract (must match Java regex semantics, where ``\\s`` is
 ASCII-only): tokens are maximal runs of non-ASCII-whitespace characters;
-ASCII whitespace = space, \\t, \\n, \\r, \\f, \\x0b.
+ASCII whitespace = ``constants.ASCII_WS`` (space, \\t, \\n, \\r, \\f, \\x0b).
 """
 
 from __future__ import annotations
@@ -18,9 +26,10 @@ import re
 
 from qualityspark import constants as C
 
-_WS_RE = re.compile(r"[ \t\n\r\f\x0b]+")
-_LWS_RE = re.compile(r"^[ \t\n\r\f\x0b]+")
-_RWS_RE = re.compile(r"[ \t\n\r\f\x0b]+$")
+_WS = "[" + C.ASCII_WS + "]"
+_WS_RE = re.compile(_WS + "+")
+_LWS_RE = re.compile("^" + _WS + "+")
+_RWS_RE = re.compile(_WS + "+$")
 _ALPHA_RE = re.compile(r"[A-Za-z]")
 _CONTROL_RE = re.compile(C.CONTROL_CHARS_RE)
 _URL_FULL_RE = re.compile(C.URL_RE)
@@ -39,6 +48,9 @@ def rstrip_ws(text: str) -> str:
     return _RWS_RE.sub("", text)
 
 
+# Splits on exactly the constants.ASCII_WS class: langmodel._norm and the
+# Arrow pass in rules/udfs.py build the langid normalization from these
+# tokens on that assumption (pinned by test_norm_from_shared_tokens).
 def tokenize(text: str) -> list[str]:
     if text is None:
         return []
@@ -187,9 +199,9 @@ _REQ_SETS = {lg: frozenset(ws) for lg, ws in C.REQUIRED_STOPWORDS.items()}
 #   consumes to the run's end (no WS in the tail class), so no second
 #   match can start inside the same run and no match can start in a
 #   letterless run.  Equal counts to the old bounded form
-#   [^WS]*[A-Za-z][^WS]* (and the JVM regexp_count form) without that
-#   pattern's quadratic prefix backtracking on letterless prefixes.
-_ALPHA_TOK_RE = re.compile(r"[A-Za-z][^ \t\n\r\f\x0b]*")
+#   [^WS]*[A-Za-z][^WS]* without that pattern's quadratic prefix
+#   backtracking on letterless prefixes.
+_ALPHA_TOK_RE = re.compile("[A-Za-z][^" + C.ASCII_WS + "]*")
 # - translate-with-deletion counts [A-Z] / [A-Za-z] codepoints in one
 #   C pass: identical to len(_ALPHA_RE.findall(...)) / isupper() counting
 #   because _ALPHA_RE is ASCII-only and ASCII uppercase == A-Z
@@ -201,9 +213,9 @@ _DEL_LETTERS = {**_DEL_UPPER, **{c: None for c in range(97, 123)}}
 _DEL_UPPER_B = bytes(range(65, 91))
 _DEL_LETTERS_B = _DEL_UPPER_B + bytes(range(97, 123))
 # - first non-WS char is a bullet iff lstrip_ws(l).startswith(bullets)
-_BULLET_RE = re.compile(r"^[ \t\n\r\f\x0b]*[•\-*]")
+_BULLET_RE = re.compile("^" + _WS + r"*[•\-*]")
 # - ends with .../… after trailing-WS strip iff this searches
-_ELLIPSIS_RE = re.compile(r"(\.\.\.|…)[ \t\n\r\f\x0b]*$")
+_ELLIPSIS_RE = re.compile(r"(\.\.\.|…)" + _WS + "*$")
 
 
 def signal_stats(text: str | None, lang: str | None,

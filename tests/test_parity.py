@@ -3,6 +3,8 @@ oracle exactly — keep/drop decision (F1 target >= 0.99; we assert equality),
 fired rules, score, grade, and byte-identical scrubbed text per url
 (BASELINE.json metric + input_hint)."""
 
+import pytest
+
 from qualityspark.pipeline import audit
 
 
@@ -55,3 +57,36 @@ def test_partitioning_invariance(spark):
     kb = sorted((r["url"] or "", str(r["warc_ts"]), r["score"], r["keep"])
                 for r in b)
     assert ka == kb
+
+
+def test_one_column_per_signal(spark):
+    """Each doc rule has exactly one implementing column: the whole-string
+    JVM signals, the Arrow-pass signals and the dedup flags are disjoint
+    and together cover resolve(None).doc_rules().  Schemas only — no
+    Spark action runs."""
+    from pyspark.sql import functions as F
+    from qualityspark import synth
+    from qualityspark.config import resolve
+    from qualityspark.rules.dedup import with_dedup_flags
+    from qualityspark.rules.heuristics import signal_columns
+    from qualityspark.rules.udfs import with_model_columns
+
+    pages = synth.pages_df(spark, 10, partitions=1)
+
+    def added(before, after):
+        return {c[4:] for c in set(after.columns) - set(before.columns)
+                if c.startswith("sig_")}
+
+    jvm = added(pages, signal_columns(pages))
+    # with_model_columns reads sig_TEXT_NULL_LIKE: give it only that one
+    base = pages.withColumn("sig_TEXT_NULL_LIKE", F.lit(False))
+    model = added(base, with_model_columns(base))
+    dedup = added(pages, with_dedup_flags(pages))
+    assert not jvm & model and not jvm & dedup and not model & dedup
+    rules = {r for r, _ in resolve(None).doc_rules()}
+    assert jvm | model | dedup == rules
+
+    with pytest.raises(ValueError):
+        signal_columns(pages, model_signals=False)
+    with pytest.raises(ValueError):
+        with_model_columns(base, signals_from_model=False)

@@ -19,7 +19,8 @@ def test_stream_audit_matches_stateless_batch(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 300
 
-    # scores match the batch pipeline when dedup flags are neutralized
+    # scores and fired rules match the batch pipeline when dedup flags are
+    # neutralized
     from qualityspark.rules.heuristics import signal_columns
     from qualityspark.rules.udfs import with_model_columns
     from qualityspark.scoring import with_scores
@@ -28,10 +29,13 @@ def test_stream_audit_matches_stateless_batch(spark, tmp_path):
     b = (b.withColumn("sig_TEXT_EXACT_DUPLICATE", F.lit(False))
          .withColumn("sig_URL_DUPLICATE", F.lit(False)))
     b = with_scores(b)
-    want = {(r["url"], str(r["warc_ts"])): float(r["score"])
-            for r in b.select("url", "warc_ts", "score").collect()}
-    for r in got.select("url", "warc_ts", "score").collect():
-        assert want[(r["url"], str(r["warc_ts"]))] == float(r["score"])
+    cols = ("url", "warc_ts", "score", "rules_fired")
+    want = {(r["url"], str(r["warc_ts"])):
+            (float(r["score"]), sorted(r["rules_fired"]))
+            for r in b.select(*cols).collect()}
+    for r in got.select(*cols).collect():
+        assert want[(r["url"], str(r["warc_ts"]))] == (
+            float(r["score"]), sorted(r["rules_fired"]))
 
 
 def test_stream_checkpoint_resume(spark, tmp_path):
@@ -82,6 +86,53 @@ def test_stream_windowed_metrics(spark, tmp_path):
                    if r["warc_ts"] is not None)
     assert total == expected
     assert "n_TEXT_NULL_LIKE" in m.columns
+
+
+def test_stream_metrics_match_textstats(spark):
+    """stream_metrics' JVM word-count, whitespace, control-char and 3-gram
+    expressions agree with the textstats definitions.  Run on a batch
+    frame (withWatermark is a no-op there); null-ts rows get no window.
+    The synthetic corpus has no document near the word-count threshold,
+    so a few edge documents cover it and non-space token boundaries."""
+    import datetime as dt
+    from qualityspark import constants as C
+    from qualityspark import textstats as T
+    n = 600
+    edge_texts = [
+        " ".join(["w"] * (C.MIN_WORDS - 1)),
+        "\n".join(f"w{i}" for i in range(C.MIN_WORDS)),
+        "\t".join(["a", "b", "c"] * 20),
+        # 60 distinct casings of one word: repeated only case-insensitively
+        " ".join("".join(c.upper() if k >> b & 1 else c
+                         for b, c in enumerate("abcdef"))
+                 for k in range(60)),
+        "\x0blead vertical tab", "ctrl\x01char", "trailing ws \x0c",
+    ]
+    edge = [{"url": f"https://edge.example.org/{i}",
+             "warc_ts": dt.datetime(2023, 1, 1), "html": bytearray(b"<p>"),
+             "text": t, "lang": "en"} for i, t in enumerate(edge_texts)]
+    pages = synth.pages_df(spark, n, partitions=3).unionByName(
+        spark.createDataFrame(edge, synth.PAGES_DDL))
+    m = stream_metrics(pages, window="36500 days")
+    got = m.agg(*[F.sum(c).alias(c) for c in m.columns
+                  if c.startswith("n_")]).first().asDict()
+
+    want = dict.fromkeys(got, 0)
+    for r in list(synth.page_rows(n)) + edge:
+        if r["warc_ts"] is None:
+            continue
+        t = r["text"]
+        null = T.is_null_like(t)
+        want["n_docs"] += 1
+        want["n_TEXT_NULL_LIKE"] += null
+        want["n_ENCODING_ANOMALY"] += T.has_control_chars(t)
+        if not null:
+            want["n_WORDS_TOO_FEW"] += T.word_count(t) < C.MIN_WORDS
+            want["n_WHITESPACE_UNSTRIPPED"] += T.has_unstripped_whitespace(t)
+            want["n_REPETITION_HIGH"] += (T.repetition_3gram(t)
+                                          > C.MAX_REPETITION_3GRAM)
+    assert got == want
+    assert all(want[k] > 0 for k in want), want
 
 
 def test_stream_stateful_dedup_across_batches(spark, tmp_path):
