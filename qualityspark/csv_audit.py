@@ -5,16 +5,23 @@ score columns -> dataset score -> report.
 
 Execution shape (the whole point of the re-staging): the reference runs a
 pandas function per (column, check).  Here the number of Spark JOBS is
-bounded regardless of column count:
+bounded by the check families, not by the column count.  Every
+per-column family runs on the MELTED frame — the columns unpivoted to
+(column, value) rows with explode(create_map(...)) — and aggregates with
+ONE groupBy(column), so the plan stays a handful of fields wide at any
+width and every expression stays inside whole-stage codegen:
 
-  pass A  — ONE aggregation job: every column's null/whitespace/distinct/
-            pattern-match/numeric-moment/percentile/Benford-digit/date
-            statistics side by side (Catalyst computes them in one scan);
-  pass B  — ONE aggregation job for outlier counts (needs pass A's
-            quantile/moment literals);
-  + one groupBy-all-columns job for exact duplicate rows;
-  + one tiny groupBy per CATEGORICAL column (value counts for rare /
-    case-inconsistency — cardinality-bounded by definition).
+  pass A  — one groupBy(column) job: every column's null/whitespace/
+            distinct/pattern-match/numeric-moment/percentile/Benford-digit/
+            date statistics (plus one tiny agg for the global literals);
+  pass B  — one groupBy(column) job for outlier counts, MAD and per-half
+            moments (pass A's literals broadcast-joined onto the rows);
+  pass C  — one job for modified-Z counts and Levene moments (pass B's
+            literals);
+  + one groupBy over a row hash for exact duplicate rows;
+  + a fixed handful of jobs shared by ALL categorical columns (value
+    counts for rare / case / imbalance / typo checks, bounded driver
+    collects), and likewise for all date columns and all id columns.
 
 Severity ladders mirror the reference where published:
   NULL_RATE      -> constants.THRESHOLDS_NULL (universal_checks.py:13)
@@ -91,61 +98,9 @@ def _samp(st, key):
     return vals[:1] if len(vals) == 2 and vals[0] == vals[1] else vals
 
 
-def _pass_a_prep(tv, types):
-    """Project the expensive per-row signals ONCE under the stats agg.
-
-    Pass A's percentile sketches force the physical agg onto the
-    ObjectHashAggregate path, which has no whole-stage codegen and no
-    common-subexpression elimination — an expression embedded in N
-    aggregate functions is re-evaluated N times per row, interpreted.
-    The date-format ladder (11 try_to_timestamp) appears in 2 aggs per
-    ladder entry (22 instances) and the Benford scientific-notation
-    digit in 9: measured 12.5x slower than aggregating over a projected
-    helper column at 300k rows.  The Project below the agg IS
-    whole-stage-codegen'd and evaluates each signal exactly once.
-
-    Returns (projected_frame, {(col, key): helper_column_name})."""
-    helpers, names = [], {}
-    taken = set(tv.columns)
-
-    def add(col, key, expr):
-        h = f"__qsa_{key}_{len(helpers)}"
-        while h in taken:
-            h += "_"
-        taken.add(h)
-        names[(col, key)] = h
-        helpers.append(expr.alias(h))
-
-    for col, t in types.items():
-        c = F.col(f"`{col}`")
-        s = F.trim(c)
-        add(col, "nl", c.isNull() | s.rlike(
-            "^(?iu:" + "|".join(_re.escape(w)
-                                for w in sorted(C.NULL_LIKE) if w)
-            + ")?$"))
-        add(col, "ws", c.isNotNull() & (c != s) & (s != ""))
-        if t in _NUMERIC:
-            v = F.col(f"`{col}_typed`")
-            # first SIGNIFICANT digit via scientific notation — the
-            # reference definition (benford_check.py:31 f"{x:.10e}"[0]):
-            # |v| in (0,1) is INCLUDED (0.0042 -> 4), zeros excluded,
-            # and rounding happens at 10 significant digits
-            # (9.99999999999 -> 1.0000000000e+01 -> digit 1, matching
-            # Python's round-trip).  NULL outside the nonzero domain.
-            add(col, "bfd", F.when(
-                v.isNotNull() & (F.abs(v) > 0),
-                F.substring(F.format_string("%.10e", F.abs(v)), 1, 1)))
-        elif t in _DATES:
-            # DATE_FORMAT_MIX ladder index — the FIRST parsing ladder
-            # entry, the reference's _parse_date walk
-            # (checks/date_checks.py:69-107)
-            add(col, "fmt", masks.date_format_index(c, _FMT_LADDER))
-    return tv.select("*", *helpers), names
-
-
 def _melted_frame(tv, types, data_cols):
     """(k, pos, c raw-string, dv typed-double, tv typed-timestamp) — the
-    unpivoted view behind the wide-table strategy (see _pass_a_melted).
+    unpivoted view pass A aggregates (see _pass_a_melted).
     Map-explode keeps NULL values, so every column contributes exactly
     n_rows pairs (same idiom as csv_breadth._unpivot)."""
     from qualityspark.sources import quoted_col
@@ -166,23 +121,34 @@ def _melted_frame(tv, types, data_cols):
 
 
 def _pass_a_melted(tv, types, data_cols, date_axis):
-    """Pass A for WIDE tables: the same statistics as _pass_a_aggs, from
-    the melted frame.
+    """Pass A: every column's statistics as one {"<col>::<key>": value}
+    dict, plus the global literals "::n_rows", "::mid_pos" and (with a
+    date axis) "::date_q".
 
-    Past typeinfer.WIDE_COLS_THRESHOLD columns the wide single-agg plan
-    (25-40 expressions PER COLUMN) exceeds the whole-stage-codegen field
-    limit; janino then fails outright on the generated class and Spark
-    evaluates every expression interpreted — measured 244 s for pass A
-    alone at 300 cols x 20k rows.  Here every derived signal (null-like
-    mask, whitespace mask, the guarded 11-format date ladder, the
-    Benford %.10e digit) is ONE codegen'd expression instance over the
-    narrow exploded frame, the groupBy(k) carries a fixed ~60 partial
-    aggregates per (column, task) regardless of width, and the
-    type-specific statistics are computed uniformly but assembled
-    per-type driver-side so the returned dict has exactly the wide
-    path's keys (equality pinned by test_r6_perf.py).  Global literals
-    (n_rows, mid_pos, date_q) come from one 3-expression agg on the
-    unmelted frame."""
+    Every derived signal (null-like mask, whitespace mask, the guarded
+    11-format date ladder, the Benford %.10e digit) is ONE expression
+    instance projected beneath the groupBy(k).  The percentile sketches
+    put the aggregate on the ObjectHashAggregate path, which has neither
+    codegen nor common-subexpression elimination, so a signal embedded
+    in N aggregates would be re-evaluated N times per row, interpreted.
+    The groupBy(k) carries a fixed ~60 partial aggregates per (column,
+    task) regardless of width.  The statistics are computed uniformly and
+    assembled per type driver-side, so each column gets exactly the keys
+    its type's checks read.  The global literals come from one
+    3-expression agg on the unmelted frame."""
+    # global literals: one tiny agg on the unmelted frame.  The
+    # file-position median splits the half-vs-half hypothesis family
+    # (csv_breadth module doc); the axis Q1/Q3 bound TEMPORAL_DRIFT's KS
+    gl = [F.count(F.lit(1)).alias("::n_rows"),
+          F.percentile_approx("_pos", 0.5, 10000).alias("::mid_pos")]
+    if date_axis is not None:
+        axis_ts = F.col(f"`{date_axis}_typed`").cast("timestamp")
+        gl.append(F.percentile_approx(
+            axis_ts.cast("double"), [0.25, 0.75], 10000).alias("::date_q"))
+    row = tv.agg(*gl).first().asDict()
+    if not data_cols:
+        # create_map() over no columns has no value type to unpivot
+        return row
     u = _melted_frame(tv, types, data_cols)
     c, dv, tvc = F.col("c"), F.col("dv"), F.col("tv")
     s = F.trim(c)
@@ -192,7 +158,14 @@ def _pass_a_melted(tv, types, data_cols, date_axis):
         "^(?iu:" + "|".join(_re.escape(w)
                             for w in sorted(C.NULL_LIKE) if w) + ")?$")
     ws = c.isNotNull() & (c != s) & (s != "")
+    # DATE_FORMAT_MIX: the FIRST parsing ladder entry, the reference's
+    # _parse_date walk (checks/date_checks.py:69-107)
     fmt = masks.date_format_index(c, _FMT_LADDER)
+    # first SIGNIFICANT digit via scientific notation — the reference
+    # definition (benford_check.py:31 f"{x:.10e}"[0]): |v| in (0,1) is
+    # included (0.0042 -> 4), zeros are excluded, and rounding happens
+    # at 10 significant digits (9.99999999999 -> 1.0000000000e+01 ->
+    # digit 1).  NULL outside the nonzero domain.
     digit = F.when(dv.isNotNull() & (F.abs(dv) > 0),
                    F.substring(F.format_string("%.10e", F.abs(dv)), 1, 1))
     proj = u.select(
@@ -232,6 +205,7 @@ def _pass_a_melted(tv, types, data_cols, date_axis):
         F.stddev(dv).alias("std"),
         F.skewness(dv).alias("skew"),
         F.kurtosis(dv).alias("kurt"),
+        # p0.1/p99.9 feed VALUE_RANGE, the median OUTLIER_MODIFIED_Z
         F.percentile_approx(dv, [0.001, 0.25, 0.5, 0.75, 0.999],
                             10000).alias("q"),
         # date family
@@ -255,32 +229,29 @@ def _pass_a_melted(tv, types, data_cols, date_axis):
         F.approx_count_distinct(F.lower(val)).alias("n_unique_ci"),
     ]
     for d in range(1, 10):
+        # coalesce: an all-NULL or all-zero column counts 0, not None
         aggs.append(F.coalesce(F.sum((digit == str(d)).cast("long")),
                                F.lit(0)).alias(f"bf{d}"))
     for i in range(len(_FMT_LADDER)):
         aggs += [F.sum((fmt == i).cast("long")).alias(f"fmt{i}"),
                  F.min(F.when(fmt == i, s)).alias(f"fmt_s{i}")]
     if id_cols:
-        # exact distinct only where phantom-duplicate error is not
-        # tolerable; null outside id groups so nothing else pays for it
+        # exact distinct only for id columns, where an approx count would
+        # fire phantom ID_DUPLICATES at HLL error rates; null outside id
+        # groups so nothing else pays for it
         aggs.append(F.countDistinct(
             F.when(F.col("k").isin(*id_cols), val))
             .alias("n_unique_exact"))
     by_col = {r["k"]: r.asDict()
               for r in proj.groupBy("k").agg(*aggs).collect()}
 
-    # global literals: one tiny agg on the unmelted frame
-    gl = [F.count(F.lit(1)).alias("::n_rows"),
-          F.percentile_approx("_pos", 0.5, 10000).alias("::mid_pos")]
-    if date_axis is not None:
-        axis_ts = F.col(f"`{date_axis}_typed`").cast("timestamp")
-        gl.append(F.percentile_approx(
-            axis_ts.cast("double"), [0.25, 0.75], 10000).alias("::date_q"))
-    row = tv.agg(*gl).first().asDict()
-
-    # assemble EXACTLY the wide path's key set per type
+    # assemble the key set each type's checks read.  A zero-row frame
+    # yields no groups: read what a global aggregate over no rows gives
+    # (0 for the distinct counts and the coalesced digits, else NULL)
+    empty = {"n_unique": 0, "n_unique_ci": 0, "n_unique_exact": 0,
+             **{f"bf{d}": 0 for d in range(1, 10)}}
     for col, t in types.items():
-        r = by_col.get(col) or {}
+        r = by_col.get(col) or empty
 
         def put(key, src=None):
             row[f"{col}::{key}"] = r.get(src or key)
@@ -340,18 +311,19 @@ def _melted_numeric(tv, types, stats):
 def _lit_join(u, rows, schema):
     """Broadcast the per-column pass-A/B literals onto the melted frame:
     an O(1) hash probe per value where a per-column CASE chain would be
-    O(n_cols), interpreted.  NULL literals gate each aggregate exactly
-    like the wide plan's add-the-agg-only-if conditions — a NULL-gated
-    predicate sums to NULL, and the callers' is-not-None filter drops it
-    just as the absent wide-plan key would be."""
+    O(n_cols), interpreted.  A NULL literal gates its aggregate off: a
+    NULL-gated predicate sums to NULL, and the caller's is-not-None
+    filter drops the key, so a check whose literal is missing (no IQR,
+    zero std, ...) reads its absent-key default."""
     lit_df = u.sparkSession.createDataFrame(rows, schema)
     return u.join(F.broadcast(lit_df), "k")
 
 
 def _pass_b_melted(tv, types, stats, mid_pos):
-    """Pass B for WIDE tables — the same `{col}::key` dict the wide
-    single-agg plan produces (see _pass_a_melted's rationale and the
-    null-gating contract in _lit_join)."""
+    """Pass B: per numeric column the IQR / z-score / VALUE_RANGE outlier
+    counts, the MAD, and the per-half moments and medians of the
+    split-half hypothesis family, as a `{col}::key` dict (pass A's
+    literals joined per _lit_join; halves split at ``mid_pos``)."""
     u, num_cols = _melted_numeric(tv, types, stats)
     if u is None:
         return {}
@@ -402,8 +374,9 @@ def _pass_b_melted(tv, types, stats, mid_pos):
 
 
 def _pass_c_melted(tv, types, stats, outliers, mid_pos):
-    """Pass C for WIDE tables (modified-Z counts + Levene |x-median|
-    moments per half) — same contract as _pass_b_melted."""
+    """Pass C: modified-Z counts and the Levene |x-median| moments per
+    half, from pass B's MAD and half medians — same contract as
+    _pass_b_melted."""
     u, num_cols = _melted_numeric(tv, types, stats)
     if u is None:
         return {}
@@ -439,16 +412,23 @@ def _pass_c_melted(tv, types, stats, outliers, mid_pos):
 
 def _catstats_melted(raw, types, stats):
     """Every categorical/boolean column's value statistics in ~8 jobs
-    TOTAL (the per-column loop costs ~5 jobs PER COLUMN — ~600 driver
-    round-trips at 120 categorical columns): one melted
-    groupBy(col, value) counts frame, then per-column scalars via one
-    grouped aggregate, bounded samples via per-col row_number windows
-    (the window's (k; order) total order reproduces the loop's
-    orderBy+limit exactly), case-variant groups via groupBy(col,
-    lower(value)), and typo candidates via a per-col equi-self-join of
-    each column's top-200 repeated categories (the loop's crossJoin
-    becomes a broadcast hash join keyed on the column).  Output is the
-    same catstats dict, entry for entry."""
+    TOTAL, whatever the column count: one melted groupBy(col, value)
+    counts frame, then per-column scalars via one grouped aggregate,
+    bounded samples via per-col row_number windows (ties broken by the
+    value, so samples are deterministic), case-variant groups via
+    groupBy(col, lower(value)), and typo candidates via a broadcast
+    equi-self-join of each column's top-200 repeated categories.
+
+    Returns {col: {n_rare, rare, n_case_groups, case_samples, values,
+    breadth_checks}}.  Only capped samples leave the cluster: a
+    relative-cardinality CATEGORICAL column can carry ~100k distinct
+    values at 100-TB scale (the reference caps its value_counts the same
+    way, checks/categorical_checks.py:158-159).  CLASS_IMBALANCE (top
+    share >=.95 HIGH, >=.90 MEDIUM, categorical_checks.py:115-141),
+    CARDINALITY_CHANGE (informational, :196-211) and TYPO_CANDIDATES
+    (:144-193: normalized Levenshtein on lowercased values >= 0.85 — the
+    local substitute for rapidfuzz's InDel ratio — MEDIUM past 5 pairs)
+    ride in ``breadth_checks``."""
     from pyspark.sql import Window
     from qualityspark.sources import quoted_col
     cat_cols = [c for c, t in types.items()
@@ -571,10 +551,12 @@ def _catstats_melted(raw, types, stats):
 
 
 def _date_values_melted(tv, date_cols):
-    """date_value_pass for every date column in 3 jobs total: melted
-    groupBy(col, value) counts, one per-col summary aggregate, and ONE
-    bounded collect of the sorted distinct values for the columns under
-    the MAX_DATE_DISTINCT driver cap.  Returns {col: (summary, gap)}."""
+    """Distinct-date statistics for every date column in 3 jobs total:
+    melted groupBy(col, value) counts, one per-col summary aggregate, and
+    ONE bounded collect of the sorted distinct values for the columns
+    under the MAX_DATE_DISTINCT driver cap.  Returns {col: (summary,
+    gap)}: summary = {n_date_valid, n_date_distinct, n_dup_dates}, gap =
+    the DATE_SEQUENCE_GAPS check or None."""
     if not date_cols:
         return {}
     pairs = []
@@ -625,9 +607,11 @@ def _date_values_melted(tv, date_cols):
 
 
 def _id_formats_melted(raw, id_cols):
-    """id_format_check for every id column in 2 jobs: melted
-    groupBy(col, fingerprint) + one per-col summary, top-5 patterns via
-    a per-col window.  Returns {col: check | None}."""
+    """ID_FORMAT_CONSISTENCY (id_checks.py:41-98) for every id column in
+    2 jobs: melted groupBy(col, char-class fingerprint) + one per-col
+    summary, top-5 patterns via a per-col window.  The reference samples
+    1000 rows; this aggregates the FULL column.  Returns {col: check |
+    None}."""
     from pyspark.sql import Window
     from qualityspark.rules import masks as M
     from qualityspark.sources import quoted_col
@@ -678,122 +662,6 @@ def _id_formats_melted(raw, id_cols):
     return out
 
 
-def _pass_a_aggs(df, types, date_axis=None, names=None):
-    """Aggregate list for the single stats pass (see module docstring).
-    ``names`` maps (col, key) -> _pass_a_prep helper column."""
-    names = names or {}
-
-    def helper(col, key):
-        return F.col(f"`{names[(col, key)]}`")
-
-    aggs = [F.count(F.lit(1)).alias("::n_rows"),
-            # file-position median: the split point for the half-vs-half
-            # hypothesis family (csv_breadth module doc)
-            F.percentile_approx("_pos", 0.5, 10000).alias("::mid_pos")]
-    if date_axis is not None:
-        # temporal Q1/Q3 boundaries for TEMPORAL_DRIFT's KS pass
-        axis_ts = F.col(f"`{date_axis}_typed`").cast("timestamp")
-        aggs.append(F.percentile_approx(
-            axis_ts.cast("double"), [0.25, 0.75], 10000).alias("::date_q"))
-
-    def pair(col, key, pred, val):
-        # bounded offending-example pair (see _samp): min+max only
-        return [F.min(F.when(pred, val)).alias(f"{col}::s_{key}_min"),
-                F.max(F.when(pred, val)).alias(f"{col}::s_{key}_max")]
-
-    for col, t in types.items():
-        c = F.col(f"`{col}`")
-        s = F.trim(c)
-        ne = TI._nonempty(c)
-        raw = F.when(ne, s)
-        null_like = helper(col, "nl")
-        ws_pred = helper(col, "ws")
-        aggs += [
-            F.sum(null_like.cast("long")).alias(f"{col}::n_null"),
-            F.sum(ne.cast("long")).alias(f"{col}::nn"),
-            F.approx_count_distinct(raw).alias(f"{col}::n_unique"),
-            F.sum(ws_pred.cast("long")).alias(f"{col}::n_ws"),
-            F.min(raw).alias(f"{col}::s_any_min"),
-        ]
-        aggs += pair(col, "nullish", c.isNotNull() & null_like & (s != ""),
-                     s)
-        aggs += pair(col, "ws", ws_pred, c)
-        if t in _NUMERIC:
-            v = F.col(f"`{col}_typed`")
-            aggs += pair(col, "inv", ne & v.isNull(), s)
-            aggs += [
-                F.min(F.when(v < 0, v)).alias(f"{col}::s_neg_min"),
-                F.sum(v.isNotNull().cast("long")).alias(f"{col}::n_num"),
-                F.sum((ne & v.isNull()).cast("long"))
-                .alias(f"{col}::n_invalid"),
-                F.sum((v < 0).cast("long")).alias(f"{col}::n_neg"),
-                F.sum((v == 0).cast("long")).alias(f"{col}::n_zero"),
-                F.avg(v).alias(f"{col}::mean"),
-                F.stddev(v).alias(f"{col}::std"),
-                F.skewness(v).alias(f"{col}::skew"),
-                F.kurtosis(v).alias(f"{col}::kurt"),
-                # p0.1/p99.9 feed VALUE_RANGE, the median feeds
-                # OUTLIER_MODIFIED_Z (same single sketch pass)
-                F.percentile_approx(v, [0.001, 0.25, 0.5, 0.75, 0.999],
-                                    10000).alias(f"{col}::q"),
-            ]
-            # first significant digit: _pass_a_prep's "bfd" helper (NULL
-            # outside the nonzero domain, so the equality below is NULL
-            # there and sum() skips it — same counts as the r5 inline
-            # v.isNotNull() & (|v|>0) & (digit == d) conjunction)
-            first_digit = helper(col, "bfd")
-            for d in range(1, 10):
-                # coalesce: the r5 inline conjunction was never NULL, so
-                # an all-NULL/zero column must still count 0, not None
-                aggs.append(F.coalesce(
-                    F.sum((first_digit == str(d)).cast("long")),
-                    F.lit(0)).alias(f"{col}::bf{d}"))
-        elif t in _DATES:
-            v = F.col(f"`{col}_typed`").cast("timestamp")
-            as_of = F.lit(C.AS_OF_TS).cast("timestamp")
-            ancient = F.lit(C.ANCIENT_TS).cast("timestamp")
-            aggs += [
-                F.sum((ne & v.isNull()).cast("long"))
-                .alias(f"{col}::n_invalid"),
-                F.sum((v > as_of).cast("long")).alias(f"{col}::n_future"),
-                F.sum((v < ancient).cast("long"))
-                .alias(f"{col}::n_ancient"),
-                F.max(F.when(v > as_of, s)).alias(f"{col}::s_future_max"),
-                F.min(F.when(v < ancient, s))
-                .alias(f"{col}::s_ancient_min"),
-                F.min(v).alias(f"{col}::d_min"),
-                F.max(v).alias(f"{col}::d_max"),
-            ]
-            aggs += pair(col, "inv", ne & v.isNull(), s)
-            # DATE_FORMAT_MIX: count + one sample per ladder format —
-            # the index is _pass_a_prep's "fmt" helper (computed once)
-            fmt_idx = helper(col, "fmt")
-            for i in range(len(_FMT_LADDER)):
-                aggs += [
-                    F.sum((fmt_idx == i).cast("long"))
-                    .alias(f"{col}::fmt{i}"),
-                    F.min(F.when(fmt_idx == i, s))
-                    .alias(f"{col}::fmt_s{i}")]
-        elif t == TI.ID_CANDIDATE:
-            # EXACT distinct for id columns only: an approx count would
-            # fire phantom ID_DUPLICATES at HLL error rates; id columns
-            # are few, so the multi-distinct EXPAND stays bounded
-            aggs.append(F.countDistinct(raw)
-                        .alias(f"{col}::n_unique_exact"))
-        elif t == TI.EMAIL:
-            bad = ne & ~raw.rlike(TI.EMAIL_RE)
-            aggs.append(F.sum(bad.cast("long")).alias(f"{col}::n_invalid"))
-            aggs += pair(col, "inv", bad, s)
-        elif t == TI.PHONE:
-            bad = ne & ~raw.rlike(TI.PHONE_RE)
-            aggs.append(F.sum(bad.cast("long")).alias(f"{col}::n_invalid"))
-            aggs += pair(col, "inv", bad, s)
-        if t in (TI.CATEGORICAL, TI.BOOLEAN):
-            aggs.append(F.approx_count_distinct(F.lower(raw))
-                        .alias(f"{col}::n_unique_ci"))
-    return aggs
-
-
 # check value semantics for affected_count/affected_pct derivation: the
 # pct→count conversion is valid only for rate-valued checks.  Statistic-
 # valued checks (a skewness, a Benford MAD) are NOT row fractions — e.g.
@@ -833,8 +701,8 @@ def _affected(ch, n_rows):
 
 def _column_checks(col, t, st, outliers, catstats, cfg, breadth=None):
     """Check results for one column from the collected stats.  ``breadth``
-    carries the round-6 wide-audit inputs (csv_breadth results); None
-    keeps the narrow behavior for callers that only need the core stats."""
+    carries the round-6 breadth inputs (csv_breadth results); None runs
+    only the core stats checks."""
     n, nn = st["n_rows"], st["nn"]
     checks = []
     null_pct = st["n_null"] / n if n else 1.0
@@ -1178,8 +1046,8 @@ def audit_csv(spark: SparkSession, path: str, cfg=None,
 def _audit_frame(raw, tv, types, cfg, schema=None, date_col=None,
                  label="", data_cols=None, skipped_columns=None) -> dict:
     """Shared audit engine behind audit_csv and table_audit.audit_table:
-    runs passes A/B/C, the stacked breadth passes, the bounded
-    categorical/date/id per-type jobs, the dataset-level families, and
+    runs the melted passes A/B/C, the stacked breadth passes, the melted
+    categorical/date/id families, the dataset-level families, and
     assembles the report.  ``raw`` is the all-string frame (plus
     ``_pos``), ``tv`` is ``raw`` + ``<col>_typed`` columns, ``types``
     the semantic-type map — audit_csv derives all three from a CSV via
@@ -1194,8 +1062,6 @@ def _audit_frame(raw, tv, types, cfg, schema=None, date_col=None,
     from qualityspark.scoring import dataset_score
     from qualityspark.reports import build_recommendations
 
-    wide_strategy = len(data_cols) > TI.WIDE_COLS_THRESHOLD
-
     # ---- concurrent family submission (r7, guide §2.6): the audit's
     # wall-clock was dominated by ~30-100 SERIALIZED driver jobs, each
     # paying scheduler latency while 32 cores idled (measured: 110-col x
@@ -1203,23 +1069,12 @@ def _audit_frame(raw, tv, types, cfg, schema=None, date_col=None,
     # data dependency are submitted from a driver thread pool
     # (qualityspark.parallel): phase 0 = pass A plus everything that
     # needs only raw/tv/types; phase 1 = everything that needs pass A's
-    # statistics.  Each thunk is exactly the serial code it replaces and
-    # assembly waits for every future, so the report is byte-identical
-    # (pinned by test_r6_perf.py); QS_AUDIT_PARALLEL=0 restores serial
-    # submission. ----
+    # statistics.  Assembly waits for every future, so the report equals
+    # serial submission's (pinned by test_r7_fixes.py).  Every per-column
+    # family aggregates the melted frame (module docstring). ----
 
     def fam_pass_a():
-        # pass A: one stats job over every column.  Narrow tables use
-        # the wide single-agg plan (no shuffle; heavy per-row signals
-        # projected once beneath the agg — _pass_a_prep); past the
-        # codegen field cliff the melted plan computes the same
-        # statistics (_pass_a_melted)
-        if wide_strategy:
-            return _pass_a_melted(tv, types, data_cols, date_axis)
-        prep, helper_names = _pass_a_prep(tv, types)
-        return (prep.agg(*_pass_a_aggs(prep, types, date_axis,
-                                       helper_names))
-                .first().asDict())
+        return _pass_a_melted(tv, types, data_cols, date_axis)
 
     def fam_s1s2():
         # stacked breadth passes: each ONE job regardless of column count
@@ -1231,9 +1086,7 @@ def _audit_frame(raw, tv, types, cfg, schema=None, date_col=None,
         if not any("DATE_MONOTONICITY" in TI.checks_for_type(types[c])
                    for c in date_cols):
             return {}
-        fn = (B.monotonicity_melted if wide_strategy
-              else B.monotonicity_pass)
-        return fn(tv, date_cols)
+        return B.monotonicity_melted(tv, date_cols)
 
     def fam_ndup():
         # exact duplicate rows: one groupBy over a row HASH, not the row
@@ -1256,25 +1109,14 @@ def _audit_frame(raw, tv, types, cfg, schema=None, date_col=None,
         dv_cols = [col for col, t in types.items() if t in _DATES
                    and {"DATE_SEQUENCE_GAPS", "DATE_DUPLICATES"}
                    & set(TI.checks_for_type(t))]
-        if wide_strategy:
-            return _date_values_melted(tv, dv_cols)
-        return {col: B.date_value_pass(tv, col) for col in dv_cols}
+        return _date_values_melted(tv, dv_cols)
 
     def fam_idfmt():
-        # per-ID-column format-consistency (id columns are few — unless
-        # the table is wide, where the melted variant caps the job count)
         id_cols_sel = [col for col, t in types.items()
                        if t == TI.ID_CANDIDATE
                        and "ID_FORMAT_CONSISTENCY" in TI.checks_for_type(t)]
-        if wide_strategy:
-            return {col: ch for col, ch in
-                    _id_formats_melted(raw, id_cols_sel).items() if ch}
-        out = {}
-        for col in id_cols_sel:
-            ch = B.id_format_check(raw, col)
-            if ch:
-                out[col] = ch
-        return out
+        return {col: ch for col, ch in
+                _id_formats_melted(raw, id_cols_sel).items() if ch}
 
     from qualityspark.parallel import audit_pool, submit
     pool = audit_pool()
@@ -1304,80 +1146,16 @@ def _audit_frame(raw, tv, types, cfg, schema=None, date_col=None,
             st.setdefault(f"bf{d}", 0)
         stats[col] = st
 
-    # ---- pass B: one outlier job using pass-A literals (also: MAD,
-    # VALUE_RANGE counts, and the per-half moments for the split-half
-    # hypothesis family — csv_breadth module doc).  Wide tables take the
-    # melted plan (same statistics; see _pass_a_melted's rationale) ----
-    half1 = F.col("_pos") <= (mid_pos if mid_pos is not None else 0)
-    out_aggs = []
-    for col, t in () if wide_strategy else types.items():
-        st = stats[col]
-        if t not in _NUMERIC or not st.get("n_num"):
-            continue
-        v = F.col(f"`{col}_typed`")
-        q1, q3 = st["q1"], st["q3"]
-        if q1 is not None and q3 is not None and q3 > q1:
-            iqr = q3 - q1
-            out_aggs.append(F.sum(((v < q1 - 1.5 * iqr)
-                                   | (v > q3 + 1.5 * iqr)).cast("long"))
-                            .alias(f"{col}::iqr"))
-        mean, std = st.get("mean"), st.get("std")
-        if mean is not None and std:
-            out_aggs.append(F.sum((F.abs((v - mean) / std) > 3)
-                                  .cast("long"))
-                            .alias(f"{col}::z"))
-        med = st.get("med")
-        if med is not None:
-            out_aggs.append(F.percentile_approx(F.abs(v - med), 0.5, 10000)
-                            .alias(f"{col}::mad"))
-        p001, p999 = st.get("p001"), st.get("p999")
-        if p001 is not None and p999 is not None:
-            vr = (v < p001) | (v > p999)
-            out_aggs += [
-                F.sum(vr.cast("long")).alias(f"{col}::vr"),
-                F.min(F.when(vr, v)).alias(f"{col}::s_vr_min"),
-                F.max(F.when(vr, v)).alias(f"{col}::s_vr_max")]
-        for tag, pred in (("h1", half1), ("h2", ~half1)):
-            hv = F.when(pred, v)
-            out_aggs += [
-                F.count(hv).alias(f"{col}::{tag}_n"),
-                F.avg(hv).alias(f"{col}::{tag}_mean"),
-                F.var_samp(hv).alias(f"{col}::{tag}_var"),
-                F.skewness(hv).alias(f"{col}::{tag}_skew"),
-                F.kurtosis(hv).alias(f"{col}::{tag}_kurt"),
-                F.percentile_approx(hv, 0.5, 10000)
-                .alias(f"{col}::{tag}_med")]
     def fam_bc():
-        outliers = (_pass_b_melted(tv, types, stats, mid_pos)
-                    if wide_strategy else
-                    (tv.agg(*out_aggs).first().asDict() if out_aggs
-                     else {}))
-        outliers = {k: v for k, v in outliers.items() if v is not None}
-
-        # pass C: one job for checks needing pass-B literals
-        c_aggs = []
-        for col, t in () if wide_strategy else types.items():
-            st = stats[col]
-            if t not in _NUMERIC or not st.get("n_num"):
-                continue
-            v = F.col(f"`{col}_typed`")
-            med, mad = st.get("med"), outliers.get(f"{col}::mad")
-            if med is not None and mad:
-                modz = F.abs(0.6745 * (v - med) / mad) > 3.5
-                c_aggs += [
-                    F.sum(modz.cast("long")).alias(f"{col}::modz"),
-                    F.min(F.when(modz, v)).alias(f"{col}::s_modz_min"),
-                    F.max(F.when(modz, v)).alias(f"{col}::s_modz_max")]
-            for tag, pred in (("h1", half1), ("h2", ~half1)):
-                hmed = outliers.get(f"{col}::{tag}_med")
-                if hmed is not None:
-                    z = F.when(pred, F.abs(v - hmed))
-                    c_aggs += [F.avg(z).alias(f"{col}::{tag}_zmean"),
-                               F.var_samp(z).alias(f"{col}::{tag}_zvar")]
-        passc = (_pass_c_melted(tv, types, stats, outliers, mid_pos)
-                 if wide_strategy else
-                 (tv.agg(*c_aggs).first().asDict() if c_aggs else {}))
-        passc = {k: v for k, v in passc.items() if v is not None}
+        # pass B (outliers, MAD, VALUE_RANGE, per-half moments for the
+        # split-half hypothesis family — csv_breadth module doc), then
+        # pass C from pass B's literals
+        outliers = {k: v for k, v in
+                    _pass_b_melted(tv, types, stats, mid_pos).items()
+                    if v is not None}
+        passc = {k: v for k, v in
+                 _pass_c_melted(tv, types, stats, outliers, mid_pos).items()
+                 if v is not None}
         return outliers, passc
 
     def fam_ks():
@@ -1386,61 +1164,7 @@ def _audit_frame(raw, tv, types, cfg, schema=None, date_col=None,
             tuple(date_q) if date_q and date_q[0] is not None else None)
 
     def fam_cats():
-        # per-categorical value stats: Spark-side aggregates, BOUNDED
-        # driver collects.  A relative-cardinality CATEGORICAL column can
-        # carry ~100k distinct values at 100-TB scale, so collecting
-        # every (value, count) row would blow the driver; instead n_rare
-        # and n_case_groups are Spark aggregates over the cached counts
-        # frame and only capped deterministic samples come back (the
-        # reference caps its value_counts the same way,
-        # checks/categorical_checks.py:158-159).  Sample orderings
-        # replicate the old sorted()-then-slice exactly, so
-        # low-cardinality reports are byte-identical
-        if wide_strategy:
-            return _catstats_melted(raw, types, stats)
-        catstats = {}
-        for col, t in types.items():
-            if t not in (TI.CATEGORICAL, TI.BOOLEAN):
-                continue
-            qc = F.col("`" + col.replace("`", "``") + "`")
-            counts = (raw.filter(TI._nonempty(qc))
-                      .groupBy(F.trim(qc).alias("v"))
-                      .agg(F.count(F.lit(1)).alias("n")).persist())
-            try:
-                total = stats[col]["nn"] or 1
-                is_rare = (F.col("n") / total) < 0.005
-                n_rare = int(counts.agg(
-                    F.coalesce(F.sum(is_rare.cast("long")),
-                               F.lit(0))).first()[0])
-                rare = ([r["v"] for r in counts.filter(is_rare)
-                         .orderBy("v").limit(_CAT_SAMPLE_CAP).collect()]
-                        if n_rare else [])
-                # case-variant groups: lower(v) buckets with >1 distinct
-                # casing; a group's variant set is bounded by real
-                # casings, not rows
-                grp = (counts.groupBy(F.lower(F.col("v")).alias("lv"))
-                       .agg(F.countDistinct("v").alias("nv"),
-                            F.sort_array(F.collect_set("v"))
-                            .alias("variants"))
-                       .filter(F.col("nv") > 1))
-                n_case = grp.count()
-                case_samples = ([list(r["variants"]) for r in
-                                 grp.orderBy(F.col("variants")[0])
-                                 .limit(_CAT_SAMPLE_CAP).collect()]
-                                if n_case else [])
-                values = [r["v"] for r in
-                          counts.orderBy("v")
-                          .limit(_CAT_VALUES_CAP).collect()]
-                breadth_checks = B.categorical_breadth(
-                    counts, stats[col]["nn"], TI.checks_for_type(t))
-            finally:
-                counts.unpersist()
-            catstats[col] = {"n_rare": n_rare, "rare": rare,
-                             "n_case_groups": n_case,
-                             "case_samples": case_samples,
-                             "values": values,
-                             "breadth_checks": breadth_checks}
-        return catstats
+        return _catstats_melted(raw, types, stats)
 
     def fam_chi2():
         return B.chi2_pair_pass(raw, types, stats)

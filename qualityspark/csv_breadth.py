@@ -5,31 +5,34 @@ families (cross-column, null patterns, PII, temporal).
 
 Reference semantics per check are cited inline (checks/*.py of the
 reference repo).  Execution shape — the job count stays O(1) in COLUMN
-WIDTH; only column-TYPE-bounded families (categorical pairs, id columns,
-date columns) add small per-column jobs, mirroring what csv_audit already
-does for categorical value counts:
+WIDTH: each per-column family unpivots the columns it reads to (col,
+value) rows (explode(create_map(...))) and aggregates with one groupBy
+keyed on the column, so the plan stays a few fields wide at any width
+and never meets the codegen maxFields cliff a 1000-column single
+aggregate would hit.  The same shape runs csv_audit's passes A/B/C and
+its categorical / date-value / id-format families:
 
   stacked pass S1 — ONE job: every string column unpivoted to (col, value)
       rows, then one hash-aggregate per column computing the shared mask
       counts (null-like / encoding / ellipsis / 8 PII patterns) + length
-      quantiles.  Unpivoting sidesteps the wide-aggregate codegen cliff a
-      1000-column table would hit if these were folded into pass A.
+      quantiles.
   stacked pass S2 — ONE job: the masks that need S1 literals (truncation
       at max length, length-IQR outliers), literals shipped as a
       broadcast-safe CASE map.
-  pass C        — ONE job: numeric checks needing pass-B literals
-      (modified-Z counts from MAD, Levene |x-median| moments per half).
   KS pass       — ONE job: every numeric column's z-score bucketed
       (width 0.02σ, clamped ±8σ) in one unpivot + groupBy; the driver
       finishes D and the Kolmogorov p from the bounded histogram.  When a
       date axis exists the same job also tags temporal Q1/Q4 rows so
       TEMPORAL_DRIFT's KS-2-sample rides the same scan.
-  cross-column  — ONE job: Pearson pairs, point-biserial, null-indicator
-      correlations, MCAR conditional moments, null-row-pattern count, all
-      as aggregate expressions (pair caps documented per check).
-  temporal pass — ONE groupBy(period) job: per-period null rates + numeric
-      means; ACF/seasonality/CUSUM finish driver-side on the bounded
-      per-period series.
+  monotonicity  — ONE job: a prev-value window partitioned by (column,
+      spark partition); partition boundaries are walked driver-side.
+  cross-column  — pair aggregates (Pearson pairs, point-biserial,
+      null-indicator correlations, MCAR conditional moments,
+      null-row-pattern count) in a few concurrently submitted slices
+      (pair caps documented per check).
+  temporal pass — ONE groupBy(period, column) job: per-period null rates +
+      numeric means; ACF/seasonality/CUSUM finish driver-side on the
+      bounded per-period series.
 
 Deliberate deviations from the reference, each documented at the check:
   * MEAN_SHIFT's non-parametric branch (Mann-Whitney) and MCAR's
@@ -295,8 +298,8 @@ def pii_dataset_checks(s1: dict[str, dict], n_rows: int) -> list[dict]:
 
 def numeric_breadth_checks(col, st, outliers, passc, selected) -> list:
     """VALUE_RANGE / OUTLIER_MODIFIED_Z / DISTRIBUTION_KURTOSIS /
-    VARIANCE_SUDDEN_CHANGE / MEAN_SHIFT / VARIANCE_SHIFT from the wide
-    pass B/C aggregates."""
+    VARIANCE_SUDDEN_CHANGE / MEAN_SHIFT / VARIANCE_SHIFT from the pass
+    B/C aggregates."""
     checks = []
     n_num = st.get("n_num") or 0
     if not n_num:
@@ -560,39 +563,6 @@ def date_format_checks(col, st, selected) -> list[dict]:
     return checks
 
 
-def date_value_pass(tv: DataFrame, col: str):
-    """Distinct-date stats for one date column: returns
-    ({n_date_valid, n_date_distinct, n_dup_dates}, gap_check | None).
-    One persisted groupBy per date column (date columns are few, same
-    budget as the categorical value-count loop)."""
-    v = F.col(f"`{col}_typed`").cast("timestamp")
-    g = (tv.filter(v.isNotNull())
-         .groupBy(v.alias("d")).agg(F.count(F.lit(1)).alias("n"))
-         .persist())
-    try:
-        s = g.agg(
-            F.count(F.lit(1)).alias("nd"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("nv"),
-            F.coalesce(F.sum(F.when(F.col("n") > 1, F.col("n"))),
-                       F.lit(0)).alias("ndup")).first()
-        summary = {"n_date_valid": int(s["nv"]),
-                   "n_date_distinct": int(s["nd"]),
-                   "n_dup_dates": int(s["ndup"])}
-        gap = None
-        if s["nv"] >= 10:
-            if s["nd"] > MAX_DATE_DISTINCT:
-                gap = _check(
-                    "DATE_SEQUENCE_GAPS", "INFO", 0.0,
-                    f"skipped: {s['nd']} distinct timestamps exceed the "
-                    f"{MAX_DATE_DISTINCT} driver cap",
-                    passed_ok=("PASS", "INFO"))
-            else:
-                gap = _gap_check_from_rows(g.orderBy("d").collect())
-    finally:
-        g.unpersist()
-    return summary, gap
-
-
 def _gap_check_from_rows(rows) -> dict | None:
     """DATE_SEQUENCE_GAPS (date_checks.py:168-213): diffs of the SORTED
     raw values — each duplicate contributes a zero diff, so the median
@@ -629,12 +599,14 @@ def _gap_check_from_rows(rows) -> dict | None:
 
 
 def monotonicity_melted(tv: DataFrame, date_cols: list[str]) -> dict:
-    """monotonicity_pass for WIDE tables: the wide variant builds two
-    window columns PER date column (120 window functions at 60 columns,
-    measured 29 s); melting moves the column into the window key —
-    partitionBy(col, partition_id) — so the plan has ONE prev-value
-    window regardless of width.  Same per-partition violation counts,
-    same driver-side boundary walk, same checks."""
+    """DATE_MONOTONICITY (date_checks.py:248-275) for every date column in
+    ONE job.  Melting moves the column into the window key —
+    partitionBy(col, spark_partition_id) — so the plan has ONE prev-value
+    window regardless of width (two window columns per date column
+    measured 29 s at 60 columns) and never a single-partition sort.
+    Within-partition violations are counted by the window; the
+    cross-partition boundaries are checked driver-side over the bounded
+    per-partition (first, last) list."""
     if not date_cols:
         return {}
     pairs = []
@@ -685,170 +657,6 @@ def monotonicity_melted(tv: DataFrame, date_cols: list[str]) -> dict:
                               "date column is not sorted",
                               passed_ok=("PASS", "INFO"))
     return out
-
-
-def monotonicity_pass(tv: DataFrame, date_cols: list[str]) -> dict:
-    """DATE_MONOTONICITY (date_checks.py:248-275) for every date column in
-    ONE job: within-partition violations via a window PARTITIONED BY
-    spark_partition_id (parallel — never a single-partition sort) plus a
-    driver-side check of the bounded per-partition boundary list."""
-    if not date_cols:
-        return {}
-    pid = F.spark_partition_id().alias("_pid")
-    sel = [pid, F.col("_pos")]
-    for col in date_cols:
-        sel.append(F.col(f"`{col}_typed`").cast("timestamp")
-                   .alias(f"_d_{col}"))
-    d = tv.select(*sel)
-    w = (Window.partitionBy("_pid").orderBy("_pos")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    aggs = [F.min("_pos").alias("min_pos")]
-    for col in date_cols:
-        c = F.col(f"_d_{col}")
-        prev = F.last(c, ignorenulls=True).over(w)
-        d = d.withColumn(f"_incr_{col}",
-                         (c.isNotNull() & prev.isNotNull()
-                          & (c < prev)).cast("long"))
-        d = d.withColumn(f"_decr_{col}",
-                         (c.isNotNull() & prev.isNotNull()
-                          & (c > prev)).cast("long"))
-        aggs += [F.sum(f"_incr_{col}").alias(f"iv_{col}"),
-                 F.sum(f"_decr_{col}").alias(f"dv_{col}"),
-                 F.min_by(c, F.when(c.isNotNull(), F.col("_pos")))
-                 .alias(f"first_{col}"),
-                 F.max_by(c, F.when(c.isNotNull(), F.col("_pos")))
-                 .alias(f"last_{col}"),
-                 F.min(c).alias(f"min_{col}"),
-                 F.max(c).alias(f"max_{col}")]
-    parts = sorted((r.asDict() for r in d.groupBy("_pid").agg(*aggs)
-                    .collect()),
-                   key=lambda r: (r["min_pos"] is None, r["min_pos"]))
-    out = {}
-    for col in date_cols:
-        inc_ok = all((p[f"iv_{col}"] or 0) == 0 for p in parts)
-        dec_ok = all((p[f"dv_{col}"] or 0) == 0 for p in parts)
-        # cross-partition boundaries (bounded list: one row per partition)
-        lasts = [(p[f"last_{col}"], p[f"first_{col}"]) for p in parts
-                 if p[f"first_{col}"] is not None]
-        for (la, _), (_, fb) in zip(lasts, lasts[1:]):
-            if la is not None and fb is not None:
-                if fb < la:
-                    inc_ok = False
-                if fb > la:
-                    dec_ok = False
-        if inc_ok or dec_ok:
-            direction = "ascending" if inc_ok else "descending"
-            out[col] = _check("DATE_MONOTONICITY", "PASS", 1.0,
-                              f"monotonically {direction}")
-        else:
-            out[col] = _check("DATE_MONOTONICITY", "INFO", 0.0,
-                              "date column is not sorted",
-                              passed_ok=("PASS", "INFO"))
-    return out
-
-
-# =========================================================================
-# Categorical breadth: class imbalance, cardinality, typo candidates
-# =========================================================================
-
-def categorical_breadth(counts: DataFrame, nn: int,
-                        selected: list[str]) -> list[dict]:
-    """Checks derivable from the (value, n) counts frame the caller
-    already computed (and persisted) for RARE/CASE."""
-    checks = []
-    if not nn:
-        return checks
-    if "CLASS_IMBALANCE" in selected:
-        # categorical_checks.py:115-141: top share >=.95 HIGH, >=.90 MED
-        top = counts.orderBy(F.desc("n"), "v").limit(1).collect()
-        if top:
-            top_pct = top[0]["n"] / nn
-            sev = ("HIGH" if top_pct >= 0.95 else
-                   "MEDIUM" if top_pct >= 0.90 else "PASS")
-            checks.append(_check(
-                "CLASS_IMBALANCE", sev, top_pct,
-                f"dominant category '{top[0]['v']}' = {top_pct:.1%}"))
-    if "CARDINALITY_CHANGE" in selected:
-        # categorical_checks.py:196-211: informational cardinality report
-        n_unique = counts.count()
-        ratio = n_unique / nn
-        checks.append(_check(
-            "CARDINALITY_CHANGE", "INFO", n_unique,
-            f"{n_unique} distinct categories (ratio {ratio:.2%})",
-            passed_ok=("PASS", "INFO")))
-    if "TYPO_CANDIDATES" in selected:
-        checks.append(_typo_check(counts))
-    return checks
-
-
-def _typo_check(counts: DataFrame) -> dict:
-    """TYPO_CANDIDATES (categorical_checks.py:144-193): pairwise similarity
-    over the top-200 categories with count>1.  Similarity = normalized
-    Levenshtein on lowercased values (F.levenshtein, JVM-side) — the local
-    substitute for rapidfuzz's InDel ratio, same 0.85 threshold and the
-    same a.lower() != b.lower() exclusion; severity MEDIUM>5 pairs else
-    LOW."""
-    cats = (counts.filter(F.col("n") > 1)
-            .orderBy(F.desc("n"), "v").limit(MAX_TYPO_CATS)
-            .select("v"))
-    a = cats.select(F.col("v").alias("va"))
-    b = cats.select(F.col("v").alias("vb"))
-    la, lb = F.lower(F.col("va")), F.lower(F.col("vb"))
-    sim = 1.0 - F.levenshtein(la, lb) / F.greatest(F.length(la),
-                                                   F.length(lb))
-    pairs = (a.crossJoin(F.broadcast(b))
-             .filter((F.col("va") < F.col("vb")) & (la != lb))
-             .withColumn("sim", sim).filter(F.col("sim") >= 0.85)
-             .orderBy(F.desc("sim"), "va", "vb"))
-    top = pairs.limit(_SAMPLE_CAP).collect()
-    n_pairs = pairs.count()
-    sev = ("MEDIUM" if n_pairs > 5 else "LOW" if n_pairs else "PASS")
-    return _check(
-        "TYPO_CANDIDATES", sev, n_pairs,
-        f"{n_pairs} candidate typo pair(s) (normalized Levenshtein ≥0.85)",
-        samples=[f"'{r['va']}' ~ '{r['vb']}' (sim={r['sim']:.2f})"
-                 for r in top])
-
-
-# =========================================================================
-# ID-column breadth: format consistency
-# =========================================================================
-
-def id_format_check(raw: DataFrame, col: str) -> dict | None:
-    """ID_FORMAT_CONSISTENCY (id_checks.py:41-98): char-class fingerprint
-    distribution.  The reference samples 1000 rows; the Spark path
-    aggregates the FULL column (one small groupBy per id column — id
-    columns are few) and collects only the top patterns."""
-    c = quoted_col(col)
-    g = (raw.filter(TI._nonempty(c))
-         .groupBy(M.id_fingerprint(c).alias("fp"))
-         .agg(F.count(F.lit(1)).alias("n"),
-              F.min(F.trim(c)).alias("sample")))
-    top = g.orderBy(F.desc("n"), "fp").limit(5).collect()
-    if not top:
-        return None
-    total = sum(r["n"] for r in top)
-    n_patterns = g.count()
-    # top-5 truncation can undercount total; recover exact denominator
-    if n_patterns > 5:
-        total = g.agg(F.sum("n")).first()[0]
-    if total < 10:
-        return None
-    dominant_pct = top[0]["n"] / total
-    if dominant_pct < 0.80 and n_patterns > 3:
-        sev = "HIGH"
-    elif dominant_pct < 0.90:
-        sev = "MEDIUM"
-    elif n_patterns > 2:
-        sev = "LOW"
-    else:
-        sev = "PASS"
-    minority = [r["sample"] for r in top[1:4]]
-    return _check(
-        "ID_FORMAT_CONSISTENCY", sev, dominant_pct,
-        f"{n_patterns} format patterns "
-        f"(dominant '{top[0]['fp']}' {dominant_pct:.1%})",
-        samples=minority)
 
 
 # =========================================================================
@@ -1242,8 +1050,11 @@ def pick_date_axis(types: dict, date_col: str | None) -> str | None:
 
 def temporal_pass(tv: DataFrame, types: dict, stats: dict, axis: str,
                   n_rows: int, selected_by_col: dict) -> dict:
-    """ONE groupBy(period) job: per-period row count, per-column null
-    rates, per-numeric-column means.  The driver finishes
+    """ONE groupBy(period, column) job over the unpivoted frame:
+    per-period null rates per column and means per numeric column, with
+    a constant-width plan at any column count (one aggregate per column
+    in a groupBy(period) would pass the codegen maxFields cliff on wide
+    tables and run interpreted).  The driver finishes
     TEMPORAL_COMPLETENESS / TEMPORAL_NULL_CONCENTRATION and the
     ACF / seasonality / CUSUM series checks on the bounded per-period
     frame (the scalable analog of the reference's per-row sorted series —
@@ -1265,54 +1076,32 @@ def temporal_pass(tv: DataFrame, types: dict, stats: dict, axis: str,
     d = F.col(f"`{axis}_typed`").cast("timestamp")
     per = F.date_trunc(trunc, d)
     other_cols = [c for c in types if c != axis]
+    if not other_cols:
+        # every check below reads another column's per-period series
+        return out
     num_cols = [c for c in other_cols if types[c] in _NUMERIC
                 and (stats.get(c) or {}).get("n_num")]
-    if len(other_cols) > TI.WIDE_COLS_THRESHOLD:
-        # melted per-period aggregation for WIDE tables (r6 ADVICE): one
-        # null-rate agg per column in a single wide groupBy(period)
-        # recreates the codegen-maxFields cliff past ~500 columns
-        # (interpreted fallback).  The unpivoted groupBy(period, column)
-        # computes the same per-(period, column) averages with a
-        # constant-width plan; rows are reassembled into the wide
-        # collect's dict shape so the driver-side checks are unchanged.
-        num_set = set(num_cols)
-        pairs = []
-        for c in other_cols:
-            dv = (F.col(f"`{c}_typed`").cast("double") if c in num_set
-                  else F.lit(None).cast("double"))
-            pairs += [F.lit(c), F.struct(
-                M.nullish_mask(quoted_col(c)).cast("double").alias("nl"),
-                dv.alias("dv"))]
-        u = (tv.filter(d.isNotNull())
-             .select(per.alias("per"),
-                     F.explode(F.create_map(*pairs)).alias("k", "m")))
-        g = (u.groupBy("per", "k")
-             .agg(F.avg("m.nl").alias("nullrate"),
-                  F.avg("m.dv").alias("mean")).collect())
-        counts = {r["per"]: r["n"] for r in
-                  tv.filter(d.isNotNull()).groupBy(per.alias("per"))
-                  .agg(F.count(F.lit(1)).alias("n")).collect()}
-        by_per: dict = {}
-        for r in g:
-            row_d = by_per.setdefault(r["per"], {})
-            row_d[f"{r['k']}::nullrate"] = r["nullrate"]
-            if r["k"] in num_set:
-                row_d[f"{r['k']}::mean"] = r["mean"]
-        rows = []
-        for p in sorted(by_per):
-            row_d = by_per[p]
-            row_d["::per"] = p
-            row_d["::n"] = counts.get(p, 0)
-            rows.append(row_d)
-    else:
-        aggs = [F.count(F.lit(1)).alias("::n")]
-        for c in other_cols:
-            aggs.append(F.avg(M.nullish_mask(quoted_col(c)).cast("double"))
-                        .alias(f"{c}::nullrate"))
-        for c in num_cols:
-            aggs.append(F.avg(F.col(f"`{c}_typed`")).alias(f"{c}::mean"))
-        rows = (tv.filter(d.isNotNull()).groupBy(per.alias("::per"))
-                .agg(*aggs).orderBy("::per").collect())
+    num_set = set(num_cols)
+    pairs = []
+    for c in other_cols:
+        dv = (F.col(f"`{c}_typed`").cast("double") if c in num_set
+              else F.lit(None).cast("double"))
+        pairs += [F.lit(c), F.struct(
+            M.nullish_mask(quoted_col(c)).cast("double").alias("nl"),
+            dv.alias("dv"))]
+    u = (tv.filter(d.isNotNull())
+         .select(per.alias("per"),
+                 F.explode(F.create_map(*pairs)).alias("k", "m")))
+    g = (u.groupBy("per", "k")
+         .agg(F.avg("m.nl").alias("nullrate"),
+              F.avg("m.dv").alias("mean")).collect())
+    by_per: dict = {}
+    for r in g:
+        row_d = by_per.setdefault(r["per"], {"::per": r["per"]})
+        row_d[f"{r['k']}::nullrate"] = r["nullrate"]
+        if r["k"] in num_set:
+            row_d[f"{r['k']}::mean"] = r["mean"]
+    rows = [by_per[p] for p in sorted(by_per)]
     if len(rows) < 3:
         return out
 

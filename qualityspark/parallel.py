@@ -12,20 +12,16 @@ tasks back-fill the cores the current family's stragglers leave idle.
 This is latency work, not a semantics change: every family computes
 exactly what it computed serially (the same jobs, the same results) and
 report assembly still happens after every future resolves —
-tests/test_r6_perf.py's report byte-identity pins it.
+tests/test_r7_fixes.py's serial-vs-concurrent report identity pins it.
 
 Thread notes: PySpark job submission is thread-safe; job descriptions /
 local properties are JVM-thread-local, so each submitted family is
 wrapped in ``pyspark.inheritable_thread_target`` (the documented way to
 run driver threads so thread-locals are inherited and cleaned up).
 
-Knobs (documented in OPTIMIZATION_r07.md):
-  QS_AUDIT_PARALLEL=0          strictly serial submission (debugging)
-  QS_AUDIT_PARALLEL_WORKERS=N  in-flight family bound (default 8: enough
-                               to fill scheduler tails at local[32] and on
-                               a cluster, where FIFO scheduling gives the
-                               earlier job resources first and later jobs
-                               back-fill — the behaviour we want)
+The pool holds AUDIT_WORKERS threads: enough to fill scheduler tails at
+local[32] and on a cluster, where FIFO scheduling gives the earlier job
+resources first and later jobs back-fill — the behaviour we want.
 """
 
 from __future__ import annotations
@@ -34,12 +30,11 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 
 
+AUDIT_WORKERS = 8
+
+
 def audit_pool() -> ThreadPoolExecutor:
-    if os.environ.get("QS_AUDIT_PARALLEL", "1") == "0":
-        workers = 1
-    else:
-        workers = int(os.environ.get("QS_AUDIT_PARALLEL_WORKERS", "8"))
-    return ThreadPoolExecutor(max_workers=max(1, workers))
+    return ThreadPoolExecutor(max_workers=AUDIT_WORKERS)
 
 
 def submit(pool: ThreadPoolExecutor, fn, name: str | None = None):

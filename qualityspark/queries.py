@@ -3101,10 +3101,12 @@ def wilcoxon_paired_halves(spark, sf_dir):
     order (rules/scalestats.py): pos = rn in half 1, rn - ceil(n/2) in
     half 2 — identical to ntile(2) + per-half row_number."""
     e = _t(spark, sf_dir, "events")
-    h, n = S.with_global_order(e.select(F.col("value").alias("x"),
-                                        "ts", "event_id"),
-                               F.col("ts"), [F.col("event_id")])
-    first = (n + 1) // 2  # ntile(2) first-tile size
+    h = S.with_global_order(e.select(F.col("value").alias("x"),
+                                     "ts", "event_id"),
+                            F.col("ts"), [F.col("event_id")],
+                            total_col="_n")
+    # ntile(2) first-tile size ceil(n/2), from the in-plan total
+    first = ((F.col("_n") + 1) / 2).cast("long")
     a = (h.filter(F.col("_rn") <= first)
          .select(F.col("_rn").alias("pos"), F.col("x").alias("xa")))
     b = (h.filter(F.col("_rn") > first)

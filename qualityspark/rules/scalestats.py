@@ -16,13 +16,14 @@ This module provides the bucketed two-pass alternative:
      never straddle buckets;
   3. window WITHIN each bucket (hash-partitioned shuffle, ~even by
      construction) and add the bucket's cumulative row-count offset
-     (a tiny in-plan aggregate broadcast back; the eager variant collects
-     the <= ``buckets`` longs at the driver instead).
+     (a tiny in-plan aggregate broadcast back — no driver collect).
 
 The result is the EXACT global row_number / min-rank — identical output to
 the single-partition window, but the sort is B-way parallel and no task
 ever holds more than ~n/B rows.  Cost: one extra scan for the quantile
-sketch + a tiny driver collect.
+sketch (skipped when the caller passes ``boundaries``).
+``with_global_order`` is the one ordering primitive; the ntile, lag and
+rank helpers below build on it.
 
 Skew note: a single key value holding >> 1/B of the table collapses into
 one bucket (correctness unaffected; that bucket's task is large).  For the
@@ -40,8 +41,9 @@ from pyspark.sql import functions as F
 def boundary_sketch_expr(key: Column, buckets: int) -> Column:
     """The aggregate expression `_boundaries` collects — exposed so callers
     that already run a driver-side agg (min/max, counts) can fold the
-    quantile sketch into the SAME pass and hand the result to
-    ``with_global_order(..., boundaries=...)``, saving one full scan."""
+    quantile sketch into the SAME pass and hand the deduplicated result
+    to ``with_global_order(..., boundaries=...)`` (or the helpers that
+    forward it), saving one full scan."""
     probs = [i / buckets for i in range(1, buckets)]
     return F.percentile_approx(key, probs, 10_000)
 
@@ -70,22 +72,21 @@ def _bucket_expr(key: Column, bnds: list) -> Column:
     return F.when(key.isNull(), F.lit(-1)).otherwise(b)
 
 
-def _with_rn_lazy(df: DataFrame, key: Column,
-                  tiebreaks: list | None = None,
-                  buckets: int = 32,
-                  rn_col: str = "_rn",
-                  rank_col: str | None = None,
-                  boundaries: list | None = None,
-                  total_col: str | None = None) -> DataFrame:
+def with_global_order(df: DataFrame, key: Column,
+                      tiebreaks: list | None = None,
+                      buckets: int = 32,
+                      rn_col: str = "_rn",
+                      rank_col: str | None = None,
+                      boundaries: list | None = None,
+                      total_col: str | None = None) -> DataFrame:
     """Adds the exact global ``row_number`` (and optionally min-``rank``,
     and the total row count as ``total_col``) over ORDER BY key
-    [, *tiebreaks] without a single-partition sort AND without a driver
-    action (r7): the per-bucket offsets used to be collect()ed — one full
-    extra scan and one extra job round-trip per helper call — and are now
-    a tiny in-plan aggregate (<= buckets+2 rows, prefix-summed by exploding
-    each count onto its later buckets so no SinglePartition node appears
-    anywhere) broadcast-joined back on the bucket id.  Values are
-    identical: same counts, same ascending-bucket cumulative offsets."""
+    [, *tiebreaks] without a single-partition sort and without a driver
+    action on the rows: the per-bucket offsets are a tiny in-plan
+    aggregate (<= buckets+2 rows, prefix-summed by exploding each count
+    onto its later buckets so no SinglePartition node appears anywhere)
+    broadcast-joined back on the bucket id.  The quantile boundaries are
+    one sketch action unless the caller passes ``boundaries``."""
     tiebreaks = tiebreaks or []
     if boundaries is None:
         boundaries = _boundaries(df, key, buckets)
@@ -122,37 +123,6 @@ def _with_rn_lazy(df: DataFrame, key: Column,
         wr = Window.partitionBy("_bkt").orderBy(key)
         out = out.withColumn(rank_col, F.rank().over(wr) + F.col("_off"))
     return out.drop("_bkt", "_off")
-
-
-def with_global_order(df: DataFrame, key: Column,
-                      tiebreaks: list | None = None,
-                      buckets: int = 32,
-                      rn_col: str = "_rn",
-                      rank_col: str | None = None,
-                      boundaries: list | None = None) -> tuple[DataFrame, int]:
-    """Eager variant for callers that need the total row count as a
-    Python int: pays the offset collect the lazy form avoids (the ntile /
-    rank helpers all use ``_with_rn_lazy``)."""
-    tiebreaks = tiebreaks or []
-    if boundaries is None:
-        boundaries = _boundaries(df, key, buckets)
-    df = df.withColumn("_bkt", _bucket_expr(key, boundaries))
-    counts = {r["_bkt"]: r["c"]
-              for r in df.groupBy("_bkt").agg(
-                  F.count(F.lit(1)).alias("c")).collect()}
-    total, offsets = 0, {}
-    for bkt in sorted(counts):
-        offsets[bkt] = total
-        total += counts[bkt]
-    off = F.lit(0)
-    for bkt, o in offsets.items():
-        off = F.when(F.col("_bkt") == bkt, F.lit(o)).otherwise(off)
-    w = Window.partitionBy("_bkt").orderBy(key, *tiebreaks)
-    out = df.withColumn(rn_col, F.row_number().over(w) + off)
-    if rank_col is not None:
-        wr = Window.partitionBy("_bkt").orderBy(key)
-        out = out.withColumn(rank_col, F.rank().over(wr) + off)
-    return out.drop("_bkt"), total
 
 
 def ntile_from_rn(rn: Column, n, k: int) -> Column:
@@ -195,8 +165,8 @@ def with_halves(df: DataFrame, key: Column, tiebreaks: list | None = None,
     at 100k-1M-row bench scale the extra scan costs ~0.1-0.2 s more than
     the sort it saves.  The bucketed window here is already parallel and
     bounded (no SinglePartition), so the sort is not a scale hazard."""
-    out = _with_rn_lazy(df, key, tiebreaks, buckets,
-                        boundaries=boundaries, total_col="_total")
+    out = with_global_order(df, key, tiebreaks, buckets,
+                            boundaries=boundaries, total_col="_total")
     return (out.withColumn(col, ntile_from_rn(F.col("_rn"),
                                               F.col("_total"), 2))
             .drop("_rn", "_total"))
@@ -205,7 +175,8 @@ def with_halves(df: DataFrame, key: Column, tiebreaks: list | None = None,
 def with_ntile(df: DataFrame, key: Column, k: int,
                tiebreaks: list | None = None, buckets: int = 32,
                col: str = "tile") -> DataFrame:
-    out = _with_rn_lazy(df, key, tiebreaks, buckets, total_col="_total")
+    out = with_global_order(df, key, tiebreaks, buckets,
+                            total_col="_total")
     return (out.withColumn(col, ntile_from_rn(F.col("_rn"),
                                               F.col("_total"), k))
             .drop("_rn", "_total"))
@@ -220,7 +191,7 @@ def with_global_lag(df: DataFrame, key: Column,
     sort: global row_number (bucketed) then an equi self-join on rn-1 —
     both sides hash-partition on _rn, no global funnel.  The lagged columns
     arrive as <col><suffix> (NULL for the first row).  Keeps ``_rn``."""
-    out = _with_rn_lazy(df, key, tiebreaks, buckets)
+    out = with_global_order(df, key, tiebreaks, buckets)
     prev = out.select((F.col("_rn") + 1).alias("_rn"),
                       *[F.col(c).alias(c + suffix)
                         for c in (lag_cols or [])])
@@ -240,7 +211,7 @@ def with_running_sum(df: DataFrame, key: Column, value: Column,
     d2 = d2.withColumn("_bkt", _bucket_expr(key, bnds))
     # prior-bucket totals as a lazy in-plan aggregate + broadcast join
     # (r7 — the collect cost a full scan and a job round-trip).  Same
-    # one-scan explode-onto-targets shape as _with_rn_lazy (no
+    # one-scan explode-onto-targets shape as with_global_order (no
     # SinglePartition funnel anywhere in the plan); because these totals
     # are DOUBLES the prior sums are folded over a sort_array'd struct
     # list in ascending _bkt order — the exact association of the old
@@ -273,8 +244,8 @@ def with_value_ranks(df: DataFrame, value: Column, buckets: int = 32,
     """Exact global min-rank (and scipy-convention average rank for ties:
     rank + (ties-1)/2) over ORDER BY value — the Mann-Whitney / Kruskal /
     ECDF building block, without the single-partition sort."""
-    out = _with_rn_lazy(df, value, [], buckets, rank_col="_mr",
-                        rn_col="_rn_tmp")
+    out = with_global_order(df, value, [], buckets, rank_col="_mr",
+                            rn_col="_rn_tmp")
     out = out.drop("_rn_tmp").withColumnRenamed("_mr", rank_col)
     if avg_rank_col is not None:
         ties = F.count(F.lit(1)).over(Window.partitionBy(value))

@@ -12,9 +12,9 @@ Re-expresses the reference's two layers for Spark:
 Spark-first execution shape: the reference runs a pandas pass per column;
 here ALL per-column statistics (null fraction, distinct count, boolean /
 numeric / date / email / phone / id-pattern match fractions) come from ONE
-aggregation job over the raw all-string frame — a single scan regardless
-of column count, collected as one tiny stats row, with the threshold
-cascade evaluated driver-side in plain Python.  Distinct counts use
+groupBy(column) job over the unpivoted raw all-string frame — a single
+scan regardless of column count, collected as one small stats row per
+column, with the threshold cascade evaluated driver-side in plain Python.  Distinct counts use
 ``approx_count_distinct`` by default (HLL merges map-side — no
 multi-distinct EXPAND multiplying the scan; exact at the tiny
 cardinalities where exactness matters: CONSTANT/BOOLEAN decisions) —
@@ -132,115 +132,28 @@ _STAT_KEYS = ["n_rows", "n_nonnull", "n_unique", "n_bool", "n_num",
               "n_id0", "n_id1", "n_id2", "n_id3"]
 
 
-# Above this column count the wide single-agg plan exceeds the
-# whole-stage-codegen field limit (original + helper columns vs
-# spark.sql.codegen.maxFields) and every expression runs interpreted —
-# measured 300 cols x 20k rows: the helper projection ALONE took 90 s.
-# The melted plan below stays a handful of fields wide at any column
-# count; its one groupBy(col) shuffle moves 13 partial aggregates per
-# (column, task) — trivial at any scale.
-WIDE_COLS_THRESHOLD = 48
-
-
 def column_stats(df: DataFrame, exact: bool = False):
-    """ONE aggregation pass -> {col: stats dict}.  See module docstring.
+    """ONE groupBy(column) job -> {col: stats dict}.  See module docstring.
 
-    The date-parse cascade (the expensive per-row expression: up to 11
-    try_to_timestamp attempts) is PROJECTED once per (row, column) as a
-    first-matching-format index under the aggregation, instead of being
-    evaluated inside two separate SUM expressions — once the agg falls
-    off the whole-stage-codegen path (wide frames exceed codegen
-    maxFields) each embedded instance re-evaluates per row interpreted.
+    The columns are unpivoted with explode(create_map(col -> value)), so
+    the plan is ~5 fields wide no matter how many columns the table has
+    and every expression stays inside whole-stage codegen.  The
+    date-parse cascade (the expensive per-row expression: up to 11
+    try_to_timestamp attempts) is projected ONCE per (row, column) as a
+    first-matching-format index beneath the aggregate;
     masks.date_format_index also shape-guards the cascade so plain
     numbers/text never attempt a parse.  n_date/n_datetime derive from
     the one index: ladder segments are disjoint (a date-only format
     match can never also parse a time-suffixed format and vice versa —
     Spark format parsing is full-match), pinned by test_r6_perf.py.
-
-    Past WIDE_COLS_THRESHOLD columns the same statistics come from the
-    melted (unpivoted) plan instead — identical output, pinned by
-    test_r6_perf.py::test_column_stats_melted_equals_wide."""
-    from qualityspark.rules import masks as _masks
-
-    src_cols = list(df.columns)
-    if len(src_cols) > WIDE_COLS_THRESHOLD:
-        return _column_stats_melted(df, src_cols, exact)
-    n_datefmt = len(DATE_FORMATS)
-    helpers, fmt_name = [], {}
-    taken = set(src_cols)
-    for ci, col in enumerate(src_cols):
-        c = F.col(f"`{col}`")
-        val = F.when(_nonempty(c), _stripped(c))
-        h = f"__qs_fmtidx_{ci}"
-        while h in taken:
-            h += "_"
-        taken.add(h)
-        fmt_name[col] = h
-        helpers.append(_masks.date_format_index(
-            val, DATE_FORMATS + DATETIME_FORMATS).alias(h))
-    proj = df.select("*", *helpers)
-
-    aggs = []
-    for ci, col in enumerate(src_cols):
-        c = F.col(f"`{col}`")
-        s = _stripped(c)
-        ne = _nonempty(c)
-        val = F.when(ne, s)           # null outside the non-empty domain
-        low = F.lower(val)
-        fi = F.col(f"`{fmt_name[col]}`")
-        # exact mode runs countDistinct in a SEPARATE small agg (r7): k
-        # countDistinct expressions in one aggregation plan as an Expand
-        # that replicates every input row k+1 times, and the optimizer
-        # collapses the helper projection into the Expand — so the
-        # 11-format date cascade ran once per REPLICA (measured +8.3 s on
-        # the 6-column orders inference).  A main agg with the cheap
-        # approx sketch plus one distinct-only agg computes identical
-        # statistics: n_unique comes solely from the second agg.
-        a = [
-            F.count(F.lit(1)),
-            F.sum(ne.cast("long")),
-            F.approx_count_distinct(val),
-            F.sum((low.isin(*BOOLEAN_VALUES)).cast("long")),
-            F.sum(val.try_cast("double").isNotNull().cast("long")),
-            F.sum(fi.isNotNull().cast("long")),
-            F.sum((fi >= n_datefmt).cast("long")),
-            F.sum(val.rlike(EMAIL_RE).cast("long")),
-            F.sum(val.rlike(PHONE_RE).cast("long")),
-        ]
-        a.extend(F.sum(val.rlike(rx).cast("long")) for rx in ID_PATTERNS)
-        aggs.extend(x.alias(f"c{ci}_{k}") for x, k in zip(a, _STAT_KEYS))
-    row = proj.agg(*aggs).first()
-    per_col = len(_STAT_KEYS)
-    out = {col: dict(zip(_STAT_KEYS,
-                         [v or 0 for v in row[i * per_col:
-                                              (i + 1) * per_col]]))
-           for i, col in enumerate(src_cols)}
-    if exact:
-        dvals = []
-        for col in src_cols:
-            c = F.col(f"`{col}`")
-            dvals.append(F.countDistinct(F.when(_nonempty(c),
-                                                _stripped(c))))
-        drow = df.agg(*dvals).first()
-        for i, col in enumerate(src_cols):
-            out[col]["n_unique"] = drow[i] or 0
-    return out
-
-
-def _column_stats_melted(df: DataFrame, src_cols: list[str],
-                         exact: bool = False):
-    """column_stats via explode(create_map(col -> value)) + groupBy(col):
-    the plan is ~5 fields wide no matter how many columns the table has,
-    so every expression (the guarded date ladder included, projected once
-    beneath the agg exactly like the wide path) stays inside whole-stage
-    codegen.  Map-explode keeps NULL values, so per-column row counts
-    equal the frame's row count.  One shuffle keyed on the column name:
-    13 partial aggregates per (column, input task) — constant-size
-    regardless of row count, the melt shape that survives a 1000-column
-    100-TB table (same idiom as csv_breadth.stacked_pass1)."""
+    Map-explode keeps NULL values, so per-column row counts equal the
+    frame's row count.  One shuffle keyed on the column name: 13 partial
+    aggregates per (column, input task), the melt shape that survives a
+    1000-column 100-TB table (same idiom as csv_breadth.stacked_pass1)."""
     from qualityspark.rules import masks as _masks
     from qualityspark.sources import quoted_col
 
+    src_cols = list(df.columns)
     pairs = []
     for col in src_cols:
         pairs += [F.lit(col), quoted_col(col)]
@@ -267,9 +180,10 @@ def _column_stats_melted(df: DataFrame, src_cols: list[str],
         F.sum(val.rlike(PHONE_RE).cast("long")),
     ]
     a.extend(F.sum(val.rlike(rx).cast("long")) for rx in ID_PATTERNS)
-    out = {r["k"]: r for r in proj.groupBy("k").agg(
+    out = {r["k"]: r.asDict() for r in proj.groupBy("k").agg(
         *[x.alias(k) for x, k in zip(a, _STAT_KEYS)]).collect()}
-    return {col: {k: (out[col][k] or 0) for k in _STAT_KEYS}
+    # a zero-row frame yields no groups: every statistic is 0
+    return {col: {k: (out.get(col, {}).get(k) or 0) for k in _STAT_KEYS}
             for col in src_cols}
 
 

@@ -1,6 +1,11 @@
+import json
+import pathlib
+
 import pytest
 
 from qualityspark.session import get_spark
+
+DATA = pathlib.Path(__file__).parent / "data"
 
 
 @pytest.fixture(scope="session")
@@ -26,3 +31,14 @@ def oracle_small():
     from qualityspark import synth, oracle
     rows = list(synth.page_rows(800))
     return rows, oracle.audit_rows(rows)
+
+
+@pytest.fixture(scope="session")
+def golden():
+    """golden(name, got): assert ``got`` equals the frozen reference output
+    tests/data/<name>.json after the same JSON round trip it was stored
+    with (``default=str``, so datetimes compare as their str())."""
+    def check(name, got):
+        want = json.loads((DATA / f"{name}.json").read_text())
+        assert json.loads(json.dumps(got, default=str)) == want
+    return check

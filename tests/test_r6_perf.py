@@ -1,11 +1,11 @@
-"""Pins for the round-6 pass-A/type-inference projection rewrite.
+"""Pins for the pass-A/type-inference projection and the melted plan.
 
-The rewrite (csv_audit._pass_a_prep, typeinfer.column_stats) moves the
+Pass A (csv_audit._pass_a_melted) and typeinfer.column_stats evaluate the
 expensive per-row signals — the 11-format date-parse cascade and the
-Benford scientific-notation digit — out of the (ObjectHashAggregate,
-no-CSE, interpreted) aggregate expressions into ONE codegen'd Project
-beneath the agg, and shape-guards the cascade with masks.DATE_SHAPE_RE.
-Three semantic claims make that rewrite an identity, each pinned here:
+Benford scientific-notation digit — ONCE per (row, column) in a
+codegen'd Project beneath the aggregate, and shape-guard the cascade
+with masks.DATE_SHAPE_RE.  Three semantic claims make that projection an
+identity, each pinned here:
 
 1. guard-accepts SUPERSET of ladder-parses: any string Spark's strict
    parser accepts for ANY ladder format matches DATE_SHAPE_RE, so the
@@ -13,9 +13,13 @@ Three semantic claims make that rewrite an identity, each pinned here:
 2. ladder-segment DISJOINTNESS: no string parses both a date-only
    format and a time-suffixed format (Spark format parsing is
    full-match), so n_datetime == count(first_match_index >= 7).
-3. the Benford "bfd" helper (NULL outside the nonzero-numeric domain)
-   reproduces the r5 inline conjunction counts, including the all-NULL
+3. the Benford digit (NULL outside the nonzero-numeric domain)
+   reproduces the inline conjunction counts, including the all-NULL
    column that must count 0, not None.
+
+The melted plan replaced a single-wide-aggregate plan for narrow tables;
+that plan's outputs on the fixtures below are frozen under tests/data/
+and the melted plan must keep reproducing them.
 """
 
 from pyspark.sql import functions as F
@@ -124,7 +128,7 @@ def test_typeinfer_counts_match_r5_semantics(spark):
 
 
 def test_benford_helper_counts_match_inline(spark):
-    """Pass-A bf1..bf9 from the projected "bfd" helper equal the r5
+    """Pass-A bf1..bf9 from the projected digit column equal the r5
     inline conjunction on a value set spanning (0,1) fractions,
     negatives, zeros, NULLs, and the 10-significant-digit rounding edge
     — and an all-NULL numeric column yields 0 counts, not None."""
@@ -136,9 +140,7 @@ def test_benford_helper_counts_match_inline(spark):
     types = {"x": TI.NUMERIC_CONTINUOUS, "allnull": TI.NUMERIC_CONTINUOUS}
     tv = TI.auto_typed_view(raw.withColumn(
         "_pos", F.monotonically_increasing_id()), types)
-    prep, names = CA._pass_a_prep(tv, types)
-    row = (prep.agg(*CA._pass_a_aggs(prep, types, None, names))
-           .first().asDict())
+    row = CA._pass_a_melted(tv, types, list(types), None)
     # reference digit definition: f"{abs(x):.10e}"[0] over nonzero values
     want = {d: 0 for d in range(1, 10)}
     for v in vals:
@@ -150,10 +152,9 @@ def test_benford_helper_counts_match_inline(spark):
     assert all(row[f"allnull::bf{d}"] == 0 for d in range(1, 10))
 
 
-def test_column_stats_melted_equals_wide(spark):
-    """The melted (unpivot) plan and the wide single-agg plan are the
-    same statistics: exact equality over a frame mixing nulls, dates,
-    datetimes, numbers, booleans, emails, phones, ids, and text."""
+def _stats_frame(spark):
+    """Frame mixing nulls, dates, datetimes, numbers, booleans, emails,
+    phones, ids, and text."""
     rows = []
     for i in range(120):
         rows.append((
@@ -164,31 +165,22 @@ def test_column_stats_melted_equals_wide(spark):
             f"ID-{i:04d}",
             "  pad  " if i % 5 else "",
         ))
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "d string, m string, b string, e string, i string, t string")
-    wide = TI.column_stats(df, exact=True)
-    melted = TI._column_stats_melted(df, df.columns, exact=True)
-    assert wide == melted
-    # and the dispatcher routes wide frames to the melted plan
-    wide_df = df
-    for j in range(9):
-        wide_df = wide_df.withColumns(
-            {f"c{j}_{c}": F.col(c) for c in df.columns})
-    assert len(wide_df.columns) > TI.WIDE_COLS_THRESHOLD
-    big = TI.column_stats(wide_df)
-    assert big["c0_d"] == TI.column_stats(df)["d"]
 
 
-def test_pass_a_melted_equals_wide_report(spark, tmp_path, monkeypatch):
-    """audit_csv through the melted pass A produces the IDENTICAL report
-    to the wide single-agg plan (types, stats-derived checks, samples,
-    scores) on a fixture mixing every semantic type with planted
-    violations.  Fixture < sketch accuracy so percentiles are exact and
-    the comparison is deterministic."""
+def test_column_stats_melted_equals_wide(spark, golden):
+    """The melted (unpivot) plan gives exactly the statistics the single
+    wide aggregate gave (frozen in tests/data/column_stats_exact.json)."""
+    golden("column_stats_exact",
+           TI.column_stats(_stats_frame(spark), exact=True))
+
+
+def _mix_csv(path):
+    """Every semantic type with planted violations; fewer rows than the
+    sketch accuracy, so percentiles are exact and reports deterministic."""
     import csv as _csv
-    from qualityspark import csv_audit as CA
-    p = tmp_path / "mix.csv"
-    with open(p, "w", newline="") as fh:
+    with open(path, "w", newline="") as fh:
         w = _csv.writer(fh)
         w.writerow(["num", "date", "cat", "mail", "note", "ident"])
         for i in range(300):
@@ -202,7 +194,16 @@ def test_pass_a_melted_equals_wide_report(spark, tmp_path, monkeypatch):
                 ("  pad " if i % 7 == 0 else f"note {i % 11}"),
                 f"ID-{i:05d}",
             ])
-    wide = CA.audit_csv(spark, str(p))
-    monkeypatch.setattr(CA.TI, "WIDE_COLS_THRESHOLD", 2)
-    melted = CA.audit_csv(spark, str(p))
-    assert wide == melted
+
+
+def test_pass_a_melted_equals_wide_report(spark, tmp_path, golden):
+    """audit_csv through the melted plan produces the IDENTICAL report
+    (types, stats-derived checks, samples, scores) to the single wide
+    aggregate it replaced, frozen in tests/data/mix_audit_report.json
+    (``input`` left out: it names the temporary path)."""
+    from qualityspark import csv_audit as CA
+    p = tmp_path / "mix.csv"
+    _mix_csv(p)
+    rep = CA.audit_csv(spark, str(p))
+    assert rep.pop("input") == str(p)
+    golden("mix_audit_report", rep)

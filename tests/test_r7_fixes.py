@@ -7,7 +7,7 @@ the single-agg result, the NULL_ROW_PATTERN top-patterns query survives
 a 1000-column >50%-null table (r6 ADVICE high: the rebuilt left-deep sum
 chain overflowed the JVM stack exactly when the check fired), the
 point-biserial bool fan-out is capped (r6 ADVICE medium), the melted
-temporal pass matches the wide plan, and the concurrent family submission
+temporal pass matches the frozen wide-plan output, and the concurrent family submission
 produces a report identical to serial submission.
 """
 
@@ -303,11 +303,10 @@ def test_point_biserial_bool_fanout_capped(spark):
     assert info and info[0]["passed"]
 
 
-def test_temporal_melted_equals_wide(spark, monkeypatch):
-    """The wide-table melted per-period aggregation must reproduce the
-    wide plan's temporal checks exactly."""
+def _temporal_inputs(spark):
+    """(tv, types, stats, selected) for a 60-row daily table: one date
+    axis, two numeric columns with nulls, one categorical."""
     import datetime as dt
-    from qualityspark import csv_breadth as B
     from qualityspark import typeinfer as TI
     rows = []
     for r in range(60):
@@ -328,16 +327,24 @@ def test_temporal_melted_equals_wide(spark, monkeypatch):
              "y": {"n_num": 48, "n_null": 12},
              "c": {"n_null": 0}}
     sel = {"x": TI.TEMPORAL_DATASET_CHECKS, "y": TI.TEMPORAL_DATASET_CHECKS}
-    wide = B.temporal_pass(tv, types, stats, "d", 60, sel)
-    monkeypatch.setattr(TI, "WIDE_COLS_THRESHOLD", 2)
-    melted = B.temporal_pass(tv, types, stats, "d", 60, sel)
-    assert wide == melted
+    return tv, types, stats, sel
+
+
+def test_temporal_melted_equals_wide(spark, golden):
+    """The melted per-period aggregation reproduces the temporal checks of
+    the single wide groupBy(period) it replaced, frozen in
+    tests/data/temporal_pass.json."""
+    from qualityspark import csv_breadth as B
+    tv, types, stats, sel = _temporal_inputs(spark)
+    golden("temporal_pass", B.temporal_pass(tv, types, stats, "d", 60, sel))
 
 
 def test_parallel_audit_report_identical_to_serial(spark, tmp_path,
                                                    monkeypatch):
-    """QS_AUDIT_PARALLEL=0 (serial submission) and the default concurrent
+    """A one-worker pool (serial submission) and the default concurrent
     submission must produce the identical report dict."""
+    from concurrent.futures import ThreadPoolExecutor
+    from qualityspark import parallel
     from qualityspark.csv_audit import audit_csv
     p = tmp_path / "t.csv"
     lines = ["id,num,cat,date,txt"]
@@ -345,8 +352,8 @@ def test_parallel_audit_report_identical_to_serial(spark, tmp_path,
         lines.append(f"{r},{r * 0.5 if r % 9 else ''},"
                      f"{'ab'[r % 2]},2023-02-{(r % 28) + 1:02d},w{r % 5}")
     p.write_text("\n".join(lines) + "\n")
-    monkeypatch.setenv("QS_AUDIT_PARALLEL", "0")
-    serial = audit_csv(spark, str(p))
-    monkeypatch.delenv("QS_AUDIT_PARALLEL")
-    parallel = audit_csv(spark, str(p))
-    assert serial == parallel
+    with monkeypatch.context() as m:
+        m.setattr(parallel, "audit_pool",
+                  lambda: ThreadPoolExecutor(max_workers=1))
+        serial = audit_csv(spark, str(p))
+    assert audit_csv(spark, str(p)) == serial

@@ -84,3 +84,30 @@ def test_csv_and_parquet_reports_agree(spark, tmp_path):
         cv = {c["check_id"]: c["severity"]
               for c in rc["columns"][col]["checks"]}
         assert pv == cv, (col, pv, cv)
+
+
+def test_degenerate_tables_audit(spark):
+    """Shapes the melted plan cannot unpivot or group still audit: a
+    zero-row table (no groups), a table of only complex columns (nothing
+    to unpivot), and a lone date column (no other column for the
+    temporal pass)."""
+    empty = audit_table(spark, spark.createDataFrame(
+        [], "s string, x double, d timestamp"))
+    assert empty["n_rows"] == 0
+    assert set(empty["column_types"].values()) == {"EMPTY"}
+    assert [(ch["check_id"], ch["severity"])
+            for ch in empty["columns"]["x"]["checks"]] == [
+        ("NULL_RATE", "CRITICAL")]
+    assert empty["columns"]["x"]["n_unique"] == 0
+
+    only = audit_table(spark, spark.createDataFrame([([1],), ([2],)],
+                                                    "a array<int>"))
+    assert only["n_rows"] == 2 and only["columns"] == {}
+    assert only["skipped_columns"] == ["a"]
+
+    lone = audit_table(spark, spark.createDataFrame(
+        [(datetime.datetime(2024, 1, i % 28 + 1),) for i in range(50)],
+        "when timestamp"))
+    assert lone["date_axis"] == "when"
+    assert [ch["check_id"] for ch in lone["table_checks"]] == [
+        "DUPLICATE_ROWS"]
