@@ -220,8 +220,8 @@ class RunConfig:
     column_weights: dict = field(default_factory=dict)
     business_rules: tuple = ()
     # declared referential-integrity pairs (reference config_loader
-    # foreign_keys section); executed by queries.fk_orphans-style
-    # broadcast anti-joins when the caller supplies the named tables
+    # foreign_keys section); csv_audit.audit_csv_batch executes them over
+    # the directory's files, tables named by file stem
     foreign_keys: tuple = ()
 
     @staticmethod

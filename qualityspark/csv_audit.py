@@ -846,10 +846,15 @@ def batch_exit_code(report: dict) -> int:
     """Consolidated exit code for a batch audit: max over per-file codes,
     with any unloadable file counting as at least exit 1 — a directory
     where every CSV fails to load must not signal a clean audit (r4
-    ADVICE; reference batch_processor treats load failures as errors)."""
+    ADVICE; reference batch_processor treats load failures as errors).
+    A declared foreign key that fails counts like a file's issues:
+    CRITICAL orphan share -> 2, any other failing severity -> 1."""
     codes = [f["exit_code"] for f in report.get("files", {}).values()]
     if report.get("failed_files"):
         codes.append(1)
+    codes += [2 if fk["severity"] == "CRITICAL" else 1
+              for fk in report.get("fk_checks", ())
+              if fk.get("severity", "PASS") != "PASS"]
     return max(codes, default=0)
 
 
@@ -859,9 +864,13 @@ def audit_csv_batch(spark: SparkSession, input_dir: str,
     ``--batch dir/``): every ``*.csv`` in the directory is audited and a
     consolidated summary carries per-file scores/grades plus the
     avg/min/max ladder.  Files that fail to load are reported, not fatal
-    (reference :100-109 behavior)."""
+    (reference :100-109 behavior).  When the config declares
+    foreign_keys, they run over the directory's files as tables named by
+    file stem (reference batch mode runs core/referential_integrity.py)
+    and land in ``fk_checks``."""
     import glob as _glob
     import os as _os
+    from qualityspark.sources import read_csv_audited
     files = sorted(_glob.glob(_os.path.join(input_dir, "*.csv")))
     per_file, failed = {}, {}
     for path in files:
@@ -879,7 +888,7 @@ def audit_csv_batch(spark: SparkSession, input_dir: str,
                           "issues_by_severity": rep["issues_by_severity"],
                           "report": rep}
     scores = [v["dataset_score"] for v in per_file.values()]
-    return {
+    report = {
         "input_dir": input_dir,
         "n_files": len(files),
         "n_audited": len(per_file),
@@ -895,6 +904,18 @@ def audit_csv_batch(spark: SparkSession, input_dir: str,
                                        per_file[k]["dataset_score"])}
                     if scores else {}),
     }
+    cfg = resolve(cfg)
+    if cfg.foreign_keys:
+        named = {fk[side] for fk in cfg.foreign_keys
+                 for side in ("child_table", "parent_table")}
+        tables = {}
+        for path in files:
+            name = _os.path.basename(path)
+            stem = _os.path.splitext(name)[0]
+            if stem in named and name not in failed:
+                tables[stem] = read_csv_audited(spark, path)
+        report["fk_checks"] = fk_violations(spark, cfg, tables)
+    return report
 
 
 def compare_csv_reports(ref: dict, cur: dict) -> dict:

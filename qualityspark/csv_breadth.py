@@ -97,15 +97,6 @@ def _check(check_id, severity, value, detail="", samples=None,
     return out
 
 
-def _mask_pii(value: str) -> str:
-    """Reference pii_checks._mask_value: show start/end, mask the middle."""
-    value = str(value)
-    if len(value) <= 4:
-        return "****"
-    show = max(2, len(value) // 4)
-    return value[:show] + "*" * (len(value) - show * 2) + value[-show:]
-
-
 # =========================================================================
 # Stacked pass S1: per-string-column mask counts in ONE unpivoted job
 # =========================================================================
@@ -193,8 +184,7 @@ def stacked_pass2(raw: DataFrame, cols: list[str],
     # reference: iqr==0 -> any length != median is an outlier
     len_out = ne & F.when(iqr == 0, ln != lmed).otherwise(
         (ln < lq1 - 1.5 * iqr) | (ln > lq3 + 1.5 * iqr))
-    abrupt = (M.trunc_eligible_mask(v) & (ln == max_len.cast("int"))
-              & F.lower(s).rlike(M.ABRUPT_END_RE))
+    abrupt = M.trunc_abrupt_mask(v, max_len.cast("int"))
     rows = (u.groupBy("k")
             .agg(F.sum(len_out.cast("long")).alias("n_len_out"),
                  F.min(F.when(len_out, s)).alias("s_len_min"),
@@ -292,7 +282,7 @@ def pii_dataset_checks(s1: dict[str, dict], n_rows: int) -> list[dict]:
                 checks.append(_check(
                     "PII_DETECTED", sev_by_name[name], pct,
                     f"{name}: {n} matching rows", column=col,
-                    samples=[_mask_pii(sample)] if sample else None))
+                    samples=[C.mask_value(str(sample))] if sample else None))
     return checks
 
 

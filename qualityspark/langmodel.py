@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import math
 
-from qualityspark import constants as C
 from qualityspark import textstats as T
 
 SEED_CORPORA = {
@@ -180,17 +179,7 @@ def _lookup(keys, tk, tv, default):
 # at ~0.26 efficiency; 150k chunks restore near-linear).  Chunking is
 # result-invariant: every computation is per-document (segment sums never
 # cross chunk bounds).
-import os as _os
-
-_CHUNK_KEYS = int(_os.environ.get("QS_CHUNK_KEYS", "150000"))
-
-
-def _logps(cp: _np.ndarray, lang: str) -> _np.ndarray:
-    tk, tv, ck, cv = _TABLES[lang]
-    tri = (cp[:-2] << 42) | (cp[1:-1] << 21) | cp[2:]
-    ctx = (cp[:-2] << 21) | cp[1:-1]
-    ctx_miss = _lookup(ctx, ck, cv, _LOG_UNK)
-    return _lookup(tri, tk, tv, ctx_miss)
+_CHUNK_KEYS = 150_000
 
 
 def _norm(text: str) -> str:
@@ -350,7 +339,7 @@ def perplexity_batch(texts: list, langs: list) -> list:
     heaviest key producer: ~1000 keys/doc)."""
     # floor 64 (not 256): at the default budget 150k keys / 1002 keys-doc
     # the honest step is ~149 docs; a 256 floor would overshoot the cache
-    # budget ~1.7x and make QS_CHUNK_KEYS a no-op for the heaviest producer
+    # budget ~1.7x and make _CHUNK_KEYS a no-op for the heaviest producer
     step = max(64, _CHUNK_KEYS // _PPL_CAP)
     if len(texts) <= step:
         return _perplexity_chunk(texts, langs)

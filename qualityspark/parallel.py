@@ -17,7 +17,8 @@ tests/test_r7_fixes.py's serial-vs-concurrent report identity pins it.
 Thread notes: PySpark job submission is thread-safe; job descriptions /
 local properties are JVM-thread-local, so each submitted family is
 wrapped in ``pyspark.inheritable_thread_target`` (the documented way to
-run driver threads so thread-locals are inherited and cleaned up).
+run driver threads so thread-locals are inherited and cleaned up) and
+labels its jobs with its family name as the job description.
 
 The pool holds AUDIT_WORKERS threads: enough to fill scheduler tails at
 local[32] and on a cluster, where FIFO scheduling gives the earlier job
@@ -26,7 +27,6 @@ resources first and later jobs back-fill — the behaviour we want.
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor
 
 
@@ -40,25 +40,21 @@ def audit_pool() -> ThreadPoolExecutor:
 def submit(pool: ThreadPoolExecutor, fn, name: str | None = None):
     """Submit a zero-arg family thunk; wraps it so Spark's JVM
     thread-locals (job group/description) are inherited and cleaned up.
-    QS_AUDIT_TIMING=1 prints per-family wall times to stderr (profiling
-    aid cited by OPTIMIZATION_r07.md)."""
-    if name and os.environ.get("QS_AUDIT_TIMING") == "1":
-        inner = fn
-
-        def fn():
-            import sys
-            import time
-            t0 = time.time()
-            try:
-                return inner()
-            finally:
-                print(f"[audit-family] {name}: {time.time() - t0:.2f}s",
-                      file=sys.stderr, flush=True)
+    ``name`` becomes the job description of every job the family runs, so
+    per-family jobs and wall time show in the Spark UI and the REST
+    ``jobs`` endpoint; the job group stays the caller's, so a group
+    label set around the whole audit still counts every family's jobs."""
     try:
         from pyspark import inheritable_thread_target
         from pyspark.sql import SparkSession
         session = SparkSession.getActiveSession()
         if session is not None:
+            if name:
+                inner = fn
+
+                def fn():
+                    session.sparkContext.setJobDescription(name)
+                    return inner()
             # session-arg form inherits job tags too (and avoids the
             # "Tags will not be inherited" warning on Spark 4)
             fn = inheritable_thread_target(session)(fn)

@@ -4005,9 +4005,7 @@ def audit_breadth_masks(spark, sf_dir):
     max_len = (u.groupBy("k")
                .agg(F.max(F.when(ne, F.length(s))).alias("max_len")))
     j = u.join(F.broadcast(max_len), "k")
-    abrupt = (M.trunc_eligible_mask(v)
-              & (F.length(s) == F.col("max_len"))
-              & F.lower(s).rlike(M.ABRUPT_END_RE))
+    abrupt = M.trunc_abrupt_mask(v, F.col("max_len"))
     return (j.groupBy(F.col("k").alias("col"))
             .agg(F.sum(ne.cast("long")).cast("bigint").alias("n_ne"),
                  F.sum(M.null_like_string_mask(v).cast("long"))

@@ -101,13 +101,15 @@ def trunc_ellipsis_mask(c: Column) -> Column:
     return trunc_eligible_mask(c) & F.trim(c).endswith("...")
 
 
-def trunc_abrupt_mask(c: Column, max_len: int) -> Column:
+def trunc_abrupt_mask(c: Column, max_len: Column) -> Column:
     """At the column's max observed length AND ends mid-word — the
-    fixed-width-cutoff signature.  Needs the pass-A max-length literal,
-    so this one lives in pass B.  Case-insensitive like the reference's
+    fixed-width-cutoff signature.  ``max_len`` is the per-column max
+    trimmed length, joined in beside the value (the CSV audit's pass-2
+    literals, the registry query's groupBy), so this one needs a pass of
+    its own.  Case-insensitive like the reference's
     re.match(..., case=False)."""
     s = F.trim(c)
-    return (trunc_eligible_mask(c) & (F.length(s) == int(max_len))
+    return (trunc_eligible_mask(c) & (F.length(s) == max_len)
             & F.lower(s).rlike(ABRUPT_END_RE))
 
 

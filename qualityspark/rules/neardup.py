@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from qualityspark.rules.heuristics import tokens_expr, word_ngrams
+from qualityspark.rules.heuristics import tokens_expr
 
 MERSENNE = 2_147_483_647  # 2^31 - 1
 HASH_INIT = 7
@@ -47,17 +47,17 @@ HASH_MULT = 31
 # eval + allocation, the expression class measured at 35% executor CPU
 # elsewhere; ruinous at production dims >= 256).
 #
-# MEASURED DESIGN CONSTRAINT (tools/dot_bench.py, 20k vecs, dim 256): a
-# per-PAIR pandas-UDF dot is 1.8x SLOWER than the HOF it replaces — each
-# candidate pair ships BOTH vectors through Arrow, duplicating every
-# vector across its ~hundreds of candidates (~57 GB for 14M pairs).  The
-# winning shape is per-BUCKET: cogroup the two sides of the candidate
-# join on the bucket key and compute the whole pairwise cosine block in
-# numpy inside ONE applyInPandas — vectors cross Arrow once per bucket
-# occurrence, pair enumeration never leaves numpy
+# MEASURED DESIGN CONSTRAINT (r4 dot_bench entry in BENCH/BASELINE.md, 20k
+# vecs, dim 256): a per-PAIR pandas-UDF dot is 1.8x SLOWER than the HOF it
+# replaces — each candidate pair ships BOTH vectors through Arrow,
+# duplicating every vector across its ~hundreds of candidates (~57 GB for
+# 14M pairs).  The winning shape is per-BUCKET: cogroup the two sides of
+# the candidate join on the bucket key and compute the whole pairwise
+# cosine block in numpy inside ONE applyInPandas — vectors cross Arrow
+# once per bucket occurrence, pair enumeration never leaves numpy
 # (``pair_cos_cogrouped``).  Per-VECTOR passes (signature, norm) keep the
-# plain pandas-UDF form (``pair_dot`` / ``lsh_sig_col``) — no
-# duplication there.
+# plain pandas-UDF form (``pair_dot`` / ``lsh_sig_col``) — no duplication
+# there.
 #
 # FP-determinism contract: all accumulation below is COLUMN-WISE
 # (acc += V[:,j]*W[:,j] / outer(Q[:,j], D[:,j]) for j in 0..dim-1),
@@ -244,12 +244,6 @@ def chunk_fingerprint(s: Column, chunk: int = FINGERPRINT_CHUNK) -> Column:
         F.lit(MERSENNE)))
 
 
-def shingles_expr(text: Column, k: int = 3) -> Column:
-    """Distinct word k-gram shingle strings (slice/zip_with build — see
-    heuristics.word_ngrams for why element_at-in-transform is avoided)."""
-    return F.array_distinct(word_ngrams(tokens_expr(text), k))
-
-
 def shingle_hashes_expr(text: Column, k: int = 3) -> Column:
     """Shingle -> 31-bit positive hash via xxhash64 (codegen'd, ~100x faster
     than char-level folding; collisions at ~100 shingles/doc are negligible
@@ -396,8 +390,9 @@ def shingle_hash_py(gram: str) -> int:
 
 
 def _sig_block(arrs: list, params: list, num_hashes: int):
-    """MinHash signatures for a batch of shingle-hash arrays (the exact
-    numpy arithmetic of minhash_signature — see its docstring)."""
+    """MinHash signatures for a batch of shingle-hash arrays: the one
+    numpy kernel behind minhash_signature and shingle_sig_pass (exactness
+    argument in minhash_signature's docstring)."""
     import numpy as np
     n = len(arrs)
     sentinel = np.int64(MERSENNE)
@@ -481,32 +476,13 @@ def minhash_signature(sh: Column, num_hashes: int = 64,
     2^31 so a*x+b < 2^63 never overflows, and numpy % on non-negative
     operands == Spark's % on non-negative operands."""
     params = _minhash_params(num_hashes, seed)
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    sentinel = np.int64(MERSENNE)
-
     def _fn(col):
-        n = len(col)
-        if not n:
+        if not len(col):
             return pd.Series([], dtype="object")
-        arrs = [np.asarray(x, dtype=np.int64)
-                if x is not None and len(x) else None for x in col]
-        lens = np.array([0 if a is None else len(a) for a in arrs],
-                        dtype=np.int64)
-        nz = lens > 0
-        out = np.full((n, num_hashes), sentinel, dtype=np.int64)
-        if nz.any():
-            flat = np.concatenate([a for a in arrs if a is not None])
-            nz_lens = lens[nz]
-            offsets = np.concatenate(([0], np.cumsum(nz_lens)[:-1]))
-            mins = np.empty((num_hashes, len(nz_lens)), dtype=np.int64)
-            for i, (a, b) in enumerate(params):
-                mins[i] = np.minimum.reduceat((a * flat + b) % MERSENNE,
-                                              offsets)
-            out[nz] = mins.T
-        return pd.Series(list(out))
+        return pd.Series(_sig_block([[] if x is None else x for x in col],
+                                    params, num_hashes))
 
     return pandas_udf("array<long>")(_fn)(sh)
 

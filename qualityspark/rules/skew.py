@@ -34,13 +34,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-DOMAIN_RE = r"^[a-z][a-z0-9+.-]*://([^/]+)"
-
-
-def url_domain(url: Column) -> Column:
-    """Registrable host part of a url ('' when unparseable)."""
-    return F.regexp_extract(url, DOMAIN_RE, 1)
-
 
 def salted_two_phase(df: DataFrame, key: Column, salt_src: Column,
                      partial_aggs: list, merge_aggs: list,

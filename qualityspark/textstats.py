@@ -21,7 +21,6 @@ ASCII whitespace = ``constants.ASCII_WS`` (space, \\t, \\n, \\r, \\f, \\x0b).
 
 from __future__ import annotations
 
-import math
 import re
 
 from qualityspark import constants as C
@@ -280,31 +279,3 @@ def signal_stats(text: str | None, lang: str | None,
     return (n, mwl, alpha, symbol, bullet, ellipsis, stop_d, req_hits,
             tox_d, caps, rep)
 
-
-def perplexity_char_trigram(text: str | None, model: dict, vocab: int) -> float:
-    """Char-trigram perplexity with add-one smoothing.
-
-    ``model`` maps (c1+c2) -> {c3: count, ...; '' : context_total}.
-    Deterministic, shared by oracle and the pandas UDF."""
-    if text is None:
-        return float("inf")
-    s = " " + " ".join(tokenize(text.lower())) + " "
-    if len(s) < 3:
-        return float("inf")
-    # deterministic cost cap: a 1000-char prefix pins the n-gram estimate
-    # tightly enough for the gibberish cut at any document length
-    s = s[:1002]
-    log_sum = 0.0
-    n = 0
-    for i in range(len(s) - 2):
-        ctx = s[i:i + 2]
-        nxt = s[i + 2]
-        counts = model.get(ctx)
-        if counts is None:
-            p = 1.0 / vocab
-        else:
-            total = counts[""]
-            p = (counts.get(nxt, 0) + 1.0) / (total + vocab)
-        log_sum += math.log(p)
-        n += 1
-    return math.exp(-log_sum / n)

@@ -128,27 +128,34 @@ def test_config_changes_csv_score(spark, tmp_path):
     assert harsh["dataset_score"] <= base["dataset_score"]
 
 
-def test_fk_violations(spark, tmp_path):
-    """Declared foreign_keys execute as broadcast anti-joins: orphan
-    counts per pair, unknown tables skipped not raised (reference
-    core/referential_integrity.py behavior)."""
+def _fk_fixture(tmp_path):
+    """customers.csv (ids C000-C049) and orders.csv whose cust_id cycles
+    C000-C059, so ids 50-59 are orphans (20 of 120 rows), plus a config
+    declaring that pair and one over a missing table."""
     from qualityspark.config import RunConfig
-    from qualityspark.csv_audit import fk_violations
-    from qualityspark.sources import read_csv_audited
-
     cust = tmp_path / "customers.csv"
     cust.write_text("id,name\n" + "".join(
         f"C{i:03d},name{i}\n" for i in range(50)))
     orders = tmp_path / "orders.csv"
     orders.write_text("oid,cust_id\n" + "".join(
-        f"O{i:03d},C{i % 60:03d}\n" for i in range(120)))  # ids 50-59 orphan
-
+        f"O{i:03d},C{i % 60:03d}\n" for i in range(120)))
     cfg = RunConfig.from_dict({"foreign_keys": [
         {"child_table": "orders", "child_column": "cust_id",
          "parent_table": "customers", "parent_column": "id"},
         {"child_table": "missing", "child_column": "x",
          "parent_table": "customers", "parent_column": "id"},
     ]})
+    return cust, orders, cfg
+
+
+def test_fk_violations(spark, tmp_path):
+    """Declared foreign_keys execute as broadcast anti-joins: orphan
+    counts per pair, unknown tables skipped not raised (reference
+    core/referential_integrity.py behavior)."""
+    from qualityspark.csv_audit import fk_violations
+    from qualityspark.sources import read_csv_audited
+
+    cust, orders, cfg = _fk_fixture(tmp_path)
     tables = {"orders": read_csv_audited(spark, str(orders)),
               "customers": read_csv_audited(spark, str(cust))}
     # ONE action per executed FK (r4 VERDICT item 5): the left-join
@@ -235,3 +242,22 @@ def test_audit_csv_batch(spark, tmp_path):
     assert s["worst_file"] == "dirty.csv"
     assert s["min_score"] <= s["avg_score"] <= s["max_score"]
     assert rep["files"]["dirty.csv"]["exit_code"] == 2
+    assert "fk_checks" not in rep        # no declared FKs -> no FK jobs
+
+
+def test_batch_runs_declared_foreign_keys(spark, tmp_path):
+    """A batch audit executes the config's foreign_keys over the
+    directory's files (tables named by file stem): the orphans land in
+    ``fk_checks`` and a CRITICAL orphan share sets the exit code to 2."""
+    from qualityspark.csv_audit import audit_csv_batch, batch_exit_code
+    _, _, cfg = _fk_fixture(tmp_path)
+    rep = audit_csv_batch(spark, str(tmp_path), cfg=cfg)
+    fk, missing = rep["fk_checks"]
+    assert fk["status"] == "CHECKED" and fk["orphan_count"] == 20
+    assert fk["severity"] == "CRITICAL"
+    assert missing["status"] == "SKIPPED"
+    # the files alone exit at most 1, so the 2 comes from the FK
+    assert max(f["exit_code"] for f in rep["files"].values()) < 2
+    assert batch_exit_code(rep) == 2
+    assert batch_exit_code({**rep, "fk_checks": [
+        {**fk, "severity": "MEDIUM"}]}) == 1

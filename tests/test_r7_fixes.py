@@ -7,8 +7,9 @@ the single-agg result, the NULL_ROW_PATTERN top-patterns query survives
 a 1000-column >50%-null table (r6 ADVICE high: the rebuilt left-deep sum
 chain overflowed the JVM stack exactly when the check fired), the
 point-biserial bool fan-out is capped (r6 ADVICE medium), the melted
-temporal pass matches the frozen wide-plan output, and the concurrent family submission
-produces a report identical to serial submission.
+temporal pass matches the frozen wide-plan output, the concurrent family submission
+produces a report identical to serial submission, and each submitted
+family labels its jobs with its name.
 """
 
 import pytest
@@ -357,3 +358,25 @@ def test_parallel_audit_report_identical_to_serial(spark, tmp_path,
                   lambda: ThreadPoolExecutor(max_workers=1))
         serial = audit_csv(spark, str(p))
     assert audit_csv(spark, str(p)) == serial
+
+
+def test_parallel_submit_labels_family_jobs(spark):
+    """A submitted family runs under the caller's job group with its own
+    name as the job description, so its jobs stay countable by group and
+    show per family; the caller's description is left as it was."""
+    from qualityspark import parallel
+    sc = spark.sparkContext
+    sc.setJobGroup("g", "caller")
+    try:
+        def thunk():
+            spark.range(10).count()
+            return (sc.getLocalProperty("spark.jobGroup.id"),
+                    sc.getLocalProperty("spark.job.description"))
+        with parallel.audit_pool() as pool:
+            got = parallel.submit(pool, thunk, "fam").result()
+        assert got == ("g", "fam")
+        assert sc.statusTracker().getJobIdsForGroup("g")
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

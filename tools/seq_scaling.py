@@ -1,6 +1,6 @@
 """Sequential-process N-vs-4N scaling measurement.
 
-The interleaved two-persistent-JVM design (tools/interleaved_scaling.py)
+An interleaved two-persistent-JVM design (both levels alive at once)
 turned out to contaminate itself: the nominally idle co-resident JVM keeps
 burning ~1-6 cores (GC/netty/compiler threads are sized by MACHINE cores,
 not by the local[N] task-thread count), so each level's timing includes
