@@ -20,7 +20,12 @@ offline here, reference: Iceberg docs):
 * on restart the driver recomputes the (deterministic) plan but writes only
   chunks missing from the manifest.  Global stages (dedup, metrics) are
   recomputed — correctness comes from determinism, progress from skipping
-  committed writes, which is where the bytes (and the time) are.
+  committed writes, which is where the bytes (and the time) are;
+* the sinks read the committed chunks back once, with the written schema
+  (no inference job), and scan them twice: the lineage explode, and
+  ``metrics_by_partition`` with the global metrics row observed on the
+  same pass.  A run at four chunks is 11 Spark jobs with AQE, each labelled
+  by ``run_resumable`` with its stage as the job description.
 """
 
 from __future__ import annotations
@@ -28,9 +33,11 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class SnapshotWriter:
@@ -93,19 +100,35 @@ class SnapshotWriter:
             json.dump({"chunk": k, "path": path, "ts": time.time()}, f)
         os.replace(tmp, final)  # atomic commit point
 
-    def read(self, spark: SparkSession) -> DataFrame:
+    def read(self, spark: SparkSession, schema: StructType) -> DataFrame:
         """Read only committed chunks.  A committed chunk with no
         directory is legitimately EMPTY (dynamic partition overwrite
-        writes nothing for chunk values absent from the data)."""
+        writes nothing for chunk values absent from the data).
+        ``schema`` is the written frame's schema: given, the read needs
+        no schema-inference job."""
         paths = [p for p in (os.path.join(self.data_dir, f"chunk={k}")
                              for k in sorted(self.committed()))
                  if os.path.isdir(p)]
         if not paths:
             raise FileNotFoundError("no committed chunks")
-        return spark.read.parquet(*paths)
+        return spark.read.schema(schema).parquet(*paths)
 
     def is_complete(self) -> bool:
         return len(self.committed()) == self.chunks
+
+
+@contextmanager
+def _job_description(spark: SparkSession, label: str):
+    """Labels the jobs submitted inside the block with ``label`` as their
+    description, then restores the caller's; the job group is left
+    alone."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def run_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
@@ -117,37 +140,64 @@ def run_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
     overwrite).  ``cfg``: runtime RunConfig (thresholds / disabled rules /
     overrides / business rules), None = defaults.  ``history_dir``: when
     set, this run's metrics row is appended there and the returned info
-    carries the multi-run trend report (drift.trend_report)."""
+    carries the multi-run trend report (drift.trend_report).
+
+    After the chunked write the output is read back (with the result's
+    schema, so no inference job) and scanned twice: once for the lineage
+    explode and once for ``metrics_by_partition``.  The global ``metrics``
+    row is observed on that per-partition pass (``DataFrame.observe``, the
+    same aggregate list) instead of a third scan, and written as a
+    one-row frame of typed literals.  The re-read covers every committed
+    chunk, so after a resume the row still counts all rows.  Its partial
+    sums merge in task completion order: ``avg_score`` and
+    ``weighted_score`` are bit-stable while every ``score * weight`` term
+    is an exact binary fraction (integer or half-point deductions, at most
+    one missing null-tracked field).  With AQE a run is 11 Spark jobs at
+    four chunks; the write, lineage, metrics_by_partition and metrics jobs
+    carry those names as their job description."""
+    from pyspark.sql import Observation
     from qualityspark.pipeline import audit, RESULT_COLUMNS
-    from qualityspark.scoring import (lineage_table, metrics_table,
-                                      metrics_by_partition)
+    from qualityspark.scoring import (_metric_aggs, lineage_table,
+                                      metrics_by_partition, sql_lit)
 
     writer = SnapshotWriter(out_dir, chunks)
     result = audit(pages, cfg=cfg).select(*RESULT_COLUMNS)
-    writer.write(result, fail_after=fail_after)
-    audited = writer.read(spark)
+    with _job_description(spark, "write"):
+        writer.write(result, fail_after=fail_after)
+    audited = writer.read(spark, result.schema)
     # per-partition tables (north_rule): the chunk key is a pure function
     # of (url, warc_ts), so it reconstructs identically from the committed
     # rows — no need to have persisted it
-    aud_chunk = audited.withColumn("_chunk", writer.chunk_col())
-    (lineage_table(audited, cfg=cfg)
-     .withColumn("_chunk", writer.chunk_col())
-     .write.mode("overwrite").partitionBy("_chunk")
-     .parquet(os.path.join(out_dir, "lineage")))
-    metrics = metrics_table(audited, run_id, cfg=cfg)
-    metrics.write.mode("overwrite").parquet(os.path.join(out_dir,
-                                                         "metrics"))
-    metrics_by_partition(aud_chunk, run_id=run_id, cfg=cfg) \
-        .write.mode("overwrite").parquet(
+    with _job_description(spark, "lineage"):
+        (lineage_table(audited, cfg=cfg)
+         .withColumn("_chunk", writer.chunk_col())
+         .write.mode("overwrite").partitionBy("_chunk")
+         .parquet(os.path.join(out_dir, "lineage")))
+    observed = Observation("metrics")
+    aggs = map(F.expr, _metric_aggs(audited, cfg=cfg))
+    aud_chunk = (audited.withColumn("_chunk", writer.chunk_col())
+                 .observe(observed, *aggs))
+    by_part = metrics_by_partition(aud_chunk, run_id=run_id, cfg=cfg)
+    with _job_description(spark, "metrics_by_partition"):
+        by_part.write.mode("overwrite").parquet(
             os.path.join(out_dir, "metrics_by_partition"))
+    # the observed row as a one-row JVM-side frame of exact typed literals
+    # (createDataFrame from a Python row would run a Python-worker task)
+    row = observed.get
+    metrics = (spark.range(0, 1, 1, 1).selectExpr(*[
+        f"CAST({sql_lit(row[f.name])} AS {f.dataType.simpleString()}) "
+        f"AS `{f.name}`" for f in by_part.schema.fields
+        if f.name not in ("_chunk", "run_id")])
+        .withColumn("run_id", F.lit(run_id)))
+    with _job_description(spark, "metrics"):
+        metrics.write.mode("overwrite").parquet(os.path.join(out_dir,
+                                                             "metrics"))
     info = {"out_dir": out_dir, "chunks": writer.chunks,
             "committed": len(writer.committed()), "run_id": run_id}
     if history_dir:
         from qualityspark.drift import (append_run_history, run_history,
                                         trend_report)
-        append_run_history(
-            spark.read.parquet(os.path.join(out_dir, "metrics")),
-            history_dir)
+        append_run_history(metrics, history_dir)
         info["trend"] = trend_report(run_history(spark, history_dir))
     from qualityspark.caching import release_caches
     release_caches()    # audit()'s narrow projection is consumed by now

@@ -174,70 +174,73 @@ def with_model_columns(df: DataFrame, cfg=None,
     ``heuristics.signal_columns`` (this reads its ``sig_TEXT_NULL_LIKE``).
     The raw metrics are the textstats definitions (see _model_pass_fn);
     threshold comparisons stay JVM-side against ``cfg``, which retunes
-    every threshold here."""
+    every threshold here.
+
+    The struct-field and threshold columns are one SQL expression each
+    (``scoring.sql_lit`` types the thresholds as ``F.lit`` does): as
+    Column trees they cost a py4j call per ``F.col`` and operator, while
+    the optimized plan is the same text either way.  ``scrubbed_text`` and
+    ``sig_HTML_BINARY_JUNK`` stay Column code (the latter needs a NUL
+    literal)."""
     # signals_from_model accepts only True; kept for the frozen perfbench
     # ladder
     if signals_from_model is not True:
         raise ValueError("with_model_columns: signals_from_model must be True")
     from qualityspark.config import resolve
+    from qualityspark.scoring import sql_lit
     cfg = resolve(cfg)
     df = df.withColumn("_m", model_pass()(F.col("text"), F.col("lang")))
-    not_null = ~F.col("sig_TEXT_NULL_LIKE")
-    n = F.col("_m.n_words")
-    mwl = F.col("_m.mean_word_len")
+    not_null = "(NOT sig_TEXT_NULL_LIKE)"
+
+    def cmp(field, op, param):
+        """``not_null AND (_m.<field> <op> <cfg param>)``."""
+        return F.expr(f"({not_null} AND "
+                      f"(_m.{field} {op} {sql_lit(cfg.param(param))}))")
+
+    langs = ", ".join(sql_lit(lang) for lang in C.ALLOWED_LANGS)
     return df.withColumns({
-        "lang_pred": F.col("_m.lang_pred"),
-        "lang_prob": F.col("_m.lang_prob"),
-        "perplexity": F.col("_m.perplexity"),
+        "lang_pred": F.expr("_m.lang_pred"),
+        "lang_prob": F.expr("_m.lang_prob"),
+        "perplexity": F.expr("_m.perplexity"),
         "scrubbed_text": F.when(F.col("text").isNull(),
                                 F.lit(None).cast("string"))
                           .otherwise(F.coalesce(F.col("_m.scrub_diff"),
                                                 F.col("text"))),
-        "pii_hits": F.col("_m.pii_hits"),
+        "pii_hits": F.expr("_m.pii_hits"),
         "sig_HTML_BINARY_JUNK":
             nul_fraction_expr() > cfg.param("MAX_NUL_FRACTION"),
-        "sig_LANG_MISMATCH":
-            not_null
-            & F.col("lang").isin(*C.ALLOWED_LANGS)
-            & (F.col("_m.lang_pred") != "und")
-            & (F.col("_m.lang_pred") != F.col("lang"))
-            & (F.col("_m.lang_prob") >= cfg.param("MIN_LANG_PROB")),
-        "sig_PERPLEXITY_HIGH":
-            not_null
-            & (F.col("_m.perplexity") > cfg.param("MAX_PERPLEXITY")),
+        "sig_LANG_MISMATCH": F.expr(
+            f"(((({not_null} AND lang IN ({langs})) "
+            f"AND (_m.lang_pred != {sql_lit('und')})) "
+            f"AND (_m.lang_pred != lang)) "
+            f"AND (_m.lang_prob >= {sql_lit(cfg.param('MIN_LANG_PROB'))}))"),
+        "sig_PERPLEXITY_HIGH": cmp("perplexity", ">", "MAX_PERPLEXITY"),
         "sig_REPETITION_HIGH":
-            not_null
-            & (F.col("_m.rep_ratio") > cfg.param("MAX_REPETITION_3GRAM")),
-        **{f"sig_PII_{name}": F.array_contains(F.col("_m.pii_hits"), name)
+            cmp("rep_ratio", ">", "MAX_REPETITION_3GRAM"),
+        **{f"sig_PII_{name}":
+           F.expr(f"array_contains(_m.pii_hits, {sql_lit(name)})")
            for name, _rx, _sev in C.PII_PATTERNS},
-        "_n_words": n,
-        "sig_WORDS_TOO_FEW": not_null & (n < cfg.param("MIN_WORDS")),
-        "sig_WORDS_TOO_MANY": not_null & (n > cfg.param("MAX_WORDS")),
-        "sig_MEAN_WORD_LEN_OOB":
-            not_null & ((mwl < cfg.param("MIN_MEAN_WORD_LEN"))
-                        | (mwl > cfg.param("MAX_MEAN_WORD_LEN"))),
+        "_n_words": F.expr("_m.n_words"),
+        "sig_WORDS_TOO_FEW": cmp("n_words", "<", "MIN_WORDS"),
+        "sig_WORDS_TOO_MANY": cmp("n_words", ">", "MAX_WORDS"),
+        "sig_MEAN_WORD_LEN_OOB": F.expr(
+            f"({not_null} AND ("
+            f"(_m.mean_word_len < {sql_lit(cfg.param('MIN_MEAN_WORD_LEN'))})"
+            f" OR "
+            f"(_m.mean_word_len > {sql_lit(cfg.param('MAX_MEAN_WORD_LEN'))})"
+            f"))"),
         "sig_SYMBOL_WORD_RATIO_HIGH":
-            not_null & (F.col("_m.symbol_ratio")
-                        > cfg.param("MAX_SYMBOL_WORD_RATIO")),
+            cmp("symbol_ratio", ">", "MAX_SYMBOL_WORD_RATIO"),
         "sig_BULLET_LINES_HIGH":
-            not_null & (F.col("_m.bullet_ratio")
-                        > cfg.param("MAX_BULLET_LINE_RATIO")),
+            cmp("bullet_ratio", ">", "MAX_BULLET_LINE_RATIO"),
         "sig_ELLIPSIS_LINES_HIGH":
-            not_null & (F.col("_m.ellipsis_ratio")
-                        > cfg.param("MAX_ELLIPSIS_LINE_RATIO")),
+            cmp("ellipsis_ratio", ">", "MAX_ELLIPSIS_LINE_RATIO"),
         "sig_ALPHA_RATIO_LOW":
-            not_null & (F.col("_m.alpha_ratio")
-                        < cfg.param("MIN_ALPHA_WORD_RATIO")),
+            cmp("alpha_ratio", "<", "MIN_ALPHA_WORD_RATIO"),
         "sig_REQUIRED_STOPWORDS_MISSING":
-            not_null & (F.col("_m.req_hits")
-                        < cfg.param("MIN_REQUIRED_STOPWORDS")),
+            cmp("req_hits", "<", "MIN_REQUIRED_STOPWORDS"),
         "sig_STOPWORD_DENSITY_LOW":
-            not_null & (F.col("_m.stop_density")
-                        < cfg.param("MIN_STOPWORD_DENSITY")),
-        "sig_TOXICITY_HIGH":
-            not_null & (F.col("_m.tox_density")
-                        > cfg.param("MAX_TOXICITY_DENSITY")),
-        "sig_CAPS_RATIO_HIGH":
-            not_null & (F.col("_m.caps_ratio")
-                        > cfg.param("MAX_CAPS_RATIO")),
+            cmp("stop_density", "<", "MIN_STOPWORD_DENSITY"),
+        "sig_TOXICITY_HIGH": cmp("tox_density", ">", "MAX_TOXICITY_DENSITY"),
+        "sig_CAPS_RATIO_HIGH": cmp("caps_ratio", ">", "MAX_CAPS_RATIO"),
     }).drop("_m")

@@ -4,10 +4,14 @@ Mirrors the reference scoring layer (core/scoring_system.py:7-29,66-79:
 deductions CRITICAL 25 / HIGH 10 / MEDIUM 5 / LOW 2, floor 0, grades
 A>=90 B>=75 C>=60 D>=40 F) applied per *document* instead of per column, and
 the keep/drop mapping (data_quality_auditor.py:308-314: any CRITICAL ->
-drop).  Pure Column expressions; no shuffle.
+drop).  No shuffle.  The rule-driven columns and aggregates are built as
+SQL text, one expression per output column (see ``with_scores``).
 """
 
 from __future__ import annotations
+
+import math
+import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,50 +35,98 @@ def with_business_rules(df: DataFrame, cfg=None) -> DataFrame:
         for b in cfg.business_rules})
 
 
-def with_scores(df: DataFrame, cfg=None) -> DataFrame:
-    cfg = resolve(cfg)
+_SQL_NAME = re.compile(r"[A-Z0-9_]+")
+_SQL_WORD = re.compile(r"[A-Za-z0-9_]+")
+
+
+def sql_lit(v) -> str:
+    """``v`` as a Spark SQL literal typed the way ``F.lit`` types it, so a
+    SQL-text builder yields the same plan as the Column form: bool;
+    int -> INT, or BIGINT outside int32 (the parser picks the same);
+    float -> DOUBLE via an exact ``repr`` literal (a bare ``7.5`` parses
+    as DECIMAL), a non-finite one via a CAST the optimizer folds to the
+    same literal; None -> NULL.  Strings are limited to ``[A-Za-z0-9_]+``
+    (rule ids, severities, grades, language codes), so none needs
+    quoting."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return f"({v})" if v < 0 else str(v)
+    if isinstance(v, float):
+        if not math.isfinite(v):
+            return f"CAST('{v}' AS DOUBLE)"
+        return f"({v!r}D)" if math.copysign(1.0, v) < 0 else f"{v!r}D"
+    if isinstance(v, str) and _SQL_WORD.fullmatch(v):
+        return f"'{v}'"
+    raise ValueError(f"no SQL literal for {v!r}")
+
+
+def _sql_rules(cfg) -> list:
+    """``cfg.doc_rules()`` with every rule id and severity asserted to match
+    ``[A-Z0-9_]+``: the SQL builders below interpolate them into column
+    names (``sig_<id>``) and string literals."""
     rules = cfg.doc_rules()
-    penalty = None
     for rule, sev in rules:
-        ded = cfg.deduction(sev)
-        term = F.when(F.col(f"sig_{rule}"), F.lit(ded)).otherwise(F.lit(0))
-        penalty = term if penalty is None else penalty + term
+        if not (_SQL_NAME.fullmatch(rule) and _SQL_NAME.fullmatch(sev)):
+            raise ValueError(f"rule id {rule!r} / severity {sev!r} must "
+                             f"match [A-Z0-9_]+")
+    return rules
 
-    score = F.greatest(F.lit(0.0), F.lit(100.0) - penalty.cast("double"))
 
-    grade = F.lit("F")
+def with_scores(df: DataFrame, cfg=None) -> DataFrame:
+    """Adds ``score``, ``grade``, ``rules_fired`` and ``keep``.  Each is ONE
+    SQL expression string: built as Column trees, every ``F.col`` /
+    ``F.lit`` / ``F.when`` is its own py4j call, ~2,900 per call over the
+    default 40-odd rules.  The text mirrors the Column form term for term
+    (literal types, left-deep chains, operand order), so the optimized
+    plan is text-identical to it."""
+    cfg = resolve(cfg)
+    rules = _sql_rules(cfg)
+    fired = {r: f"coalesce(sig_{r}, false)" for r, _ in rules}
+    # ``a + b + c`` parses left-deep like the Column sum; parenthesising
+    # each of its ~40 levels cost ~1.5 s more in the first (cold) parse
+    penalty = " + ".join(
+        f"CASE WHEN sig_{r} THEN {sql_lit(cfg.deduction(sev))} ELSE 0 END"
+        for r, sev in rules)
+    score = f"greatest(0.0D, (100.0D - CAST({penalty} AS DOUBLE)))"
+
+    grade = sql_lit("F")
     for threshold, g in sorted(C.GRADE_SCALE):  # ascending: last when wins
-        grade = F.when(score >= threshold, F.lit(g)).otherwise(grade)
+        grade = (f"CASE WHEN ({score} >= {sql_lit(threshold)}) "
+                 f"THEN {sql_lit(g)} ELSE {grade} END")
 
-    crit_cols = [F.coalesce(F.col(f"sig_{r}"), F.lit(False))
-                 for r, sev in rules if sev == "CRITICAL"]
-    has_critical = F.lit(False)
-    for c in crit_cols:
-        has_critical = has_critical | c
-
-    rules_fired = F.array_compact(F.array(*[
-        F.when(F.coalesce(F.col(f"sig_{r}"), F.lit(False)), F.lit(r))
-        for r, _ in rules]))
+    # parenthesised left-deep, as the Column ``|`` builds it: Spark's
+    # parser balances a long unparenthesised OR chain
+    has_critical = "false"
+    for r, sev in rules:
+        if sev == "CRITICAL":
+            has_critical = f"({has_critical} OR {fired[r]})"
+    rules_fired = "array_compact(array({}))".format(", ".join(
+        f"CASE WHEN {fired[r]} THEN {sql_lit(r)} END" for r, _ in rules))
+    cutoff = sql_lit(cfg.param("KEEP_SCORE_CUTOFF"))
 
     return df.withColumns({
-        "score": F.round(score, 1),
-        "grade": grade,
-        "rules_fired": rules_fired,
-        "keep": (~has_critical)
-                & (score >= cfg.param("KEEP_SCORE_CUTOFF")),
+        "score": F.expr(f"round({score}, 1)"),
+        "grade": F.expr(grade),
+        "rules_fired": F.expr(rules_fired),
+        "keep": F.expr(f"((NOT {has_critical}) AND ({score} >= {cutoff}))"),
     })
 
 
 def lineage_table(df: DataFrame, cfg=None) -> DataFrame:
     """One row per (url, rule, severity) — the flagged-rows table analog
     (reference core/flagged_rows.py:71-144), derived by exploding the
-    already-computed signals instead of re-deriving masks."""
+    already-computed signals instead of re-deriving masks.  The severity
+    map is one ``map(...)`` SQL literal rather than two ``F.lit`` calls
+    per rule; the optimized plan is the same."""
     cfg = resolve(cfg)
-    sev_map = F.create_map(*[x for r, s in cfg.doc_rules()
-                             for x in (F.lit(r), F.lit(s))])
+    sev_map = "map({})".format(", ".join(
+        f"{sql_lit(r)}, {sql_lit(s)}" for r, s in _sql_rules(cfg)))
     return (df.select("url", "warc_ts",
                       F.explode("rules_fired").alias("rule"))
-            .withColumn("severity", sev_map[F.col("rule")]))
+            .withColumn("severity", F.expr(f"{sev_map}[rule]")))
 
 
 def dataset_score(column_scores: dict, null_pcts: dict,
@@ -100,28 +152,48 @@ _NULL_FIELD_RULES = ("TEXT_NULL_LIKE", "URL_NULL", "TS_NULL")
 
 
 def _metric_aggs(df: DataFrame, cfg=None) -> list:
-    """Shared aggregate list for corpus-level and per-partition metrics."""
+    """SQL text of the aggregate list shared by corpus-level and
+    per-partition metrics, and by the metrics ``io.run_resumable``
+    observes on its per-partition pass.  Written term for term like the
+    Column form it replaces (which cost ~2,100 py4j calls per list), so
+    the optimized plans are unchanged."""
     cfg = resolve(cfg)
+    rules = _sql_rules(cfg)
     has_sigs = any(c.startswith("sig_") for c in df.columns)
 
     def fired(rule):
         if has_sigs:
-            return F.coalesce(F.col(f"sig_{rule}"), F.lit(False))
+            return f"coalesce(sig_{rule}, false)"
         # re-read audited table carries only the rules_fired array
-        return F.array_contains("rules_fired", rule)
+        return f"array_contains(rules_fired, {sql_lit(rule)})"
 
     null_rules = [r for r in _NULL_FIELD_RULES if cfg.rule_enabled(r)]
-    null_frac = (sum((fired(r).cast("int") for r in null_rules), F.lit(0))
-                 / float(len(null_rules))) if null_rules else F.lit(0.0)
-    w = 1.0 / (1.0 + null_frac)
-    aggs = [F.count(F.lit(1)).alias("n_docs"),
-            F.avg(F.col("keep").cast("double")).alias("keep_rate"),
-            F.avg("score").alias("avg_score"),
-            (F.sum(F.col("score") * w) / F.sum(w))
-            .alias("weighted_score")]
-    for rule, _ in cfg.doc_rules():
-        aggs.append(F.sum(fired(rule).cast("long")).alias(f"n_{rule}"))
+    if null_rules:
+        n_null = " + ".join(["0"] + [f"CAST({fired(r)} AS INT)"
+                                     for r in null_rules])
+        null_frac = f"(({n_null}) / {sql_lit(float(len(null_rules)))})"
+    else:
+        null_frac = sql_lit(0.0)
+    w = f"(1.0D / ({null_frac} + 1.0D))"
+    aggs = ["count(1) AS n_docs",
+            "avg(CAST(keep AS DOUBLE)) AS keep_rate",
+            "avg(score) AS avg_score",
+            f"(sum((score * {w})) / sum({w})) AS weighted_score"]
+    aggs.extend(f"sum(CAST({fired(r)} AS BIGINT)) AS n_{r}"
+                for r, _ in rules)
     return aggs
+
+
+def _aggregate(df: DataFrame, aggs: list, group: str | None,
+               run_id: str) -> DataFrame:
+    """``df`` aggregated by ONE SQL statement (optionally grouped by
+    ``group``), then ``run_id``: a py4j call count that does not grow
+    with the rule count, where ``df.agg`` pays a call per aggregate."""
+    key = f"`{group}`, " if group else ""
+    tail = f" GROUP BY `{group}`" if group else ""
+    sql = f"SELECT {key}{', '.join(aggs)} FROM {{df}}{tail}"
+    return (df.sparkSession.sql(sql, df=df)
+            .withColumn("run_id", F.lit(run_id)))
 
 
 def metrics_table(df: DataFrame, run_id: str = "run0",
@@ -129,8 +201,7 @@ def metrics_table(df: DataFrame, run_id: str = "run0",
     """Corpus-level metrics: per-rule fire counts + rates, keep rate, score
     moments + the reference-weighted dataset score.  One grouped
     aggregation (single shuffle over tiny key space)."""
-    return (df.agg(*_metric_aggs(df, cfg))
-            .withColumn("run_id", F.lit(run_id)))
+    return _aggregate(df, _metric_aggs(df, cfg), None, run_id)
 
 
 def metrics_by_partition(df: DataFrame, partition_col: str = "_chunk",
@@ -141,5 +212,4 @@ def metrics_by_partition(df: DataFrame, partition_col: str = "_chunk",
     committed chunk, so a chunk's quality profile is inspectable without
     touching the others and global metrics are the exact column-wise merge
     (counts sum; rates re-derive from the sums)."""
-    return (df.groupBy(partition_col).agg(*_metric_aggs(df, cfg))
-            .withColumn("run_id", F.lit(run_id)))
+    return _aggregate(df, _metric_aggs(df, cfg), partition_col, run_id)

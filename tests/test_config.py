@@ -198,6 +198,42 @@ def test_scoring_deduction_override(spark, pages_small, oracle_small):
                    _oracle_results(rows, cfg))
 
 
+def test_float_literals_parity(spark, pages_small, oracle_small):
+    """A float deduction, a float keep cutoff and an int where the default
+    is a float: the SQL-text builders type each literal as ``F.lit`` does
+    (7.5 DOUBLE, not DECIMAL; 5000 INT), and scores, keep and rules equal
+    the oracle's."""
+    rows, _ = oracle_small
+    cfg = RunConfig.from_dict({
+        "scoring": {"HIGH": 7.5},
+        "thresholds": {"KEEP_SCORE_CUTOFF": 59.5, "MAX_PERPLEXITY": 5000}})
+    got = _spark_results(pages_small, cfg)
+    assert any(v[0] % 1 for v in got.values())   # a half-point score
+    _assert_parity(got, _oracle_results(rows, cfg))
+
+
+def test_sql_lit_types_like_lit(spark):
+    """Each SQL literal parses to F.lit's type and value, including the
+    int32/int64 boundary and floats a bare decimal would turn DECIMAL.
+    (The infinities are a CAST, nullable until constant folding makes it
+    the same literal, so nullability is not compared.)"""
+    from pyspark.sql import functions as F
+    from qualityspark.scoring import sql_lit
+    vals = [True, False, 0, 7, -3, 2**31 - 1, 2**31, -2**31 - 1, 7.5, 60.0,
+            -0.5, 1e16, 1.5e-07, 5e-324, float("inf"), -float("inf"),
+            "HIGH", None]
+    want = spark.range(1).select(
+        *[F.lit(v).alias(f"c{i}") for i, v in enumerate(vals)])
+    got = spark.range(1).selectExpr(
+        *[f"{sql_lit(v)} AS c{i}" for i, v in enumerate(vals)])
+    assert ([f.dataType for f in got.schema]
+            == [f.dataType for f in want.schema])
+    assert got.first() == want.first()
+    for bad in ("a'b", "", 1j):
+        with pytest.raises(ValueError):
+            sql_lit(bad)
+
+
 def test_business_rule_fires_spark_side(spark, pages_small):
     """A failing assertion fires BIZ_<NAME> with its configured severity;
     a CRITICAL business rule drops the affected docs.  The oracle refuses

@@ -12,6 +12,25 @@ def _table_key(rows):
                   for r in rows)
 
 
+def _rows(spark, path):
+    df = spark.read.parquet(path)
+    return df.columns, sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _jobs_in_group(spark, group, fn):
+    """Runs ``fn`` under job group ``group`` (description ``caller``);
+    returns the group's job ids and the description left afterwards."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "caller")
+    try:
+        fn()
+        after = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group) or [], after
+
+
 def test_crash_and_resume_identical(spark, pages_small, tmp_path):
     single = str(tmp_path / "single")
     resumed = str(tmp_path / "resumed")
@@ -33,6 +52,11 @@ def test_crash_and_resume_identical(spark, pages_small, tmp_path):
     b = spark.read.parquet(f"{resumed}/data").collect()
     assert _table_key(a) == _table_key(b)
     assert len(a) == pages_small.count()
+    # the sinks too: the metrics row observed on the resumed run's
+    # per-partition pass still counts every committed chunk
+    for table in ("metrics", "metrics_by_partition", "lineage"):
+        assert (_rows(spark, f"{single}/{table}")
+                == _rows(spark, f"{resumed}/{table}")), table
 
 
 def test_single_write_job(spark, pages_small, tmp_path):
@@ -85,3 +109,32 @@ def test_per_partition_metrics_merge_to_global(spark, pages_small, tmp_path):
     n_rules_global = (spark.read.parquet(f"{out}/data")
                       .agg(F.sum(F.size("rules_fired"))).first()[0])
     assert lin.count() == n_rules_global
+
+
+def test_run_job_count(spark, pages_small, tmp_path):
+    """The sinks cost one re-read, typed by the written schema and scanned
+    twice: lineage (one job) and metrics_by_partition (two with AQE), with
+    the global metrics row observed on the latter and written as a
+    one-row frame (one job); the write and the audit plan make up the
+    rest."""
+    out = str(tmp_path / "out")
+    ids, _ = _jobs_in_group(
+        spark, "run_job_count",
+        lambda: run_resumable(spark, pages_small, out, chunks=4))
+    assert len(ids) == 11, sorted(ids)
+
+
+def test_run_labels_its_jobs(spark, pages_small, tmp_path):
+    """Every job of a run carries one of four stage descriptions under the
+    caller's job group, and the caller's description is restored."""
+    out = str(tmp_path / "out")
+    ids, after = _jobs_in_group(
+        spark, "run_labels",
+        lambda: run_resumable(spark, pages_small, out, chunks=4))
+    assert after == "caller"
+    store = spark.sparkContext._jsc.sc().statusStore()
+    descs = set()
+    for i in ids:
+        d = store.job(i).description()
+        descs.add(d.get() if d.isDefined() else None)
+    assert descs == {"write", "lineage", "metrics_by_partition", "metrics"}

@@ -93,3 +93,61 @@ def test_lineage_and_metrics(spark):
     assert m["n_docs"] == 1
     assert m["n_URL_MALFORMED"] == 1
     assert m["n_TEXT_NULL_LIKE"] == 0
+
+
+def _py4j_calls(fn) -> int:
+    """py4j commands sent to the JVM while ``fn`` runs, minus the
+    memory/detach commands Python finalizers send at random times."""
+    import py4j.clientserver as cs
+    send = cs.ClientServerConnection.send_command
+    n = [0]
+
+    def counting(conn, command):
+        if not command.startswith("m\n"):
+            n[0] += 1
+        return send(conn, command)
+
+    cs.ClientServerConnection.send_command = counting
+    try:
+        fn()
+    finally:
+        cs.ClientServerConnection.send_command = send
+    return n[0]
+
+
+def test_builder_calls_do_not_grow_with_rules(spark):
+    """with_scores + metrics_table build from SQL text: 20 more business
+    rules lengthen the strings, not the py4j traffic (as Column trees
+    each rule cost ~50 calls in with_scores and ~50 in the aggregates)."""
+    from qualityspark.config import RunConfig
+    biz = RunConfig.from_dict({"business_rules": [
+        {"name": f"r{i}", "assertion": "true"} for i in range(20)]})
+    sigs = [f"sig_{r}" for r, _ in biz.doc_rules()]
+    df = spark.range(1).selectExpr("'u' AS url", "NULL AS warc_ts",
+                                   *[f"false AS {s}" for s in sigs])
+
+    def calls(cfg):
+        return _py4j_calls(lambda: metrics_table(with_scores(df, cfg),
+                                                 cfg=cfg))
+
+    calls(None)     # warm: lazy Python-side imports and JVM class lookups
+    n0, n20 = calls(RunConfig.default()), calls(biz)
+    assert n20 - n0 <= 2, (n0, n20)
+    assert n0 < 60, n0
+
+
+def test_sql_names_asserted(spark):
+    """Rule ids and severities are interpolated into SQL text, so each must
+    match [A-Z0-9_]+; a hand-built RunConfig (which skips validation)
+    carrying another one fails at build time."""
+    import pytest
+    from qualityspark.config import RunConfig
+    df = _mk(spark, [])
+    bad_id = RunConfig(business_rules=({
+        "rule_id": "BIZ_X') OR (true", "name": "x", "assertion": "true",
+        "severity": "HIGH"},))
+    bad_sev = RunConfig(severity_overrides={"URL_NULL": "high"})
+    for cfg in (bad_id, bad_sev):
+        for build in (with_scores, lineage_table, metrics_table):
+            with pytest.raises(ValueError, match=r"\[A-Z0-9_\]\+"):
+                build(df, cfg=cfg)
