@@ -7,8 +7,8 @@ Execution shape (the whole point of the re-staging): the reference runs a
 pandas function per (column, check).  Here the number of Spark JOBS is
 bounded by the check families, not by the column count.  Every
 per-column family runs on the MELTED frame — the columns unpivoted to
-(column, value) rows with explode(create_map(...)) — and aggregates with
-ONE groupBy(column), so the plan stays a handful of fields wide at any
+(column, value) rows by sources.melt — and aggregates with ONE
+groupBy(column), so the plan stays a handful of fields wide at any
 width and every expression stays inside whole-stage codegen:
 
   pass A  — one groupBy(column) job: every column's null/whitespace/
@@ -19,9 +19,11 @@ width and every expression stays inside whole-stage codegen:
   pass C  — one job for modified-Z counts and Levene moments (pass B's
             literals);
   + one groupBy over a row hash for exact duplicate rows;
-  + a fixed handful of jobs shared by ALL categorical columns (value
-    counts for rare / case / imbalance / typo checks, bounded driver
-    collects), and likewise for all date columns and all id columns.
+  + three bounded reads shared by ALL categorical columns (values with
+    rare / imbalance statistics, case-variant groups, typo pairs), one
+    for all date columns and one for all id columns: each is ONE collect
+    of a window-ranked frame, per-column scalars riding as window
+    aggregates (12, 3 and 3 jobs on the 6-column mix fixture).
 
 Severity ladders mirror the reference where published:
   NULL_RATE      -> constants.THRESHOLDS_NULL (universal_checks.py:13)
@@ -42,7 +44,7 @@ from __future__ import annotations
 import math
 import re as _re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from qualityspark import constants as C
@@ -50,6 +52,7 @@ from qualityspark import csv_breadth as B
 from qualityspark import typeinfer as TI
 from qualityspark.config import resolve
 from qualityspark.rules import masks
+from qualityspark.sources import lit_join, melt, quoted_col
 
 _FMT_LADDER = TI.DATE_FORMATS + TI.DATETIME_FORMATS
 
@@ -100,24 +103,19 @@ def _samp(st, key):
 
 def _melted_frame(tv, types, data_cols):
     """(k, pos, c raw-string, dv typed-double, tv typed-timestamp) — the
-    unpivoted view pass A aggregates (see _pass_a_melted).
-    Map-explode keeps NULL values, so every column contributes exactly
-    n_rows pairs (same idiom as csv_breadth._unpivot)."""
-    from qualityspark.sources import quoted_col
-    pairs = []
+    sources.melt view pass A aggregates (see _pass_a_melted)."""
+    vals = {}
     for col in data_cols:
         t = types[col]
         dv = (F.col(f"`{col}_typed`").cast("double") if t in _NUMERIC
               else F.lit(None).cast("double"))
         ts = (F.col(f"`{col}_typed`").cast("timestamp") if t in _DATES
               else F.lit(None).cast("timestamp"))
-        pairs += [F.lit(col),
-                  F.struct(quoted_col(col).alias("c"), dv.alias("dv"),
-                           ts.alias("tv"))]
-    u = tv.select(F.col("_pos").alias("pos"),
-                  F.explode(F.create_map(*pairs)).alias("k", "m"))
-    return u.select("k", "pos", F.col("m.c").alias("c"),
-                    F.col("m.dv").alias("dv"), F.col("m.tv").alias("tv"))
+        vals[col] = F.struct(quoted_col(col).alias("c"), dv.alias("dv"),
+                             ts.alias("tv"))
+    u = melt(tv, vals, F.col("_pos").alias("pos"))
+    return u.select("k", "pos", F.col("v.c").alias("c"),
+                    F.col("v.dv").alias("dv"), F.col("v.tv").alias("tv"))
 
 
 def _pass_a_melted(tv, types, data_cols, date_axis):
@@ -147,7 +145,7 @@ def _pass_a_melted(tv, types, data_cols, date_axis):
             axis_ts.cast("double"), [0.25, 0.75], 10000).alias("::date_q"))
     row = tv.agg(*gl).first().asDict()
     if not data_cols:
-        # create_map() over no columns has no value type to unpivot
+        # melt over no columns has no value type to unpivot
         return row
     u = _melted_frame(tv, types, data_cols)
     c, dv, tvc = F.col("c"), F.col("dv"), F.col("tv")
@@ -295,35 +293,21 @@ def _pass_a_melted(tv, types, data_cols, date_axis):
 
 
 def _melted_numeric(tv, types, stats):
-    """(k, pos, v) over the numeric typed columns pass B/C work on."""
+    """(pos, k, v) over the numeric typed columns pass B/C work on."""
     num_cols = [col for col, t in types.items()
                 if t in _NUMERIC and stats[col].get("n_num")]
     if not num_cols:
         return None, []
-    pairs = []
-    for col in num_cols:
-        pairs += [F.lit(col), F.col(f"`{col}_typed`").cast("double")]
-    u = (tv.select(F.col("_pos").alias("pos"),
-                   F.explode(F.create_map(*pairs)).alias("k", "v")))
+    u = melt(tv, {col: F.col(f"`{col}_typed`").cast("double")
+                  for col in num_cols}, F.col("_pos").alias("pos"))
     return u, num_cols
-
-
-def _lit_join(u, rows, schema):
-    """Broadcast the per-column pass-A/B literals onto the melted frame:
-    an O(1) hash probe per value where a per-column CASE chain would be
-    O(n_cols), interpreted.  A NULL literal gates its aggregate off: a
-    NULL-gated predicate sums to NULL, and the caller's is-not-None
-    filter drops the key, so a check whose literal is missing (no IQR,
-    zero std, ...) reads its absent-key default."""
-    lit_df = u.sparkSession.createDataFrame(rows, schema)
-    return u.join(F.broadcast(lit_df), "k")
 
 
 def _pass_b_melted(tv, types, stats, mid_pos):
     """Pass B: per numeric column the IQR / z-score / VALUE_RANGE outlier
     counts, the MAD, and the per-half moments and medians of the
     split-half hypothesis family, as a `{col}::key` dict (pass A's
-    literals joined per _lit_join; halves split at ``mid_pos``)."""
+    literals joined per sources.lit_join; halves split at ``mid_pos``)."""
     u, num_cols = _melted_numeric(tv, types, stats)
     if u is None:
         return {}
@@ -333,9 +317,9 @@ def _pass_b_melted(tv, types, stats, mid_pos):
         rows.append((col, st.get("q1"), st.get("q3"), st.get("mean"),
                      st.get("std"), st.get("med"), st.get("p001"),
                      st.get("p999")))
-    u = _lit_join(u, rows, "k string, q1 double, q3 double, mean double,"
-                           " std double, med double, p001 double,"
-                           " p999 double")
+    u = lit_join(u, rows, "k string, q1 double, q3 double, mean double,"
+                          " std double, med double, p001 double,"
+                          " p999 double")
     v = F.col("v")
     q1, q3 = F.col("q1"), F.col("q3")
     mean, std, med = F.col("mean"), F.col("std"), F.col("med")
@@ -386,8 +370,8 @@ def _pass_c_melted(tv, types, stats, outliers, mid_pos):
                      outliers.get(f"{col}::mad"),
                      outliers.get(f"{col}::h1_med"),
                      outliers.get(f"{col}::h2_med")))
-    u = _lit_join(u, rows, "k string, med double, mad double,"
-                           " h1_med double, h2_med double")
+    u = lit_join(u, rows, "k string, med double, mad double,"
+                          " h1_med double, h2_med double")
     v = F.col("v")
     med, mad = F.col("med"), F.col("mad")
     modz_ok = med.isNotNull() & mad.isNotNull() & (mad != 0)
@@ -410,14 +394,35 @@ def _pass_c_melted(tv, types, stats, outliers, mid_pos):
     return out
 
 
+def _ranked(df, keep):
+    """ONE collect of the rows of a window-ranked frame that ``keep``
+    selects -> {k: rows in ``rn`` order}.  The order is the rank the plan
+    computed, never a driver-side comparison of values (string collations
+    and timestamps need not sort alike in Python)."""
+    out = {}
+    for r in sorted(df.filter(keep).collect(),
+                    key=lambda r: (r["k"], r["rn"])):
+        out.setdefault(r["k"], []).append(r)
+    return out
+
+
 def _catstats_melted(raw, types, stats):
-    """Every categorical/boolean column's value statistics in ~8 jobs
-    TOTAL, whatever the column count: one melted groupBy(col, value)
-    counts frame, then per-column scalars via one grouped aggregate,
-    bounded samples via per-col row_number windows (ties broken by the
-    value, so samples are deterministic), case-variant groups via
-    groupBy(col, lower(value)), and typo candidates via a broadcast
-    equi-self-join of each column's top-200 repeated categories.
+    """Every categorical/boolean column's value statistics in three
+    bounded reads, whatever the column count: one melted groupBy(col,
+    value) counts frame (persisted: the three reads share it), then
+
+      * ONE window-ranked read of counts ⋈ per-column totals: n_rare and
+        n_unique as window aggregates, keeping the first _CAT_VALUES_CAP
+        values, the top value and the first _CAT_SAMPLE_CAP rare values
+        (ranked by value, the top value's count ties broken by the
+        value, so samples are deterministic);
+      * ONE ranked read of the case-variant groups, groupBy(col,
+        lower(value)), counted by a window;
+      * ONE ranked read of the typo pairs, a broadcast equi-self-join of
+        each column's top-200 repeated categories, counted by a window.
+
+    The collected rows are ordered by the ranks computed in the plan.
+    Measured 12 jobs on the 6-column mix fixture.
 
     Returns {col: {n_rare, rare, n_case_groups, case_samples, values,
     breadth_checks}}.  Only capped samples leave the cluster: a
@@ -429,61 +434,44 @@ def _catstats_melted(raw, types, stats):
     (:144-193: normalized Levenshtein on lowercased values >= 0.85 — the
     local substitute for rapidfuzz's InDel ratio — MEDIUM past 5 pairs)
     ride in ``breadth_checks``."""
-    from pyspark.sql import Window
-    from qualityspark.sources import quoted_col
     cat_cols = [c for c, t in types.items()
                 if t in (TI.CATEGORICAL, TI.BOOLEAN)]
     if not cat_cols:
         return {}
-    pairs = []
-    for col in cat_cols:
-        pairs += [F.lit(col), quoted_col(col)]
-    u = (raw.select(F.explode(F.create_map(*pairs)).alias("k", "c"))
-         .filter(TI._nonempty(F.col("c")))
-         .select("k", F.trim("c").alias("v")))
+    u = (melt(raw, {col: quoted_col(col) for col in cat_cols})
+         .filter(TI._nonempty(F.col("v")))
+         .select("k", F.trim("v").alias("v")))
     counts = (u.groupBy("k", "v").agg(F.count(F.lit(1)).alias("n"))
               .persist())
-    out = {}
+    w_k = Window.partitionBy("k")
+    w_top = w_k.orderBy(F.desc("n"), "v")
     try:
-        tot = raw.sparkSession.createDataFrame(
-            [(c, int(stats[c]["nn"] or 1)) for c in cat_cols],
-            "k string, nn long")
-        j = counts.join(F.broadcast(tot), "k")
-        is_rare = (F.col("n") / F.col("nn")) < 0.005
-        per = {r["k"]: r.asDict() for r in j.groupBy("k").agg(
-            F.sum(is_rare.cast("long")).alias("n_rare"),
-            F.count(F.lit(1)).alias("n_unique")).collect()}
-        w_top = Window.partitionBy("k").orderBy(F.desc("n"), "v")
-        top = {r["k"]: r for r in counts
-               .withColumn("rn", F.row_number().over(w_top))
-               .filter(F.col("rn") == 1).collect()}
-        w_v = Window.partitionBy("k").orderBy("v")
-        rare_s, vals = {}, {}
-        for r in (j.filter(is_rare)
-                  .withColumn("rn", F.row_number().over(w_v))
-                  .filter(F.col("rn") <= _CAT_SAMPLE_CAP)
-                  .orderBy("k", "v").collect()):
-            rare_s.setdefault(r["k"], []).append(r["v"])
-        for r in (counts.withColumn("rn", F.row_number().over(w_v))
-                  .filter(F.col("rn") <= _CAT_VALUES_CAP)
-                  .orderBy("k", "v").collect()):
-            vals.setdefault(r["k"], []).append(r["v"])
+        j = lit_join(counts, [(c, int(stats[c]["nn"] or 1))
+                              for c in cat_cols], "k string, nn long")
+        rare = ((F.col("n") / F.col("nn")) < 0.005).cast("long")
+        # v is unique per k, so the running rare count over w_v (a RANGE
+        # frame) counts rows exactly
+        w_v = w_k.orderBy("v")
+        ranked = _ranked(
+            j.select("k", "v", "n", rare.alias("rare"),
+                     F.sum(rare).over(w_k).alias("n_rare"),
+                     F.count(F.lit(1)).over(w_k).alias("n_unique"),
+                     F.row_number().over(w_v).alias("rn"),
+                     F.row_number().over(w_top).alias("rn_top"),
+                     F.sum(rare).over(w_v).alias("rare_rn")),
+            (F.col("rn") <= _CAT_VALUES_CAP) | (F.col("rn_top") == 1)
+            | ((F.col("rare") == 1)
+               & (F.col("rare_rn") <= _CAT_SAMPLE_CAP)))
         grp = (counts.groupBy("k", F.lower(F.col("v")).alias("lv"))
                .agg(F.countDistinct("v").alias("nv"),
                     F.sort_array(F.collect_set("v")).alias("variants"))
-               .filter(F.col("nv") > 1).persist())
-        try:
-            n_case = {r["k"]: r["cnt"] for r in
-                      grp.groupBy("k").agg(F.count(F.lit(1)).alias("cnt"))
-                      .collect()}
-            w_case = Window.partitionBy("k").orderBy(F.col("variants")[0])
-            case_s = {}
-            for r in (grp.withColumn("rn", F.row_number().over(w_case))
-                      .filter(F.col("rn") <= _CAT_SAMPLE_CAP)
-                      .orderBy("k", F.col("variants")[0]).collect()):
-                case_s.setdefault(r["k"], []).append(list(r["variants"]))
-        finally:
-            grp.unpersist()
+               .filter(F.col("nv") > 1))
+        case_g = _ranked(
+            grp.select("k", "variants",
+                       F.count(F.lit(1)).over(w_k).alias("cnt"),
+                       F.row_number().over(w_k.orderBy(
+                           F.col("variants")[0])).alias("rn")),
+            F.col("rn") <= _CAT_SAMPLE_CAP)
         # typo candidates: per-col top-200 repeated categories self-join
         cats = (counts.filter(F.col("n") > 1)
                 .withColumn("rn", F.row_number().over(w_top))
@@ -496,169 +484,153 @@ def _catstats_melted(raw, types, stats):
         tpairs = (a.join(F.broadcast(b), "k")
                   .filter((F.col("va") < F.col("vb")) & (la != lb))
                   .withColumn("sim", sim)
-                  .filter(F.col("sim") >= 0.85).persist())
-        try:
-            n_typo = {r["k"]: r["cnt"] for r in
-                      tpairs.groupBy("k")
-                      .agg(F.count(F.lit(1)).alias("cnt")).collect()}
-            w_t = Window.partitionBy("k").orderBy(F.desc("sim"),
-                                                  "va", "vb")
-            typo_s = {}
-            for r in (tpairs.withColumn("rn", F.row_number().over(w_t))
-                      .filter(F.col("rn") <= B._SAMPLE_CAP)
-                      .orderBy("k", F.desc("sim"), "va", "vb").collect()):
-                typo_s.setdefault(r["k"], []).append(
-                    f"'{r['va']}' ~ '{r['vb']}' (sim={r['sim']:.2f})")
-        finally:
-            tpairs.unpersist()
+                  .filter(F.col("sim") >= 0.85))
+        typo_g = _ranked(
+            tpairs.select("k", "va", "vb", "sim",
+                          F.count(F.lit(1)).over(w_k).alias("cnt"),
+                          F.row_number().over(w_k.orderBy(
+                              F.desc("sim"), "va", "vb")).alias("rn")),
+            F.col("rn") <= B._SAMPLE_CAP)
     finally:
         counts.unpersist()
+    out = {}
     for col in cat_cols:
         nn = stats[col]["nn"]
-        p = per.get(col) or {"n_rare": 0, "n_unique": 0}
+        rows = ranked.get(col, [])
+        top = next((r for r in rows if r["rn_top"] == 1), None)
+        n_rare = rows[0]["n_rare"] if rows else 0
+        n_unique = rows[0]["n_unique"] if rows else 0
+        cases, typos = case_g.get(col, []), typo_g.get(col, [])
         selected = TI.checks_for_type(types[col])
         checks = []
         if nn:
-            t_ = top.get(col)
-            if t_ is not None and "CLASS_IMBALANCE" in selected:
-                pct = t_["n"] / nn
+            if top is not None and "CLASS_IMBALANCE" in selected:
+                pct = top["n"] / nn
                 sev = ("HIGH" if pct >= 0.95 else
                        "MEDIUM" if pct >= 0.90 else "PASS")
                 checks.append(B._check(
                     "CLASS_IMBALANCE", sev, pct,
-                    f"dominant category '{t_['v']}' = {pct:.1%}"))
+                    f"dominant category '{top['v']}' = {pct:.1%}"))
             if "CARDINALITY_CHANGE" in selected:
-                nu = p["n_unique"]
                 checks.append(B._check(
-                    "CARDINALITY_CHANGE", "INFO", nu,
-                    f"{nu} distinct categories (ratio {nu / nn:.2%})",
+                    "CARDINALITY_CHANGE", "INFO", n_unique,
+                    f"{n_unique} distinct categories "
+                    f"(ratio {n_unique / nn:.2%})",
                     passed_ok=("PASS", "INFO")))
             if "TYPO_CANDIDATES" in selected:
-                np_ = n_typo.get(col, 0)
+                np_ = typos[0]["cnt"] if typos else 0
                 sev = ("MEDIUM" if np_ > 5 else "LOW" if np_ else "PASS")
                 checks.append(B._check(
                     "TYPO_CANDIDATES", sev, np_,
                     f"{np_} candidate typo pair(s) "
                     f"(normalized Levenshtein ≥0.85)",
-                    samples=typo_s.get(col)))
-        out[col] = {"n_rare": int(p["n_rare"]),
-                    "rare": rare_s.get(col, []) if p["n_rare"] else [],
-                    "n_case_groups": n_case.get(col, 0),
-                    "case_samples": case_s.get(col, []),
-                    "values": vals.get(col, []),
+                    samples=[f"'{r['va']}' ~ '{r['vb']}' "
+                             f"(sim={r['sim']:.2f})" for r in typos]))
+        out[col] = {"n_rare": int(n_rare),
+                    "rare": [r["v"] for r in rows if r["rare"]
+                             and r["rare_rn"] <= _CAT_SAMPLE_CAP],
+                    "n_case_groups": cases[0]["cnt"] if cases else 0,
+                    "case_samples": [list(r["variants"]) for r in cases],
+                    "values": [r["v"] for r in rows
+                               if r["rn"] <= _CAT_VALUES_CAP],
                     "breadth_checks": checks}
     return out
 
 
 def _date_values_melted(tv, date_cols):
-    """Distinct-date statistics for every date column in 3 jobs total:
-    melted groupBy(col, value) counts, one per-col summary aggregate, and
-    ONE bounded collect of the sorted distinct values for the columns
-    under the MAX_DATE_DISTINCT driver cap.  Returns {col: (summary,
-    gap)}: summary = {n_date_valid, n_date_distinct, n_dup_dates}, gap =
-    the DATE_SEQUENCE_GAPS check or None."""
+    """Distinct-date statistics for every date column in ONE bounded
+    read: the melted groupBy(col, value) counts, with the per-column
+    summary (nd, nv, ndup) as window aggregates carried on the rows, and
+    the rows kept are each column's first value plus every distinct value
+    of the columns under the MAX_DATE_DISTINCT driver cap, in value rank.
+    Measured 3 jobs on the mix fixture.  Returns {col: (summary, gap)}:
+    summary = {n_date_valid, n_date_distinct, n_dup_dates}, gap = the
+    DATE_SEQUENCE_GAPS check or None."""
     if not date_cols:
         return {}
-    pairs = []
-    for col in date_cols:
-        pairs += [F.lit(col),
-                  F.col(f"`{col}_typed`").cast("timestamp")]
-    u = (tv.select(F.explode(F.create_map(*pairs)).alias("k", "d"))
-         .filter(F.col("d").isNotNull()))
-    g = u.groupBy("k", "d").agg(F.count(F.lit(1)).alias("n")).persist()
+    u = (melt(tv, {col: F.col(f"`{col}_typed`").cast("timestamp")
+                   for col in date_cols})
+         .filter(F.col("v").isNotNull()))
+    g = u.groupBy("k", F.col("v").alias("d")).agg(
+        F.count(F.lit(1)).alias("n"))
+    w = Window.partitionBy("k")
+    per = _ranked(
+        g.select("k", "d", "n",
+                 F.count(F.lit(1)).over(w).alias("nd"),
+                 F.sum("n").over(w).alias("nv"),
+                 F.coalesce(F.sum(F.when(F.col("n") > 1, F.col("n")))
+                            .over(w), F.lit(0)).alias("ndup"),
+                 F.row_number().over(w.orderBy("d")).alias("rn")),
+        (F.col("rn") == 1) | ((F.col("nv") >= 10)
+                              & (F.col("nd") <= B.MAX_DATE_DISTINCT)))
     out = {}
-    try:
-        per = {r["k"]: r for r in g.groupBy("k").agg(
-            F.count(F.lit(1)).alias("nd"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("nv"),
-            F.coalesce(F.sum(F.when(F.col("n") > 1, F.col("n"))),
-                       F.lit(0)).alias("ndup")).collect()}
-        gap_cols = [c for c in date_cols
-                    if c in per and per[c]["nv"] >= 10
-                    and per[c]["nd"] <= B.MAX_DATE_DISTINCT]
-        rows_by_col = {}
-        if gap_cols:
-            for r in (g.filter(F.col("k").isin(*gap_cols))
-                      .orderBy("k", "d").collect()):
-                rows_by_col.setdefault(r["k"], []).append(r)
-        for col in date_cols:
-            s = per.get(col)
-            if s is None:
-                out[col] = ({"n_date_valid": 0, "n_date_distinct": 0,
-                             "n_dup_dates": 0}, None)
-                continue
-            summary = {"n_date_valid": int(s["nv"]),
-                       "n_date_distinct": int(s["nd"]),
-                       "n_dup_dates": int(s["ndup"])}
-            gap = None
-            if s["nv"] >= 10:
-                if s["nd"] > B.MAX_DATE_DISTINCT:
-                    gap = B._check(
-                        "DATE_SEQUENCE_GAPS", "INFO", 0.0,
-                        f"skipped: {s['nd']} distinct timestamps exceed "
-                        f"the {B.MAX_DATE_DISTINCT} driver cap",
-                        passed_ok=("PASS", "INFO"))
-                else:
-                    gap = B._gap_check_from_rows(rows_by_col.get(col, []))
-            out[col] = (summary, gap)
-    finally:
-        g.unpersist()
+    for col in date_cols:
+        rows = per.get(col)
+        if rows is None:
+            out[col] = ({"n_date_valid": 0, "n_date_distinct": 0,
+                         "n_dup_dates": 0}, None)
+            continue
+        s = rows[0]
+        summary = {"n_date_valid": int(s["nv"]),
+                   "n_date_distinct": int(s["nd"]),
+                   "n_dup_dates": int(s["ndup"])}
+        gap = None
+        if s["nv"] >= 10:
+            if s["nd"] > B.MAX_DATE_DISTINCT:
+                gap = B._check(
+                    "DATE_SEQUENCE_GAPS", "INFO", 0.0,
+                    f"skipped: {s['nd']} distinct timestamps exceed "
+                    f"the {B.MAX_DATE_DISTINCT} driver cap",
+                    passed_ok=("PASS", "INFO"))
+            else:
+                gap = B._gap_check_from_rows(rows)
+        out[col] = (summary, gap)
     return out
 
 
 def _id_formats_melted(raw, id_cols):
     """ID_FORMAT_CONSISTENCY (id_checks.py:41-98) for every id column in
-    2 jobs: melted groupBy(col, char-class fingerprint) + one per-col
-    summary, top-5 patterns via a per-col window.  The reference samples
-    1000 rows; this aggregates the FULL column.  Returns {col: check |
-    None}."""
-    from pyspark.sql import Window
-    from qualityspark.rules import masks as M
-    from qualityspark.sources import quoted_col
+    ONE bounded read: melted groupBy(col, char-class fingerprint) counts,
+    n_patterns and total as window aggregates, the top-5 patterns kept by
+    a per-col rank.  Measured 3 jobs on the mix fixture.  The reference
+    samples 1000 rows; this aggregates the FULL column.  Returns {col:
+    check | None}."""
     if not id_cols:
         return {}
-    pairs = []
-    for col in id_cols:
-        pairs += [F.lit(col), quoted_col(col)]
-    u = (raw.select(F.explode(F.create_map(*pairs)).alias("k", "c"))
-         .filter(TI._nonempty(F.col("c"))))
-    g = (u.groupBy("k", M.id_fingerprint(F.col("c")).alias("fp"))
+    u = (melt(raw, {col: quoted_col(col) for col in id_cols})
+         .filter(TI._nonempty(F.col("v"))))
+    g = (u.groupBy("k", masks.id_fingerprint(F.col("v")).alias("fp"))
          .agg(F.count(F.lit(1)).alias("n"),
-              F.min(F.trim(F.col("c"))).alias("sample"))
-         .persist())
+              F.min(F.trim(F.col("v"))).alias("sample")))
+    w = Window.partitionBy("k")
+    tops = _ranked(
+        g.select("k", "fp", "n", "sample",
+                 F.count(F.lit(1)).over(w).alias("n_patterns"),
+                 F.sum("n").over(w).alias("total"),
+                 F.row_number().over(w.orderBy(F.desc("n"), "fp"))
+                 .alias("rn")),
+        F.col("rn") <= 5)
     out = {}
-    try:
-        per = {r["k"]: r for r in g.groupBy("k").agg(
-            F.count(F.lit(1)).alias("n_patterns"),
-            F.sum("n").alias("total")).collect()}
-        w = Window.partitionBy("k").orderBy(F.desc("n"), "fp")
-        tops = {}
-        for r in (g.withColumn("rn", F.row_number().over(w))
-                  .filter(F.col("rn") <= 5)
-                  .orderBy("k", F.desc("n"), "fp").collect()):
-            tops.setdefault(r["k"], []).append(r)
-        for col in id_cols:
-            s, top = per.get(col), tops.get(col)
-            if not s or not top or s["total"] < 10:
-                out[col] = None
-                continue
-            n_patterns, total = s["n_patterns"], s["total"]
-            dominant_pct = top[0]["n"] / total
-            if dominant_pct < 0.80 and n_patterns > 3:
-                sev = "HIGH"
-            elif dominant_pct < 0.90:
-                sev = "MEDIUM"
-            elif n_patterns > 2:
-                sev = "LOW"
-            else:
-                sev = "PASS"
-            out[col] = B._check(
-                "ID_FORMAT_CONSISTENCY", sev, dominant_pct,
-                f"{n_patterns} format patterns "
-                f"(dominant '{top[0]['fp']}' {dominant_pct:.1%})",
-                samples=[r["sample"] for r in top[1:4]])
-    finally:
-        g.unpersist()
+    for col in id_cols:
+        top = tops.get(col)
+        if not top or top[0]["total"] < 10:
+            out[col] = None
+            continue
+        n_patterns, total = top[0]["n_patterns"], top[0]["total"]
+        dominant_pct = top[0]["n"] / total
+        if dominant_pct < 0.80 and n_patterns > 3:
+            sev = "HIGH"
+        elif dominant_pct < 0.90:
+            sev = "MEDIUM"
+        elif n_patterns > 2:
+            sev = "LOW"
+        else:
+            sev = "PASS"
+        out[col] = B._check(
+            "ID_FORMAT_CONSISTENCY", sev, dominant_pct,
+            f"{n_patterns} format patterns "
+            f"(dominant '{top[0]['fp']}' {dominant_pct:.1%})",
+            samples=[r["sample"] for r in top[1:4]])
     return out
 
 

@@ -6,7 +6,7 @@ families (cross-column, null patterns, PII, temporal).
 Reference semantics per check are cited inline (checks/*.py of the
 reference repo).  Execution shape — the job count stays O(1) in COLUMN
 WIDTH: each per-column family unpivots the columns it reads to (col,
-value) rows (explode(create_map(...))) and aggregates with one groupBy
+value) rows (sources.melt) and aggregates with one groupBy
 keyed on the column, so the plan stays a few fields wide at any width
 and never meets the codegen maxFields cliff a 1000-column single
 aggregate would hit.  The same shape runs csv_audit's passes A/B/C and
@@ -58,7 +58,7 @@ from qualityspark import constants as C
 from qualityspark import statsx
 from qualityspark import typeinfer as TI
 from qualityspark.rules import masks as M
-from qualityspark.sources import quoted_col
+from qualityspark.sources import lit_join, melt, quoted_col
 
 ALPHA = 0.05                 # reference hypothesis_checks.py:21
 _SAMPLE_CAP = 5
@@ -101,14 +101,6 @@ def _check(check_id, severity, value, detail="", samples=None,
 # Stacked pass S1: per-string-column mask counts in ONE unpivoted job
 # =========================================================================
 
-def _unpivot(df: DataFrame, cols: list[str]) -> DataFrame:
-    """(k, v) rows: one per (column, row), v the raw string value."""
-    pairs = []
-    for col in cols:
-        pairs += [F.lit(col), quoted_col(col).cast("string")]
-    return df.select(F.explode(F.create_map(*pairs)).alias("k", "v"))
-
-
 def stacked_pass1(raw: DataFrame, cols: list[str]) -> dict[str, dict]:
     """One job over the unpivoted frame: null-like / encoding / ellipsis /
     PII counts + bounded min/max samples + length quantiles per column.
@@ -116,7 +108,7 @@ def stacked_pass1(raw: DataFrame, cols: list[str]) -> dict[str, dict]:
     pii_checks.py:62-117 (PII scans EVERY column, dataset-level)."""
     if not cols:
         return {}
-    u = _unpivot(raw, cols)
+    u = melt(raw, {c: quoted_col(c).cast("string") for c in cols})
     v = F.col("v")
     s = F.trim(v)
     ne = v.isNotNull() & (s != "")
@@ -142,8 +134,10 @@ def stacked_pass1(raw: DataFrame, cols: list[str]) -> dict[str, dict]:
     for name, mask in M.pii_masks(v).items():
         aggs += [F.sum(mask.cast("long")).alias(f"pii_{name}"),
                  F.min(F.when(mask, s)).alias(f"pii_s_{name}")]
-    rows = u.groupBy("k").agg(*aggs).collect()
-    return {r["k"]: r.asDict() for r in rows}
+    by_k = {r["k"]: r.asDict() for r in u.groupBy("k").agg(*aggs).collect()}
+    # in ``cols`` order, not collect order: pii_dataset_checks walks it,
+    # and the collect order follows spark.sql.shuffle.partitions
+    return {col: by_k[col] for col in cols if col in by_k}
 
 
 def stacked_pass2(raw: DataFrame, cols: list[str],
@@ -164,16 +158,14 @@ def stacked_pass2(raw: DataFrame, cols: list[str],
                      float(lq3)))
     if not work:
         return {}
-    u = _unpivot(raw, [w[0] for w in work])
-    # per-column literals ride a BROADCAST JOIN on k (an O(1) hash probe
-    # per value) — the previous per-column CASE chains were O(n_cols)
-    # per value, interpreted: measured 73 s at 300 cols x 20k rows for
-    # this pass alone, 6 s with the join
-    lit_df = raw.sparkSession.createDataFrame(
-        [(w[0], float(w[1]), float(w[2]), float(w[3]), float(w[4]))
-         for w in work],
-        "k string, max_len double, lq1 double, lmed double, lq3 double")
-    u = u.join(F.broadcast(lit_df), "k")
+    u = melt(raw, {w[0]: quoted_col(w[0]).cast("string") for w in work})
+    # per-column literals ride sources.lit_join — the previous per-column
+    # CASE chains were O(n_cols) per value, interpreted: measured 73 s at
+    # 300 cols x 20k rows for this pass alone, 6 s with the join
+    u = lit_join(u, [(w[0], float(w[1]), float(w[2]), float(w[3]),
+                      float(w[4])) for w in work],
+                 "k string, max_len double, lq1 double, lmed double,"
+                 " lq3 double")
     v, k = F.col("v"), F.col("k")
     s = F.trim(v)
     ne = v.isNotNull() & (s != "")
@@ -434,25 +426,21 @@ def ks_pass(tv: DataFrame, types: dict, stats: dict,
             elig.append((col, float(st["mean"]), float(st["std"])))
     if not elig:
         return {}
-    pairs = []
+    buckets = {}
     for col, mu, sd in elig:
         z = (F.col(f"`{col}_typed`") - mu) / sd
-        b = F.least(F.greatest(F.floor(z * KS_BUCKET_SCALE),
-                               F.lit(-KS_BUCKET_CLAMP - 1)),
-                    F.lit(KS_BUCKET_CLAMP)).cast("int")
-        pairs += [F.lit(col), b]
-    sel = [F.explode(F.create_map(*pairs)).alias("k", "b")]
+        buckets[col] = F.least(F.greatest(F.floor(z * KS_BUCKET_SCALE),
+                                          F.lit(-KS_BUCKET_CLAMP - 1)),
+                               F.lit(KS_BUCKET_CLAMP)).cast("int")
+    qt = F.lit(0)
     if date_axis and date_q:
         q1_ts, q3_ts = float(date_q[0]), float(date_q[1])
         # epoch-second boundaries from pass A's percentile sketch
         d = F.col(f"`{date_axis}_typed`").cast("timestamp").cast("double")
         qt = (F.when(d <= q1_ts, 1).when(d >= q3_ts, 4).otherwise(0))
-        sel.append(qt.alias("qt"))
-    else:
-        sel.append(F.lit(0).alias("qt"))
-    rows = (tv.select(*sel).filter(F.col("b").isNotNull())
-            .groupBy("k", "qt", "b").agg(F.count(F.lit(1)).alias("n"))
-            .collect())
+    rows = (melt(tv, buckets, qt.alias("qt")).filter(F.col("v").isNotNull())
+            .groupBy("k", "qt", F.col("v").alias("b"))
+            .agg(F.count(F.lit(1)).alias("n")).collect())
     by_col: dict[str, dict[int, dict[int, int]]] = {}
     for r in rows:
         by_col.setdefault(r["k"], {}).setdefault(r["qt"], {})[r["b"]] = \
@@ -599,15 +587,12 @@ def monotonicity_melted(tv: DataFrame, date_cols: list[str]) -> dict:
     per-partition (first, last) list."""
     if not date_cols:
         return {}
-    pairs = []
-    for col in date_cols:
-        pairs += [F.lit(col), F.col(f"`{col}_typed`").cast("timestamp")]
-    u = (tv.select(F.spark_partition_id().alias("pid"),
-                   F.col("_pos").alias("pos"),
-                   F.explode(F.create_map(*pairs)).alias("k", "d")))
+    u = melt(tv, {col: F.col(f"`{col}_typed`").cast("timestamp")
+                  for col in date_cols},
+             F.spark_partition_id().alias("pid"), F.col("_pos").alias("pos"))
     w = (Window.partitionBy("k", "pid").orderBy("pos")
          .rowsBetween(Window.unboundedPreceding, -1))
-    d = F.col("d")
+    d = F.col("v")
     prev = F.last(d, ignorenulls=True).over(w)
     rows = (u.withColumn("iv", (d.isNotNull() & prev.isNotNull()
                                 & (d < prev)).cast("long"))
@@ -1072,19 +1057,17 @@ def temporal_pass(tv: DataFrame, types: dict, stats: dict, axis: str,
     num_cols = [c for c in other_cols if types[c] in _NUMERIC
                 and (stats.get(c) or {}).get("n_num")]
     num_set = set(num_cols)
-    pairs = []
+    vals = {}
     for c in other_cols:
         dv = (F.col(f"`{c}_typed`").cast("double") if c in num_set
               else F.lit(None).cast("double"))
-        pairs += [F.lit(c), F.struct(
+        vals[c] = F.struct(
             M.nullish_mask(quoted_col(c)).cast("double").alias("nl"),
-            dv.alias("dv"))]
-    u = (tv.filter(d.isNotNull())
-         .select(per.alias("per"),
-                 F.explode(F.create_map(*pairs)).alias("k", "m")))
+            dv.alias("dv"))
+    u = melt(tv.filter(d.isNotNull()), vals, per.alias("per"))
     g = (u.groupBy("per", "k")
-         .agg(F.avg("m.nl").alias("nullrate"),
-              F.avg("m.dv").alias("mean")).collect())
+         .agg(F.avg("v.nl").alias("nullrate"),
+              F.avg("v.dv").alias("mean")).collect())
     by_per: dict = {}
     for r in g:
         row_d = by_per.setdefault(r["per"], {"::per": r["per"]})

@@ -3994,11 +3994,11 @@ def audit_breadth_masks(spark, sf_dir):
     pii_docs_scan, the numeric breadth rides outlier_modified_z /
     value_range_extremes, the cross-column families ride corr_matrix /
     vif_closed_form / null_*_probe / mcar_probe."""
-    from qualityspark.csv_breadth import _unpivot
     from qualityspark.rules import masks as M
+    from qualityspark.sources import melt
 
     d = _t(spark, sf_dir, "documents").select("lang", "source", "text")
-    u = _unpivot(d, ["lang", "source", "text"])
+    u = melt(d, {c: F.col(c).cast("string") for c in d.columns})
     v = F.col("v")
     s = F.trim(v)
     ne = v.isNotNull() & (s != "")

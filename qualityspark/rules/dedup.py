@@ -91,7 +91,6 @@ def _dup_flag_table(narrow: DataFrame,
 
 def with_dedup_flags(df: DataFrame,
                      narrow: DataFrame | None = None,
-                     broadcast_flags: bool = True,
                      tiebreaker: str | None = None) -> DataFrame:
     """sig_TEXT_EXACT_DUPLICATE via sha2(text,256) key (hash, not full text,
     crosses the wire); sig_URL_DUPLICATE via url.  Expects a ``text_sha``
@@ -107,13 +106,11 @@ def with_dedup_flags(df: DataFrame,
     over df's plan); callers on a non-trivial df should pass a cached
     narrow projection as pipeline.audit does (r3 ADVICE).
 
-    ``broadcast_flags``: broadcast the flagged-triple table into the
-    join-back so the wide corpus rows never shuffle (AQE does not convert
-    the null-safe-equality SMJ on its own).  Correct default for web
-    corpora where the flagged set is the duplicate TAIL (non-first copies
-    only); set False when the duplicate fraction is so high the tail
-    exceeds executor memory — the join then degrades to a sort-merge
-    shuffle, which is the unavoidable classical dedup cost.
+    The flagged-triple table is broadcast into the join-back so the wide
+    corpus rows never shuffle (AQE does not convert the null-safe-equality
+    SMJ on its own).  The flagged set is the duplicate TAIL (non-first
+    copies only), small for web corpora; a corpus whose tail exceeds
+    executor memory needs a sort-merge join-back instead.
 
     ``tiebreaker``: name of a unique-per-row ingest column (see module
     docstring tie caveat).  Auto-detected: an ``ingest_id`` column on
@@ -134,9 +131,8 @@ def with_dedup_flags(df: DataFrame,
     for c in key_cols:
         e = F.col(c).eqNullSafe(F.col(f"_f_{c}"))
         cond = e if cond is None else (cond & e)
-    if broadcast_flags:
-        flags = F.broadcast(flags)
-    out = df.join(flags, cond, "left").drop(*[f"_f_{c}" for c in key_cols])
+    out = (df.join(F.broadcast(flags), cond, "left")
+           .drop(*[f"_f_{c}" for c in key_cols]))
     return (out.withColumn(
                 "sig_TEXT_EXACT_DUPLICATE",
                 F.coalesce(F.col("_fb_sha"), F.lit(False))

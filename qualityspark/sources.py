@@ -91,3 +91,26 @@ def quoted_col(name: str) -> F.Column:
     """F.col with backtick quoting (embedded backticks doubled) — resolves
     any header as a top-level column, never as a nested-field path."""
     return F.col("`" + name.replace("`", "``") + "`")
+
+
+def melt(df: DataFrame, values: dict[str, F.Column], *keep) -> DataFrame:
+    """The unpivot every per-column audit family aggregates: ``keep`` plus
+    (k, v) rows, k a key of ``values`` and v its expression.  Map-explode
+    keeps NULL values, so each key yields exactly one row per input row,
+    and the plan stays a few fields wide at any column count, so every
+    expression stays inside whole-stage codegen."""
+    pairs = []
+    for k, v in values.items():
+        pairs += [F.lit(k), v]
+    return df.select(*keep, F.explode(F.create_map(*pairs)).alias("k", "v"))
+
+
+def lit_join(df: DataFrame, rows: list[tuple], schema: str) -> DataFrame:
+    """Broadcast a per-column literal table (keyed ``k``) onto a melted
+    frame: an O(1) hash probe per value where a per-column CASE chain
+    would be O(n_cols), interpreted.  A NULL literal gates its aggregate
+    off: a NULL-gated predicate sums to NULL, and the caller's
+    is-not-None filter drops the key, so a check whose literal is missing
+    (no IQR, zero std, ...) reads its absent-key default."""
+    lit_df = df.sparkSession.createDataFrame(rows, schema)
+    return df.join(F.broadcast(lit_df), "k")

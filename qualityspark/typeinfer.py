@@ -135,9 +135,9 @@ _STAT_KEYS = ["n_rows", "n_nonnull", "n_unique", "n_bool", "n_num",
 def column_stats(df: DataFrame, exact: bool = False):
     """ONE groupBy(column) job -> {col: stats dict}.  See module docstring.
 
-    The columns are unpivoted with explode(create_map(col -> value)), so
-    the plan is ~5 fields wide no matter how many columns the table has
-    and every expression stays inside whole-stage codegen.  The
+    The columns are unpivoted with sources.melt, so the plan is ~5
+    fields wide no matter how many columns the table has and every
+    expression stays inside whole-stage codegen.  The
     date-parse cascade (the expensive per-row expression: up to 11
     try_to_timestamp attempts) is projected ONCE per (row, column) as a
     first-matching-format index beneath the aggregate;
@@ -146,18 +146,15 @@ def column_stats(df: DataFrame, exact: bool = False):
     the one index: ladder segments are disjoint (a date-only format
     match can never also parse a time-suffixed format and vice versa —
     Spark format parsing is full-match), pinned by test_r6_perf.py.
-    Map-explode keeps NULL values, so per-column row counts equal the
-    frame's row count.  One shuffle keyed on the column name: 13 partial
+    melt keeps NULL values, so per-column row counts equal the frame's
+    row count.  One shuffle keyed on the column name: 13 partial
     aggregates per (column, input task), the melt shape that survives a
-    1000-column 100-TB table (same idiom as csv_breadth.stacked_pass1)."""
+    1000-column 100-TB table."""
     from qualityspark.rules import masks as _masks
-    from qualityspark.sources import quoted_col
+    from qualityspark.sources import melt, quoted_col
 
     src_cols = list(df.columns)
-    pairs = []
-    for col in src_cols:
-        pairs += [F.lit(col), quoted_col(col)]
-    u = df.select(F.explode(F.create_map(*pairs)).alias("k", "v"))
+    u = melt(df, {col: quoted_col(col) for col in src_cols})
     c = F.col("v")
     val = F.when(_nonempty(c), _stripped(c))
     proj = u.select(

@@ -125,6 +125,63 @@ def test_temporal_axis(breadth_report):
     assert "KS_GOODNESS_FIT" in ids
 
 
+def _without_input(rep):
+    return {k: v for k, v in rep.items() if k != "input"}
+
+
+def test_breadth_report_golden(breadth_report, golden):
+    """The dirty fixture's full report is frozen in
+    tests/data/breadth_audit_report.json (``input`` left out: it names
+    the temporary path).  It covers what the mix golden does not: typo
+    pairs, rare-value samples, id-format patterns and PII on several
+    columns, so it pins the order of every ranked sample."""
+    golden("breadth_audit_report", _without_input(breadth_report))
+
+
+def test_report_independent_of_shuffle_partitions(spark, breadth_report,
+                                                  tmp_path):
+    """The same CSV audited at another spark.sql.shuffle.partitions gives
+    the same report: no family hands the report assembly a result in
+    groupBy collect order (PII_DETECTED entries once followed it)."""
+    p = tmp_path / "dirty.csv"
+    _dirty_csv(p)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        rep = audit_csv(spark, str(p))
+    finally:
+        spark.conf.set(key, before)
+    assert before != "3"
+    assert _without_input(rep) == _without_input(breadth_report)
+
+
+def test_family_job_counts(spark, tmp_path):
+    """The categorical, date-value and id-format families each read their
+    bounded result in one collect from a window-ranked frame: on the mix
+    fixture they submit at most 12, 3 and 3 jobs, counted by the family
+    name parallel.submit sets as job description."""
+    from collections import Counter
+    from test_r6_perf import _mix_csv
+    p = tmp_path / "mix.csv"
+    _mix_csv(p)
+    sc = spark.sparkContext
+    sc.setJobGroup("family_job_counts", "caller")
+    try:
+        audit_csv(spark, str(p))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()
+    jobs = Counter()
+    for i in sc.statusTracker().getJobIdsForGroup("family_job_counts"):
+        d = store.job(i).description()
+        jobs[d.get() if d.isDefined() else None] += 1
+    assert jobs["cats"] <= 12, jobs
+    assert jobs["datevals"] <= 3, jobs
+    assert jobs["idfmt"] <= 3, jobs
+
+
 def test_date_col_override(spark, tmp_path):
     """--date-col names the axis; an unknown/non-date name disables the
     temporal family instead of crashing (reference --date-col contract,

@@ -120,22 +120,3 @@ def test_url_dup_null_ts_last(spark):
            for r in with_dedup_flags(_df(spark, rows)).collect()}
     # the row WITH a timestamp is first (nulls last), so it survives
     assert res == {"x2": False, "x1": True}
-
-
-def test_sortmerge_fallback_same_answer(spark):
-    """broadcast_flags=False (the documented high-duplicate-fraction
-    fallback: flag table too big to broadcast) degrades the join-back to
-    sort-merge but must produce the identical answer."""
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [("https://a.example.org/%d" % (i % 5), t0 + dt.timedelta(i),
-             "body %d" % (i % 7)) for i in range(40)]
-    df = _df(spark, rows)
-    a = sorted((r["url"], str(r["warc_ts"]), r["sig_TEXT_EXACT_DUPLICATE"],
-                r["sig_URL_DUPLICATE"])
-               for r in with_dedup_flags(df).collect())
-    b = sorted((r["url"], str(r["warc_ts"]), r["sig_TEXT_EXACT_DUPLICATE"],
-                r["sig_URL_DUPLICATE"])
-               for r in with_dedup_flags(df, broadcast_flags=False)
-               .collect())
-    assert a == b
-    assert sum(1 for x in a if x[2]) > 0      # duplicates actually exist
