@@ -22,10 +22,12 @@ offline here, reference: Iceberg docs):
   recomputed — correctness comes from determinism, progress from skipping
   committed writes, which is where the bytes (and the time) are;
 * the sinks read the committed chunks back once, with the written schema
-  (no inference job), and scan them twice: the lineage explode, and
-  ``metrics_by_partition`` with the global metrics row observed on the
-  same pass.  A run at four chunks is 11 Spark jobs with AQE, each labelled
-  by ``run_resumable`` with its stage as the job description.
+  (no inference job), coalesced to one task per core, and scan them
+  twice: the lineage explode, and ``metrics_by_partition`` with the global
+  metrics row observed on the same pass.  A run at four chunks is 11
+  Spark jobs with AQE (10 on one core, where the per-chunk grouping needs
+  no shuffle), each labelled by ``run_resumable`` with its stage as the
+  job description.
 """
 
 from __future__ import annotations
@@ -144,17 +146,23 @@ def run_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
 
     After the chunked write the output is read back (with the result's
     schema, so no inference job) and scanned twice: once for the lineage
-    explode and once for ``metrics_by_partition``.  The global ``metrics``
+    explode and once for ``metrics_by_partition``.  Under fine scan
+    splits (``bench.py``'s 1 MiB) the re-read has a split per written file
+    (write tasks x chunks); it is coalesced to ``defaultParallelism`` (no
+    shuffle), so each scan runs at most one task per core and the lineage
+    sink writes at most that many files per chunk.  The global ``metrics``
     row is observed on that per-partition pass (``DataFrame.observe``, the
-    same aggregate list) instead of a third scan, and written as a
-    one-row frame of typed literals.  The re-read covers every committed
-    chunk, so after a resume the row still counts all rows.  Its partial
-    sums merge in task completion order: ``avg_score`` and
+    same aggregate list) instead of a third scan, and written as a one-row
+    frame of typed literals.  The re-read covers every committed chunk, so
+    after a resume the row still counts all rows.  Its partial sums merge
+    in task completion order: ``avg_score`` and
     ``weighted_score`` are bit-stable while every ``score * weight`` term
     is an exact binary fraction (integer or half-point deductions, at most
     one missing null-tracked field).  With AQE a run is 11 Spark jobs at
-    four chunks; the write, lineage, metrics_by_partition and metrics jobs
-    carry those names as their job description."""
+    four chunks, 10 on one core (a single coalesced partition needs no
+    shuffle before the per-chunk grouping); the write, lineage,
+    metrics_by_partition and metrics jobs carry those names as their job
+    description."""
     from pyspark.sql import Observation
     from qualityspark.pipeline import audit, RESULT_COLUMNS
     from qualityspark.scoring import (_metric_aggs, lineage_table,
@@ -164,7 +172,10 @@ def run_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
     result = audit(pages, cfg=cfg).select(*RESULT_COLUMNS)
     with _job_description(spark, "write"):
         writer.write(result, fail_after=fail_after)
-    audited = writer.read(spark, result.schema)
+    # one task per core: at sink sizes a task's fixed cost (scheduling,
+    # deserialization) outweighs the work on its rows
+    audited = writer.read(spark, result.schema).coalesce(
+        spark.sparkContext.defaultParallelism)
     # per-partition tables (north_rule): the chunk key is a pure function
     # of (url, warc_ts), so it reconstructs identically from the committed
     # rows — no need to have persisted it

@@ -23,6 +23,10 @@ chain over an exploded (kind, key) projection:
      aggregation + second window + second join-back disappear (they were
      the measured serial fraction in the 4-vs-16-core scaling runs).
 
+The chain is built as SQL text, one statement (``with_dedup_flags``): the
+same optimized plan as the Column form, without a py4j round trip per
+expression node while the plan is built.
+
 Tie caveat: the order key includes the full (warc_ts, url, text_sha)
 triple, so ordering is deterministic; rows IDENTICAL on the whole triple
 (byte-identical text + url + timestamp, i.e. true recrawl copies) are
@@ -39,10 +43,13 @@ one row — matching pandas ``duplicated(keep='first')`` exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from qualityspark.rules.heuristics import is_null_like
+from qualityspark.rules.heuristics import is_null_like, null_like_sql
+from qualityspark.scoring import sql_over
 
 TRIPLE = ["text_sha", "url", "warc_ts"]
 
@@ -53,40 +60,39 @@ def text_sha_expr(text: Column | None = None) -> Column:
     return F.when(~is_null_like(text), F.sha2(text, 256))
 
 
-def _dup_flag_table(narrow: DataFrame,
-                    tiebreaker: str | None = None) -> DataFrame:
-    """One row per flagged (text_sha, url, warc_ts[, tiebreaker]) key with
-    boolean ``_fb_sha`` / ``_fb_url`` columns — the single fused
-    aggregation+window chain described in the module docstring."""
-    key_cols = TRIPLE + ([tiebreaker] if tiebreaker else [])
-    emit = F.array_compact(F.array(
-        F.when(F.col("text_sha").isNotNull(), F.lit("sha")),
-        F.when(~is_null_like(F.col("url")), F.lit("url"))))
-    keyed = (narrow.select(*key_cols, F.explode(emit).alias("kind"))
-             .withColumn("key", F.when(F.col("kind") == "sha",
-                                       F.col("text_sha"))
-                         .otherwise(F.col("url"))))
-    dup_keys = (keyed.groupBy("kind", "key")
-                .agg(F.count(F.lit(1)).alias("_c"))
-                .filter(F.col("_c") > 1)
-                .select("kind", "key"))
-    cand = keyed.join(dup_keys, ["kind", "key"])
-    order = [F.col("warc_ts").asc_nulls_last(),
-             F.col("url").asc_nulls_last(),
-             F.col("text_sha").asc_nulls_last()]
-    if tiebreaker:
-        order.append(F.col(tiebreaker).asc_nulls_last())
-    w = Window.partitionBy("kind", "key").orderBy(*order)
-    # groupBy(key_cols) both pivots the two kinds into one row AND — when
-    # no tiebreaker distinguishes them — collapses fully-tied copies (each
-    # emits its own flag row) to a single flag row, so the null-safe
-    # join-back below never fans out; with a tiebreaker each copy keeps
-    # its own flag row and the min-tiebreaker copy survives unflagged
-    return (cand.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") > 1)
-            .groupBy(*key_cols)
-            .agg(F.max(F.col("kind") == "sha").alias("_fb_sha"),
-                 F.max(F.col("kind") == "url").alias("_fb_url")))
+def _dup_flags_sql(key_cols: list, tiebreaker: str | None) -> str:
+    """SQL text of the flagged-key table over ``{narrow}``: one row per
+    flagged (text_sha, url, warc_ts[, tiebreaker]) key, the key columns
+    renamed ``_f_<col>``, with boolean ``_fb_sha`` / ``_fb_url`` — the
+    single fused aggregation+window chain described in the module
+    docstring."""
+    keys = ", ".join(key_cols)
+    order = ", ".join(f"{c} ASC NULLS LAST"
+                      for c in ["warc_ts", "url", "text_sha"]
+                      + ([tiebreaker] if tiebreaker else []))
+    # written out at both uses, as the DataFrame self-join did: a CTE
+    # over a nondeterministic input would be materialized, not inlined
+    keyed = (
+        f"(SELECT {keys}, kind, CASE WHEN (kind = 'sha') THEN text_sha "
+        f"ELSE url END AS key FROM (SELECT {keys}, explode(array_compact("
+        f"array(CASE WHEN (text_sha IS NOT NULL) THEN 'sha' END, "
+        f"CASE WHEN (NOT {null_like_sql('url')}) THEN 'url' END))) AS kind "
+        f"FROM {{narrow}}))")
+    dup_keys = (f"(SELECT kind, key FROM (SELECT kind, key, count(1) AS _c "
+                f"FROM {keyed} GROUP BY kind, key) WHERE (_c > 1))")
+    # GROUP BY the key columns both pivots the two kinds into one row AND
+    # — when no tiebreaker distinguishes them — collapses fully-tied
+    # copies (each emits its own flag row) to a single flag row, so the
+    # null-safe join-back never fans out; with a tiebreaker each copy
+    # keeps its own flag row and the min-tiebreaker copy survives
+    # unflagged
+    renamed = ", ".join(f"{c} AS _f_{c}" for c in key_cols)
+    return (f"SELECT {renamed}, max((kind = 'sha')) AS _fb_sha, "
+            f"max((kind = 'url')) AS _fb_url FROM ("
+            f"SELECT *, row_number() OVER (PARTITION BY kind, key "
+            f"ORDER BY {order}) AS _rn "
+            f"FROM {keyed} JOIN {dup_keys} USING (kind, key)) "
+            f"WHERE (_rn > 1) GROUP BY {keys}")
 
 
 def with_dedup_flags(df: DataFrame,
@@ -112,6 +118,11 @@ def with_dedup_flags(df: DataFrame,
     copies only), small for web corpora; a corpus whose tail exceeds
     executor memory needs a sort-merge join-back instead.
 
+    The whole chain is ONE SQL statement over ``df`` and ``narrow``
+    (``scoring.sql_over``) with a ``BROADCAST(flags)`` hint: as Column
+    code it cost a py4j round trip per expression node, for the same
+    optimized plan.
+
     ``tiebreaker``: name of a unique-per-row ingest column (see module
     docstring tie caveat).  Auto-detected: an ``ingest_id`` column on
     ``df`` is used when the argument is None."""
@@ -120,25 +131,16 @@ def with_dedup_flags(df: DataFrame,
     if tiebreaker is None and "ingest_id" in df.columns:
         tiebreaker = "ingest_id"
     key_cols = TRIPLE + ([tiebreaker] if tiebreaker else [])
-    if narrow is None:
-        narrow = df.select(*key_cols)
-    flags = _dup_flag_table(narrow, tiebreaker)
-    flags = flags.select(*[F.col(c).alias(f"_f_{c}") for c in key_cols],
-                         "_fb_sha", "_fb_url")
     # null-safe join: url/warc_ts (and text_sha for null-like texts) may
     # legitimately be NULL and a plain equi-join would drop those matches
-    cond = None
-    for c in key_cols:
-        e = F.col(c).eqNullSafe(F.col(f"_f_{c}"))
-        cond = e if cond is None else (cond & e)
-    out = (df.join(F.broadcast(flags), cond, "left")
-           .drop(*[f"_f_{c}" for c in key_cols]))
-    return (out.withColumn(
-                "sig_TEXT_EXACT_DUPLICATE",
-                F.coalesce(F.col("_fb_sha"), F.lit(False))
-                & F.col("text_sha").isNotNull())
-            .withColumn(
-                "sig_URL_DUPLICATE",
-                F.coalesce(F.col("_fb_url"), F.lit(False))
-                & ~is_null_like(F.col("url")))
-            .drop("_fb_sha", "_fb_url"))
+    cond = functools.reduce(lambda a, b: f"({a} AND {b})", [
+        f"(d.{c} <=> flags._f_{c})" for c in key_cols])
+    sql = (f"SELECT /*+ BROADCAST(flags) */ d.*, "
+           f"(coalesce(flags._fb_sha, false) AND (d.text_sha IS NOT NULL)) "
+           f"AS sig_TEXT_EXACT_DUPLICATE, "
+           f"(coalesce(flags._fb_url, false) AND "
+           f"(NOT {null_like_sql('d.url')})) AS sig_URL_DUPLICATE "
+           f"FROM {{df}} AS d LEFT JOIN "
+           f"({_dup_flags_sql(key_cols, tiebreaker)}) AS flags ON {cond}")
+    return sql_over(sql, df=df, narrow=(df.select(*key_cols)
+                                        if narrow is None else narrow))

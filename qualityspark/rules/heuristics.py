@@ -1,17 +1,20 @@
-"""Whole-string document signals as native Spark Column expressions.
+"""Whole-string document signals, and the JVM token helpers.
 
-Each function mirrors one pure-Python definition in
-``qualityspark.textstats`` (the oracle); ``tests/test_parity.py`` asserts
-the pipeline equals the oracle over the synthetic corpus.  These
-expressions stay inside Tungsten whole-stage codegen — no Python in this
-module's runtime path.
+Each signal mirrors one pure-Python definition in ``qualityspark.textstats``
+(the oracle); ``tests/test_parity.py`` asserts the pipeline equals the
+oracle over the synthetic corpus.  ``signal_columns`` builds them as SQL
+text, one statement whose regex literals are quoted by ``scoring.sql_str``:
+the same plan as the Column form it replaced, without a py4j round trip
+per expression node.  The expressions stay inside
+Tungsten whole-stage codegen — no Python in this module's runtime path.
 
 The token/line-derived signals (word counts and ratios, stopwords,
 toxicity, caps, repetition) have ONE implementation,
 ``textstats.signal_stats``, evaluated in the Arrow model pass
-(rules/udfs.py).  The token helpers kept here (``tokens_expr``,
-``word_ngrams``, ``repetition_3gram``) serve the registry queries, neardup
-and the Python-free ``streaming.stream_metrics``.
+(rules/udfs.py).  The Column helpers kept here (``is_null_like``,
+``strip_ws``, ``tokens_expr``, ``word_ngrams``, ``repetition_3gram``) serve
+the dedup key, the registry queries, neardup and the Python-free
+``streaming.stream_metrics``.
 
 Everything is null-safe: signals are typed booleans/doubles, never throw
 (the reference wraps each check in try/except —
@@ -26,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from qualityspark import constants as C
+from qualityspark.scoring import sql_over, sql_str
 
 WS_CLASS = "[" + C.ASCII_WS + "]"
 NON_WS_CLASS = "[^" + C.ASCII_WS + "]"
@@ -135,29 +139,10 @@ def repetition_3gram(toks: Column, n: Column) -> Column:
     return F.when(n >= 3, ratio).otherwise(F.lit(0.0))
 
 
-def has_control_chars(text: Column) -> Column:
-    """ENCODING_ANOMALY (reference checks/categorical_checks.py:84-112)."""
-    return F.coalesce(text.rlike(C.CONTROL_CHARS_RE), F.lit(False))
-
-
-def has_unstripped_whitespace(text: Column) -> Column:
-    """WHITESPACE_ISSUES (reference checks/universal_checks.py:87-105).
-    (text != strip(text)) & (strip(text) != '') without materializing the
-    stripped copy: leading-or-trailing-WS  AND  any non-WS char."""
-    return F.coalesce(
-        text.rlike("^" + WS_CLASS + "|" + WS_CLASS + r"\z")
-        & text.rlike(NON_WS_CLASS), F.lit(False))
-
-
-def has_truncation_signs(text: Column) -> Column:
-    """TRUNCATION_SIGNS (reference checks/text_checks.py:171-207)."""
-    return F.coalesce(text.rlike(r"(\.\.\.|…)" + WS_CLASS + r"*\z"),
-                      F.lit(False))
-
-
-def url_is_malformed(url: Column) -> Column:
-    return (~is_null_like(url)) & F.coalesce(~url.rlike(C.URL_RE),
-                                             F.lit(True))
+def null_like_sql(col: str) -> str:
+    """``is_null_like`` as SQL text over the column named ``col``, for
+    the SQL-text builders."""
+    return f"(({col} IS NULL) OR ({col} RLIKE {sql_str(_NULL_LIKE_RE)}))"
 
 
 def signal_columns(df: DataFrame, as_of: str = C.AS_OF_TS,
@@ -171,6 +156,11 @@ def signal_columns(df: DataFrame, as_of: str = C.AS_OF_TS,
     the Arrow pass (rules/udfs.with_model_columns), which also supplies
     ``_n_words``.
 
+    The projection is ONE SQL statement (``scoring.sql_over``): as Column
+    trees its ten signals cost a py4j call per ``F.col``, literal and
+    operator.  The text is parenthesised as the Column operators nested,
+    so the optimized plan is the one the Column form built.
+
     None of these signals takes a tunable threshold, so no RunConfig is
     needed: disabled rules are a SCORING decision (config.RunConfig.
     doc_rules), which lets one audited table be re-scored under several
@@ -178,25 +168,30 @@ def signal_columns(df: DataFrame, as_of: str = C.AS_OF_TS,
     # model_signals accepts only True; kept for the frozen perfbench ladder
     if model_signals is not True:
         raise ValueError("signal_columns: model_signals must be True")
-    text, url, ts, lang = (F.col("text"), F.col("url"), F.col("warc_ts"),
-                           F.col("lang"))
-    text_null = is_null_like(text)
-    not_null = ~text_null
-    as_of_ts = F.lit(as_of).cast("timestamp")
-    ancient = F.lit(C.ANCIENT_TS).cast("timestamp")
-
+    text_null = null_like_sql("text")
+    not_null = f"(NOT {text_null})"
+    langs = ", ".join(sql_str(lang) for lang in C.ALLOWED_LANGS)
+    ws_edge = sql_str("^" + WS_CLASS + "|" + WS_CLASS + r"\z")
+    ellipsis_end = sql_str(r"(\.\.\.|…)" + WS_CLASS + r"*\z")
     sig = {
         "TEXT_NULL_LIKE": text_null,
-        "URL_NULL": is_null_like(url),
-        "URL_MALFORMED": url_is_malformed(url),
-        "ENCODING_ANOMALY": has_control_chars(text),
-        "TS_FUTURE": F.coalesce(ts > as_of_ts, F.lit(False)),
-        "TS_ANCIENT": F.coalesce(ts < ancient, F.lit(False)),
-        "TS_NULL": ts.isNull(),
-        "WHITESPACE_UNSTRIPPED": not_null & has_unstripped_whitespace(text),
-        "TRUNCATION_SIGNS": not_null & has_truncation_signs(text),
+        "URL_NULL": null_like_sql("url"),
+        "URL_MALFORMED": f"((NOT {null_like_sql('url')}) AND coalesce("
+                         f"(NOT (url RLIKE {sql_str(C.URL_RE)})), true))",
+        "ENCODING_ANOMALY":
+            f"coalesce((text RLIKE {sql_str(C.CONTROL_CHARS_RE)}), false)",
+        "TS_FUTURE": f"coalesce((warc_ts > CAST({sql_str(as_of)} "
+                     f"AS TIMESTAMP)), false)",
+        "TS_ANCIENT": f"coalesce((warc_ts < CAST({sql_str(C.ANCIENT_TS)} "
+                      f"AS TIMESTAMP)), false)",
+        "TS_NULL": "(warc_ts IS NULL)",
+        "WHITESPACE_UNSTRIPPED":
+            f"({not_null} AND coalesce(((text RLIKE {ws_edge}) AND "
+            f"(text RLIKE {sql_str(NON_WS_CLASS)})), false))",
+        "TRUNCATION_SIGNS":
+            f"({not_null} AND coalesce((text RLIKE {ellipsis_end}), false))",
         "LANG_NOT_ALLOWED":
-            not_null & (~F.coalesce(lang.isin(*C.ALLOWED_LANGS),
-                                    F.lit(False))),
+            f"({not_null} AND (NOT coalesce((lang IN ({langs})), false)))",
     }
-    return df.withColumns({f"sig_{rule}": expr for rule, expr in sig.items()})
+    cols = ", ".join(f"{e} AS sig_{rule}" for rule, e in sig.items())
+    return sql_over(f"SELECT *, {cols} FROM {{df}}", df=df)

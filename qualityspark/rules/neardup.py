@@ -508,12 +508,15 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     # Tracked: the materializing caller releases it (caching.py protocol).
     from qualityspark.caching import tracked_cache
     sig = tracked_cache(sh)
-    band_structs = F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.concat_ws(",", *[F.col("sig")[b * rows + r].cast("string")
-                                    for r in range(rows)]).alias("key"))
-        for b in range(bands)])
-    exploded = (sig.select("id", F.explode(band_structs).alias("bk"))
+    # one SQL expression: as Column code the bands cost a py4j call per
+    # element reference; ``struct(... AS ...)`` prints as ``F.struct`` did
+    def band(b):
+        elems = ", ".join(f"CAST(sig[{b * rows + r}] AS STRING)"
+                          for r in range(rows))
+        return f"struct({b} AS band, concat_ws(',', {elems}) AS key)"
+
+    band_structs = f"array({', '.join(band(b) for b in range(bands))})"
+    exploded = (sig.select("id", F.explode(F.expr(band_structs)).alias("bk"))
                 .select("id", F.col("bk.band").alias("band"),
                         F.col("bk.key").alias("key")))
     a = exploded.alias("a")

@@ -20,7 +20,7 @@ Outputs one struct column:
                            shipped when it differs) and pattern names found
   n_words .. rep_ratio   — the signal_stats metrics
 The NUL fraction of the html head (HTML_BINARY_JUNK) is computed JVM-side
-(``nul_fraction_expr``) so binary payloads never cross the Arrow pipe.
+(``nul_fraction_sql``) so binary payloads never cross the Arrow pipe.
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from qualityspark import constants as C
 from qualityspark import langmodel as L
 from qualityspark import textstats as T
 from qualityspark.oracle import scrub_and_hits
+from qualityspark.scoring import sql_lit, sql_over, sql_str
 
 MODEL_STRUCT = ("struct<lang_pred:string, lang_prob:double, "
                 "perplexity:double, rep_ratio:double, "
@@ -155,16 +156,15 @@ def token_counts_pass():
     return _token_counts_udf
 
 
-def nul_fraction_expr() -> F.Column:
-    """NUL-byte fraction of the first 8 KiB of html, JVM-side: latin-1
-    decode maps bytes 1:1 to chars, so counting chr(0) == counting byte 0
-    (reference core/data_loader.py:82-89 analog) — avoids shipping binary
-    payloads through the Arrow pipe."""
-    head = F.expr(f"substring(html, 1, {C.HTML_SCAN_BYTES})")
-    d = F.decode(head, "ISO-8859-1")
-    nuls = F.length(d) - F.length(F.replace(d, F.lit("\x00"), F.lit("")))
-    return F.when(F.length(d) > 0,
-                  nuls.cast("double") / F.length(d)).otherwise(F.lit(0.0))
+def nul_fraction_sql() -> str:
+    """NUL-byte fraction of the first 8 KiB of html as SQL text, JVM-side:
+    latin-1 decode maps bytes 1:1 to chars, so counting chr(0) == counting
+    byte 0 (reference core/data_loader.py:82-89 analog) — avoids shipping
+    binary payloads through the Arrow pipe."""
+    d = f"decode(substring(html, 1, {C.HTML_SCAN_BYTES}), 'ISO-8859-1')"
+    return (f"CASE WHEN (length({d}) > 0) THEN "
+            f"(CAST((length({d}) - length(replace({d}, {sql_str(chr(0))}, "
+            f"''))) AS DOUBLE) / length({d})) ELSE 0.0D END")
 
 
 def with_model_columns(df: DataFrame, cfg=None,
@@ -176,59 +176,54 @@ def with_model_columns(df: DataFrame, cfg=None,
     threshold comparisons stay JVM-side against ``cfg``, which retunes
     every threshold here.
 
-    The struct-field and threshold columns are one SQL expression each
-    (``scoring.sql_lit`` types the thresholds as ``F.lit`` does): as
-    Column trees they cost a py4j call per ``F.col`` and operator, while
-    the optimized plan is the same text either way.  ``scrubbed_text`` and
-    ``sig_HTML_BINARY_JUNK`` stay Column code (the latter needs a NUL
-    literal)."""
+    The pandas UDF call is the one Column; every column derived from its
+    struct is SQL text in ONE statement (``scoring.sql_over``;
+    ``scoring.sql_lit`` types the thresholds as ``F.lit`` does): as Column
+    trees they cost a py4j call per ``F.col`` and operator, while the
+    optimized plan is the same text either way."""
     # signals_from_model accepts only True; kept for the frozen perfbench
     # ladder
     if signals_from_model is not True:
         raise ValueError("with_model_columns: signals_from_model must be True")
     from qualityspark.config import resolve
-    from qualityspark.scoring import sql_lit
     cfg = resolve(cfg)
     df = df.withColumn("_m", model_pass()(F.col("text"), F.col("lang")))
     not_null = "(NOT sig_TEXT_NULL_LIKE)"
 
     def cmp(field, op, param):
         """``not_null AND (_m.<field> <op> <cfg param>)``."""
-        return F.expr(f"({not_null} AND "
-                      f"(_m.{field} {op} {sql_lit(cfg.param(param))}))")
+        return (f"({not_null} AND "
+                f"(_m.{field} {op} {sql_lit(cfg.param(param))}))")
 
     langs = ", ".join(sql_lit(lang) for lang in C.ALLOWED_LANGS)
-    return df.withColumns({
-        "lang_pred": F.expr("_m.lang_pred"),
-        "lang_prob": F.expr("_m.lang_prob"),
-        "perplexity": F.expr("_m.perplexity"),
-        "scrubbed_text": F.when(F.col("text").isNull(),
-                                F.lit(None).cast("string"))
-                          .otherwise(F.coalesce(F.col("_m.scrub_diff"),
-                                                F.col("text"))),
-        "pii_hits": F.expr("_m.pii_hits"),
-        "sig_HTML_BINARY_JUNK":
-            nul_fraction_expr() > cfg.param("MAX_NUL_FRACTION"),
-        "sig_LANG_MISMATCH": F.expr(
+    cols = {
+        "lang_pred": "_m.lang_pred",
+        "lang_prob": "_m.lang_prob",
+        "perplexity": "_m.perplexity",
+        "scrubbed_text": "CASE WHEN (text IS NULL) THEN CAST(NULL AS STRING) "
+                         "ELSE coalesce(_m.scrub_diff, text) END",
+        "pii_hits": "_m.pii_hits",
+        "sig_HTML_BINARY_JUNK": f"({nul_fraction_sql()} > "
+                                f"{sql_lit(cfg.param('MAX_NUL_FRACTION'))})",
+        "sig_LANG_MISMATCH":
             f"(((({not_null} AND lang IN ({langs})) "
             f"AND (_m.lang_pred != {sql_lit('und')})) "
             f"AND (_m.lang_pred != lang)) "
-            f"AND (_m.lang_prob >= {sql_lit(cfg.param('MIN_LANG_PROB'))}))"),
+            f"AND (_m.lang_prob >= {sql_lit(cfg.param('MIN_LANG_PROB'))}))",
         "sig_PERPLEXITY_HIGH": cmp("perplexity", ">", "MAX_PERPLEXITY"),
         "sig_REPETITION_HIGH":
             cmp("rep_ratio", ">", "MAX_REPETITION_3GRAM"),
-        **{f"sig_PII_{name}":
-           F.expr(f"array_contains(_m.pii_hits, {sql_lit(name)})")
+        **{f"sig_PII_{name}": f"array_contains(_m.pii_hits, {sql_lit(name)})"
            for name, _rx, _sev in C.PII_PATTERNS},
-        "_n_words": F.expr("_m.n_words"),
+        "_n_words": "_m.n_words",
         "sig_WORDS_TOO_FEW": cmp("n_words", "<", "MIN_WORDS"),
         "sig_WORDS_TOO_MANY": cmp("n_words", ">", "MAX_WORDS"),
-        "sig_MEAN_WORD_LEN_OOB": F.expr(
+        "sig_MEAN_WORD_LEN_OOB":
             f"({not_null} AND ("
             f"(_m.mean_word_len < {sql_lit(cfg.param('MIN_MEAN_WORD_LEN'))})"
             f" OR "
             f"(_m.mean_word_len > {sql_lit(cfg.param('MAX_MEAN_WORD_LEN'))})"
-            f"))"),
+            f"))",
         "sig_SYMBOL_WORD_RATIO_HIGH":
             cmp("symbol_ratio", ">", "MAX_SYMBOL_WORD_RATIO"),
         "sig_BULLET_LINES_HIGH":
@@ -243,4 +238,7 @@ def with_model_columns(df: DataFrame, cfg=None,
             cmp("stop_density", "<", "MIN_STOPWORD_DENSITY"),
         "sig_TOXICITY_HIGH": cmp("tox_density", ">", "MAX_TOXICITY_DENSITY"),
         "sig_CAPS_RATIO_HIGH": cmp("caps_ratio", ">", "MAX_CAPS_RATIO"),
-    }).drop("_m")
+    }
+    sql = "SELECT *, {} FROM {{df}}".format(
+        ", ".join(f"{e} AS {name}" for name, e in cols.items()))
+    return sql_over(sql, df=df).drop("_m")

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import math
 import re
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -61,6 +62,40 @@ def sql_lit(v) -> str:
     if isinstance(v, str) and _SQL_WORD.fullmatch(v):
         return f"'{v}'"
     raise ValueError(f"no SQL literal for {v!r}")
+
+
+def sql_str(s: str) -> str:
+    r"""``s`` as a single-quoted string literal for SQL text run by
+    ``sql_over``: the SQL lexer unescapes ``\\`` and ``\'``, and the
+    ``str.format`` pass turns ``{{``/``}}`` back into ``{``/``}``.
+    Every other character passes through byte-exact, so a regex's
+    ``\x00``-style escape text, ``…`` and U+FFFD reach the JVM as the
+    Python pattern spells them."""
+    return "'{}'".format(s.replace("\\", "\\\\").replace("'", "\\'")
+                         .replace("{", "{{").replace("}", "}}"))
+
+
+def sql_over(text: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql(text, **frames)`` without its side effect on the
+    cache: each ``{name}`` in ``text`` reads the DataFrame passed as
+    ``name`` through a temp view, as the ``spark.sql`` formatter does,
+    but the views are dropped from the session catalog directly.  The
+    formatter drops them through ``Catalog.dropTempView``, which also
+    uncaches every cached plan equal to a view's — so a cached input
+    (``pipeline.audit``'s narrow dedup projection, a caller's cached
+    pages) would silently stop being cached.  ``text`` follows
+    ``str.format`` rules, as the formatter's does (``sql_str`` doubles
+    braces)."""
+    spark = next(iter(frames.values())).sparkSession
+    names = {k: f"_qs_{k}_{uuid.uuid4().hex}" for k in frames}
+    for k, df in frames.items():
+        df.createOrReplaceTempView(names[k])
+    try:
+        return spark.sql(text.format(**names))
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names.values():
+            catalog.dropTempView(name)
 
 
 def _sql_rules(cfg) -> list:
@@ -192,8 +227,7 @@ def _aggregate(df: DataFrame, aggs: list, group: str | None,
     key = f"`{group}`, " if group else ""
     tail = f" GROUP BY `{group}`" if group else ""
     sql = f"SELECT {key}{', '.join(aggs)} FROM {{df}}{tail}"
-    return (df.sparkSession.sql(sql, df=df)
-            .withColumn("run_id", F.lit(run_id)))
+    return sql_over(sql, df=df).withColumn("run_id", F.lit(run_id))
 
 
 def metrics_table(df: DataFrame, run_id: str = "run0",

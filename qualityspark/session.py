@@ -9,6 +9,8 @@ Cluster notes (the sandbox runs local[32]; these settings are chosen for a
   + scrub) is Arrow-batched; batch size bounds executor-python memory.
 * shuffle.partitions: local default 32; production sets ~2-3x total cores.
 * maxPartitionBytes 128m: scan parallelism for wide binary (html) columns.
+* driver memory: half the host's physical memory, 1g to 32g
+  (``driver_memory``); ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
 """
 
 from __future__ import annotations
@@ -16,6 +18,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(total_bytes: int) -> str:
+    """Default ``spark.driver.memory`` for a host with ``total_bytes`` of
+    physical memory: half of it in whole GiB, at least 1g and at most
+    32g.  A fixed 32g let the driver JVM of a local run grow past a
+    15 GB host's memory and get OOM-killed."""
+    return f"{max(1, min(32, total_bytes // 2 // 2**30))}g"
 
 
 def get_spark(app: str = "qualityspark", master: str | None = None,
@@ -41,6 +51,8 @@ def get_spark(app: str = "qualityspark", master: str | None = None,
                  str(shuffle_partitions
                      or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))))
          .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.driver.memory",
-                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")))
+         .config("spark.driver.memory", os.environ.get(
+             "SPARK_GRAFT_DRIVER_MEM",
+             driver_memory(os.sysconf("SC_PAGE_SIZE")
+                           * os.sysconf("SC_PHYS_PAGES")))))
     return b.getOrCreate()

@@ -42,3 +42,28 @@ def golden():
         want = json.loads((DATA / f"{name}.json").read_text())
         assert json.loads(json.dumps(got, default=str)) == want
     return check
+
+
+@pytest.fixture(scope="session")
+def py4j_calls():
+    """py4j_calls(fn): the py4j commands sent to the JVM while ``fn`` runs,
+    minus the memory/detach commands Python finalizers send at random
+    times."""
+    import py4j.clientserver as cs
+
+    def count(fn) -> int:
+        send = cs.ClientServerConnection.send_command
+        n = [0]
+
+        def counting(conn, command):
+            if not command.startswith("m\n"):
+                n[0] += 1
+            return send(conn, command)
+
+        cs.ClientServerConnection.send_command = counting
+        try:
+            fn()
+        finally:
+            cs.ClientServerConnection.send_command = send
+        return n[0]
+    return count

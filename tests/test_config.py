@@ -264,3 +264,28 @@ def test_cli_config_flag(tmp_path):
     with pytest.raises(ConfigValidationError):
         cli.main(["run", "--input", "x", "--output", "y",
                   "--config", str(bad)])
+
+
+def test_sql_str_round_trips(spark):
+    r"""``sql_str`` literals reach the JVM byte-exact through ``sql_over``'s
+    formatter: quotes, backslashes, braces, regex escape text such as
+    ``\x00``, a real NUL, ``…`` and U+FFFD."""
+    from qualityspark.scoring import sql_over, sql_str
+    vals = ["it's", "a\\b", r"[\x00-\x08\x0b]", "{2,}", "}{", "\x00",
+            "…", "�", "\\'", r"(\.\.\.|…)[ \t]*\z", ""]
+    got = sql_over("SELECT {} FROM {{df}}".format(", ".join(
+        f"{sql_str(v)} AS c{i}" for i, v in enumerate(vals))),
+        df=spark.range(1)).first()
+    assert list(got) == vals
+
+
+def test_driver_memory_follows_host():
+    """Half the host's memory in whole GiB, at least 1g, at most 32g."""
+    from qualityspark.session import driver_memory
+    gib = 2**30
+    assert driver_memory(15 * gib + 700 * 2**20) == "7g"
+    assert driver_memory(16 * gib) == "8g"
+    assert driver_memory(gib) == "1g"
+    assert driver_memory(512 * 2**20) == "1g"
+    assert driver_memory(64 * gib) == "32g"
+    assert driver_memory(1024 * gib) == "32g"

@@ -138,3 +138,39 @@ def test_run_labels_its_jobs(spark, pages_small, tmp_path):
         d = store.job(i).description()
         descs.add(d.get() if d.isDefined() else None)
     assert descs == {"write", "lineage", "metrics_by_partition", "metrics"}
+
+
+def test_sink_scans_one_task_per_core(spark, pages_small, tmp_path):
+    """The re-read behind the lineage and metrics_by_partition sinks runs
+    at most one task per core, not one per written file (write tasks x
+    chunks), so the lineage sink has at most that many files per chunk.
+    Fine scan splits (1 MiB, as ``bench.py`` sets for small corpora) give
+    the re-read a split per file."""
+    import glob
+    out = str(tmp_path / "out")
+    chunks = 4
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(1024 * 1024))
+    try:
+        ids, _ = _jobs_in_group(
+            spark, "sink_tasks",
+            lambda: run_resumable(spark, pages_small, out, chunks=chunks))
+    finally:
+        spark.conf.set(key, prev)
+    cores = spark.sparkContext.defaultParallelism
+    store = spark.sparkContext._jsc.sc().statusStore()
+    scans = {}
+    for i in ids:
+        job = store.job(i)
+        d = job.description()
+        d = d.get() if d.isDefined() else None
+        if d in ("lineage", "metrics_by_partition"):
+            # tasks the job ran: a stage it reuses from an earlier job of
+            # the same action shows as skipped
+            scans.setdefault(d, []).append(job.numTasks()
+                                           - job.numSkippedTasks())
+    assert set(scans) == {"lineage", "metrics_by_partition"}, scans
+    assert all(n <= cores for ns in scans.values() for n in ns), scans
+    files = glob.glob(f"{out}/lineage/_chunk=*/part-*")
+    assert 0 < len(files) <= cores * chunks, len(files)

@@ -95,27 +95,7 @@ def test_lineage_and_metrics(spark):
     assert m["n_TEXT_NULL_LIKE"] == 0
 
 
-def _py4j_calls(fn) -> int:
-    """py4j commands sent to the JVM while ``fn`` runs, minus the
-    memory/detach commands Python finalizers send at random times."""
-    import py4j.clientserver as cs
-    send = cs.ClientServerConnection.send_command
-    n = [0]
-
-    def counting(conn, command):
-        if not command.startswith("m\n"):
-            n[0] += 1
-        return send(conn, command)
-
-    cs.ClientServerConnection.send_command = counting
-    try:
-        fn()
-    finally:
-        cs.ClientServerConnection.send_command = send
-    return n[0]
-
-
-def test_builder_calls_do_not_grow_with_rules(spark):
+def test_builder_calls_do_not_grow_with_rules(spark, py4j_calls):
     """with_scores + metrics_table build from SQL text: 20 more business
     rules lengthen the strings, not the py4j traffic (as Column trees
     each rule cost ~50 calls in with_scores and ~50 in the aggregates)."""
@@ -127,8 +107,8 @@ def test_builder_calls_do_not_grow_with_rules(spark):
                                    *[f"false AS {s}" for s in sigs])
 
     def calls(cfg):
-        return _py4j_calls(lambda: metrics_table(with_scores(df, cfg),
-                                                 cfg=cfg))
+        return py4j_calls(lambda: metrics_table(with_scores(df, cfg),
+                                                cfg=cfg))
 
     calls(None)     # warm: lazy Python-side imports and JVM class lookups
     n0, n20 = calls(RunConfig.default()), calls(biz)
@@ -151,3 +131,44 @@ def test_sql_names_asserted(spark):
         for build in (with_scores, lineage_table, metrics_table):
             with pytest.raises(ValueError, match=r"\[A-Z0-9_\]\+"):
                 build(df, cfg=cfg)
+
+
+def test_audit_build_calls_bounded(spark, pages_small, py4j_calls):
+    """Building ``audit()`` sends a bounded number of py4j commands: the
+    signal, model, dedup, scoring and metric columns are SQL text, one
+    statement each (the Column forms sent 2,012 on the 2,000-page
+    benchmark corpus)."""
+    from qualityspark.caching import release_caches
+    from qualityspark.pipeline import audit
+
+    def build():
+        audit(pages_small)
+        release_caches()
+
+    build()     # warm: lazy Python-side imports and JVM class lookups
+    n = py4j_calls(build)
+    assert n <= 500, n
+
+
+def test_sql_over_keeps_cached_inputs_cached(spark):
+    """A cached frame read by a SQL-text builder stays cached: dropping
+    the statement's temp view through ``Catalog.dropTempView`` would
+    uncache it."""
+    from qualityspark.rules.heuristics import signal_columns
+    from qualityspark.scoring import sql_over
+    df = spark.range(3).selectExpr("'u' AS url", "NULL AS warc_ts",
+                                   "'some text' AS text", "'en' AS lang",
+                                   "false AS keep", "100.0D AS score",
+                                   "array('URL_NULL') AS rules_fired")
+    df.cache()
+    try:
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        for build in (lambda: sql_over("SELECT * FROM {df}", df=df),
+                      lambda: signal_columns(df),
+                      lambda: metrics_table(df)):
+            build()
+            assert cm.lookupCachedData(df._jdf).isDefined()
+        assert sql_over("SELECT count(1) AS n FROM {a} JOIN {b} USING (id)",
+                        a=spark.range(4), b=spark.range(2)).first().n == 2
+    finally:
+        df.unpersist()
