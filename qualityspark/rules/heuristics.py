@@ -12,9 +12,8 @@ The token/line-derived signals (word counts and ratios, stopwords,
 toxicity, caps, repetition) have ONE implementation,
 ``textstats.signal_stats``, evaluated in the Arrow model pass
 (rules/udfs.py).  The Column helpers kept here (``is_null_like``,
-``strip_ws``, ``tokens_expr``, ``word_ngrams``, ``repetition_3gram``) serve
-the dedup key, the registry queries, neardup and the Python-free
-``streaming.stream_metrics``.
+``strip_ws``, ``tokens_expr``, ``word_ngrams``) serve the dedup key, the
+registry queries and neardup.
 
 Everything is null-safe: signals are typed booleans/doubles, never throw
 (the reference wraps each check in try/except —
@@ -47,23 +46,18 @@ def _empty():
 # per-element allocation, and per-token `rlike` inside a lambda builds a
 # Matcher per token.  Thread dumps showed ~35% of executor CPU in exactly
 # those frames.  Every signal below is therefore expressed as ONE pass
-# over the document string (regexp_count / rlike with anchors), which is
+# over the document string (an anchored rlike), which is
 # codegen'd, allocation-free, and fails fast.  Exact-parity with the
 # pure-python oracle (textstats.py) is held by tests/test_parity.py.
 # -------------------------------------------------------------------------
 
-def _java_escape(w: str) -> str:
-    """Literal -> Java-regex-safe (re.escape output is Java-compatible for
-    the plain-text tokens used here)."""
-    return _re.escape(w)
-
-
 # whole-string null-like test: ^WS* (any NULL_LIKE literal)? WS*\z
 # (the optional group covers "" and whitespace-only, which strip to "").
+# re.escape output is Java-regex-safe for these plain-text literals.
 # (?iu) = case-insensitive with Unicode case, matching str.lower() on the
 # accented Spanish entries.  Anchored: long documents fail at offset 0.
 _NULL_LIKE_RE = ("^" + WS_CLASS + "*(?iu:"
-                 + "|".join(_java_escape(w)
+                 + "|".join(_re.escape(w)
                             for w in sorted(C.NULL_LIKE) if w)
                  + ")?" + WS_CLASS + r"*\z")
 
@@ -111,32 +105,6 @@ def word_ngrams(toks: Column, k: int) -> Column:
                            lambda a, b: F.concat(a, F.lit(" "), b))
     return F.when(F.size(toks) >= k, grams) \
             .otherwise(F.array().cast("array<string>"))
-
-
-def _word_ngram_hashes(toks: Column, k: int) -> Column:
-    """word_ngrams variant producing chained xxhash64 fingerprints instead
-    of joined strings: distinct-count equal up to a 2^-64-per-pair hash
-    collision (~90 grams/doc -> <1e-15 per document; the oracle computes
-    the exact string distinct and tests/test_streaming.py pins equality
-    over the corpus).  Benchmarked on 300k docs at 4 cores: string-concat
-    grams 10.6 s, array<struct> grams 16.2 s (array_distinct over structs
-    is a QUADRATIC pairwise scan — only atomic element types get the open
-    hash set), chained-hash grams 9.0 s."""
-    safe = F.when(F.size(toks) >= k, toks).otherwise(
-        F.array(*[_empty() for _ in range(k)]))
-    g = F.size(safe) - (k - 1)
-    parts = [F.slice(safe, j + 1, g) for j in range(k)]
-    grams = F.zip_with(parts[0], parts[1], lambda a, b: F.xxhash64(a, b))
-    for p in parts[2:]:
-        grams = F.zip_with(grams, p, lambda h, z: F.xxhash64(h, z))
-    return grams
-
-
-def repetition_3gram(toks: Column, n: Column) -> Column:
-    grams = _word_ngram_hashes(toks, 3)
-    ratio = F.lit(1.0) - (F.size(F.array_distinct(grams)).cast("double")
-                          / F.size(grams))
-    return F.when(n >= 3, ratio).otherwise(F.lit(0.0))
 
 
 def null_like_sql(col: str) -> str:

@@ -97,8 +97,11 @@ def melt(df: DataFrame, values: dict[str, F.Column], *keep) -> DataFrame:
     """The unpivot every per-column audit family aggregates: ``keep`` plus
     (k, v) rows, k a key of ``values`` and v its expression.  Map-explode
     keeps NULL values, so each key yields exactly one row per input row,
-    and the plan stays a few fields wide at any column count, so every
-    expression stays inside whole-stage codegen."""
+    and the plan after the explode stays a few fields wide at any column
+    count.  The map literal itself grows with the column count: over a
+    110-column CSV scan the scan → explode stage fails to compile ("Code
+    grows beyond 64 KB") and runs without whole-stage codegen; over a
+    cached frame of the same width it compiles."""
     pairs = []
     for k, v in values.items():
         pairs += [F.lit(k), v]

@@ -22,10 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from qualityspark import constants as C
-from qualityspark.rules.heuristics import (NON_WS_CLASS, is_null_like,
-                                           repetition_3gram, signal_columns,
-                                           tokens_expr)
+from qualityspark.rules.dedup import text_sha_expr
+from qualityspark.rules.heuristics import is_null_like, signal_columns
 from qualityspark.rules.udfs import with_model_columns
 from qualityspark.scoring import with_scores
 
@@ -123,11 +121,14 @@ def _dedup_state_fn(key, pdf_iter, state):
 def stream_dedup_stateful(pages: DataFrame,
                           watermark: str = "1 hour") -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState): exact
-    keep-first duplicate FLAGGING across micro-batches, keyed by
-    sha2(text).  Unlike ``dropDuplicatesWithinWatermark`` (which silently
-    drops later copies), this emits every row with its duplicate lineage
-    (is_dup, n_prior) — the streaming analog of the batch pipeline's
-    sig_TEXT_EXACT_DUPLICATE flag.  State per key is two scalars.
+    keep-first duplicate FLAGGING across micro-batches, keyed by the batch
+    dedup key ``dedup.text_sha_expr``.  Rows with null-like text have no
+    key and are filtered out before the state operator.  Unlike
+    ``dropDuplicatesWithinWatermark`` (which silently drops later copies),
+    this emits every keyed row with its duplicate lineage (is_dup,
+    n_prior) — the streaming analog of the batch pipeline's
+    sig_TEXT_EXACT_DUPLICATE flag.  State per key is one counter
+    (``DEDUP_STATE_SCHEMA``).
     NoTimeout keeps exact global keep-first semantics (matching the batch
     path); a production continuous trigger bounding state would add
     ProcessingTimeTimeout + setTimeoutDuration — NOT combinable with
@@ -135,9 +136,7 @@ def stream_dedup_stateful(pages: DataFrame,
     scheduling timeout-evaluation micro-batches and the trigger never
     terminates (observed; that is why this uses NoTimeout)."""
     keyed = (pages
-             .withColumn("text_sha",
-                         F.when(~is_null_like(F.col("text")),
-                                F.sha2(F.col("text"), 256)))
+             .withColumn("text_sha", text_sha_expr())
              .filter(F.col("text_sha").isNotNull())
              .withWatermark("warc_ts", watermark)
              .select("url", "warc_ts", "text_sha"))
@@ -152,24 +151,9 @@ def stream_dedup_stateful(pages: DataFrame,
 def stream_metrics(pages: DataFrame, window: str = "1 hour",
                    watermark: str = "2 hours") -> DataFrame:
     """Watermarked windowed quality metrics (late data folded in until the
-    watermark passes).
-
-    The one Python-free path: the token-derived rules it aggregates are
-    JVM expressions built here (word count == number of maximal non-WS
-    runs == len(textstats.tokenize); the interpreted 3-gram chain is
-    affordable on small windowed batches), equal to the Arrow pass's
-    textstats values (tests/test_streaming.py pins the counts)."""
-    df = signal_columns(pages)
-    text = F.col("text")
-    n = F.regexp_count(F.coalesce(text, F.lit("")),
-                       F.lit(NON_WS_CLASS + "+"))
-    not_null = ~F.col("sig_TEXT_NULL_LIKE")
-    df = df.withColumns({
-        "sig_WORDS_TOO_FEW": not_null & (n < C.MIN_WORDS),
-        "sig_REPETITION_HIGH":
-            not_null & (repetition_3gram(tokens_expr(text), n)
-                        > C.MAX_REPETITION_3GRAM),
-    })
+    watermark passes).  The signals are ``stream_audit``'s two calls, so
+    the token-derived rules come from the one Arrow pass."""
+    df = with_model_columns(signal_columns(pages))
     aggs = [F.count(F.lit(1)).alias("n_docs")]
     for rule in ("TEXT_NULL_LIKE", "WORDS_TOO_FEW", "ENCODING_ANOMALY",
                  "WHITESPACE_UNSTRIPPED", "REPETITION_HIGH"):

@@ -1,5 +1,6 @@
 import json
 import pathlib
+import re
 
 import pytest
 
@@ -66,4 +67,14 @@ def py4j_calls():
         finally:
             cs.ClientServerConnection.send_command = send
         return n[0]
+    return count
+
+
+@pytest.fixture(scope="session")
+def arrow_nodes():
+    """arrow_nodes(df): the ArrowEvalPython nodes in ``df``'s executed
+    plan (planning runs no job)."""
+    def count(df) -> int:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return len(re.findall(r"\bArrowEvalPython\b", plan))
     return count

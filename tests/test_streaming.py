@@ -89,8 +89,8 @@ def test_stream_windowed_metrics(spark, tmp_path):
 
 
 def test_stream_metrics_match_textstats(spark):
-    """stream_metrics' JVM word-count, whitespace, control-char and 3-gram
-    expressions agree with the textstats definitions.  Run on a batch
+    """stream_metrics' windowed word-count, whitespace, control-char and
+    3-gram rule counts agree with the textstats definitions.  Run on a batch
     frame (withWatermark is a no-op there); null-ts rows get no window.
     The synthetic corpus has no document near the word-count threshold,
     so a few edge documents cover it and non-space token boundaries."""
@@ -210,3 +210,17 @@ def test_stream_audit_honors_config(spark, tmp_path):
     n_caps = got.filter(
         FF.array_contains("rules_fired", "CAPS_RATIO_HIGH")).count()
     assert n_caps > 0        # near-zero caps threshold fires broadly
+
+
+def test_one_arrow_pass(spark, arrow_nodes):
+    """stream_metrics and pipeline.audit each cross the Python boundary
+    in exactly one Arrow pass."""
+    from qualityspark.caching import release_caches
+    from qualityspark.pipeline import audit
+    pages = synth.pages_df(spark, 20, partitions=1)
+    assert arrow_nodes(stream_metrics(pages)) == 1
+    audited = audit(pages)
+    try:
+        assert arrow_nodes(audited) == 1
+    finally:
+        release_caches()
