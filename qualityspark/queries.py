@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from qualityspark import constants as C
 from qualityspark.rules import heuristics as H
 from qualityspark.rules import scalestats as S
+from qualityspark.scoring import sql_lit, sql_str
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB dialect == ANSI here)
@@ -394,12 +395,14 @@ def stopword_density_en(spark, sf_dir):
     """Stopword density (C4/Gopher quality heuristic) over English docs."""
     d = (_t(spark, sf_dir, "documents")
          .filter((F.col("lang") == "en") & F.col("text").isNotNull()))
-    toks = H.tokens_expr(F.col("text"))
-    toks_lower = F.transform(toks, F.lower)
-    sw = list(C.STOPWORDS["en"])
-    hits = F.size(F.filter(toks_lower, lambda t: t.isin(*sw)))
-    density = hits * F.lit(1.0) / F.nullif(F.size(toks), F.lit(0))
-    s = d.select(density.alias("density")).filter(F.col("density").isNotNull())
+    # SQL text with one filter over the tokens: as Column code the
+    # lowered-token transform and isin(*stopwords) cost ~550 py4j calls
+    toks = (f"filter(split(coalesce(text, ''), {sql_str(H.WS_CLASS + '+')}), "
+            "t -> t != '')")
+    sw = ", ".join(sql_lit(w) for w in C.STOPWORDS["en"])
+    s = (d.selectExpr(f"size(filter({toks}, t -> lower(t) IN ({sw}))) * 1.0D"
+                      f" / nullif(size({toks}), 0) AS density")
+         .filter(F.col("density").isNotNull()))
     return s.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         _r4(F.avg("density")).alias("avg_density"),
@@ -1083,7 +1086,13 @@ FROM e1
 def ks_histogram_halves(spark, sf_dir):
     """TEMPORAL_DRIFT / KS 2-sample (reference checks/date_checks.py:309-368)
     via deterministic 100-bin histogram ECDF L-infinity distance
-    (SURVEY.md §7.4 item 3: no scipy, mergeable, exact-reproducible)."""
+    (SURVEY.md §7.4 item 3: no scipy, mergeable, exact-reproducible).
+
+    The tail after the exact ntile(2) split is one ``groupBy(bucket)``
+    counting both halves (``count_if``), then one running window over
+    <= 101 rows: ``sum(n_h) OVER (ORDER BY bucket) / sum(n_h) OVER ()``.
+    A bucket only one half holds adds 0 to the other's prefix, so that
+    ECDF carries its last value forward without a pivot or a fill."""
     # ONE combined eager agg collects quantile boundaries AND min/max
     # (r2 ran these as separate scans — the extra driver actions were the
     # only bench regression); the lazy histogram plan then re-scans the
@@ -1106,21 +1115,13 @@ def ks_histogram_halves(spark, sf_dir):
                         / F.lit(span) * 100).cast("int"), F.lit(99))
         .alias("bucket") if span is not None
         else F.lit(None).cast("int").alias("bucket"))
-    c = x.groupBy("half", "bucket").agg(F.count(F.lit(1)).alias("n"))
-    wc = Window.partitionBy("half").orderBy("bucket")
-    wt = Window.partitionBy("half")
-    g = c.select("half", "bucket",
-                 (F.sum("n").over(wc) * 1.0 / F.sum("n").over(wt))
-                 .alias("ecdf"))
-    # align on union of buckets: pivot halves then forward-fill via
-    # last_value over bucket order
-    p = (g.groupBy("bucket")
-         .pivot("half", [1, 2]).agg(F.first("ecdf")))
-    wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    f1 = F.last(F.col("1"), ignorenulls=True).over(wb)
-    f2 = F.last(F.col("2"), ignorenulls=True).over(wb)
-    return (p.select((F.abs(F.coalesce(f1, F.lit(0.0))
-                            - F.coalesce(f2, F.lit(0.0)))).alias("d"))
+    c = x.groupBy("bucket").agg(F.expr("count_if(half = 1)").alias("n1"),
+                                F.expr("count_if(half = 2)").alias("n2"))
+    # nullif: one row leaves the second half empty (ANSI raises on / 0)
+    ecdf = ("coalesce(sum({n}) OVER (ORDER BY bucket) * 1.0D "
+            "/ nullif(sum({n}) OVER (), 0), 0.0D)")
+    return (c.selectExpr(f"abs({ecdf.format(n='n1')} "
+                         f"- {ecdf.format(n='n2')}) AS d")
             .agg(_r4(F.max("d")).alias("ks_stat")))
 
 
@@ -1273,7 +1274,7 @@ def wasserstein_value_halves(spark, sf_dir):
     the complete-grid sum (vs ks_histogram_halves' max, where present
     buckets suffice) needs all 100 bins so runs of empty buckets between
     occupied ones still contribute; the grid is a 100-row broadcast join
-    and the forward-fill window is O(bins), never O(rows).  Cross-engine
+    and the running window is O(bins), never O(rows).  Cross-engine
     parity trick: |F1-F2| sums ACCUMULATE in exact bigint space as
     |c1*t2 - c2*t1| over forward-filled cumulative counts (a 100-term
     float sum flips the 4th decimal between engines); the single float
@@ -1282,8 +1283,8 @@ def wasserstein_value_halves(spark, sf_dir):
     split; beyond that, pre-aggregate or accept last-ulp drift.
     Degenerate parity (r5 ADVICE): a constant column (hi == lo) or an
     empty half yields NULL in BOTH engines — Spark early-returns the
-    null row; the SQL's final scale uses nullif(hi-lo, 0) and DuckDB
-    division by a zero t1*t2 is NULL."""
+    null row or divides by nullif(t1*t2, 0); the SQL's final scale uses
+    nullif(hi-lo, 0) and DuckDB division by a zero t1*t2 is NULL."""
     e = (_t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
          .select("value", "ts", "event_id"))
     stats = e.agg(S.boundary_sketch_expr(F.col("ts"), 32).alias("b"),
@@ -1293,38 +1294,26 @@ def wasserstein_value_halves(spark, sf_dir):
     lo, hi = stats["lo"], stats["hi"]
     span = (hi - lo) if (lo is not None and hi is not None
                          and hi != lo) else None
+    if span is None:
+        return spark.range(1).select(
+            F.lit(None).cast("double").alias("w1_dist"))
     h = (S.with_halves(e, F.col("ts"), [F.col("event_id")],
                        boundaries=bnds).select("value", "half"))
-    x = h.select(
-        "half",
-        F.least(F.floor((F.col("value") - F.lit(lo))
-                        / F.lit(span) * 100).cast("int"), F.lit(99))
-        .alias("bucket") if span is not None
-        else F.lit(None).cast("int").alias("bucket"))
-    c = x.groupBy("half", "bucket").agg(F.count(F.lit(1)).alias("n"))
-    tr = (c.agg(F.sum(F.when(F.col("half") == 1, F.col("n"))
-                      .otherwise(F.lit(0))).alias("t1"),
-                F.sum(F.when(F.col("half") == 2, F.col("n"))
-                      .otherwise(F.lit(0))).alias("t2")).head())
-    t1, t2 = int(tr["t1"] or 0), int(tr["t2"] or 0)
-    wc = Window.partitionBy("half").orderBy("bucket")
-    g = c.select("half", "bucket", F.sum("n").over(wc).alias("cn"))
-    p = (g.groupBy("bucket")
-         .pivot("half", [1, 2]).agg(F.first("cn")))
-    grid = spark.range(100).select(F.col("id").cast("int").alias("bucket"))
-    pg = grid.join(p, "bucket", "left")
-    wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    c1 = F.coalesce(F.last(F.col("1"), ignorenulls=True).over(wb),
-                    F.lit(0)).cast("long")
-    c2 = F.coalesce(F.last(F.col("2"), ignorenulls=True).over(wb),
-                    F.lit(0)).cast("long")
-    width = (span / 100.0) if span is not None else None
-    s = (pg.select(F.abs(c1 * F.lit(t2) - c2 * F.lit(t1)).alias("d"))
-         .agg(F.sum("d").alias("s")))
-    if width is None or not t1 or not t2:
-        return s.select(F.lit(None).cast("double").alias("w1_dist"))
-    return s.select(_r4(F.col("s") / F.lit(t1 * t2) * F.lit(width))
-                    .alias("w1_dist"))
+    x = h.select("half", F.least(F.floor((F.col("value") - F.lit(lo))
+                                         / F.lit(span) * 100).cast("int"),
+                                 F.lit(99)).alias("bucket"))
+    # ks_histogram_halves' one-shuffle tail over the full grid: c_h is the
+    # forward-filled cumulative count, t_h the half's total
+    c = x.groupBy("bucket").agg(F.expr("count_if(half = 1)").alias("n1"),
+                                F.expr("count_if(half = 2)").alias("n2"))
+    cum = "coalesce(sum(n{h}) OVER (ORDER BY bucket), 0)".format
+    tot = "sum(n{h}) OVER ()".format
+    g = (spark.range(100).selectExpr("CAST(id AS INT) AS bucket")
+         .join(c, "bucket", "left")
+         .selectExpr(f"abs({cum(h=1)} * {tot(h=2)} - {cum(h=2)} * {tot(h=1)})"
+                     " AS d", f"{tot(h=1)} * {tot(h=2)} AS tt"))
+    return g.agg(_r4(F.sum("d") / F.nullif(F.max("tt"), F.lit(0))
+                     * F.lit(span / 100.0)).alias("w1_dist"))
 
 
 @q("embedding_centroid_drift", """

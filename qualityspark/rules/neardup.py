@@ -543,7 +543,8 @@ def verified_near_dups(df: DataFrame, id_col: str = "doc_id",
     (30%+) that is the LSH job-killer.  Instead:
 
       1. cluster by sha2(text); band/verify ONE representative per
-         cluster (min id) — banding now sees unique texts only;
+         cluster (min id), keyed by its sha — banding now sees unique
+         texts only;
       2. expand verified rep pairs to all cross-cluster member pairs
          (identical text => identical shingle set => identical Jaccard,
          so the expansion is EXACT, not an approximation);
@@ -566,29 +567,24 @@ def verified_near_dups(df: DataFrame, id_col: str = "doc_id",
     reps = ids.groupBy("sha").agg(F.min("id").alias("rid"))
     rep_docs = (docs.join(reps, "sha")
                 .filter(F.col("id") == F.col("rid"))
-                .select("rid", "sha", "t"))
+                .select("sha", "t"))
 
-    pairs, sh = lsh_candidate_pairs(rep_docs, "rid", "t", num_hashes,
+    # banded and verified by text hash: one representative per text, so
+    # the sha names the rep and its pairs fan out to members directly
+    pairs, sh = lsh_candidate_pairs(rep_docs, "sha", "t", num_hashes,
                                     bands, shingle_k)
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    rep_j = (pairs.join(a, "id_a").join(b, "id_b")
-             .select("id_a", "id_b",
+    a = sh.select(F.col("id").alias("sha_a"), F.col("sh").alias("sh_a"))
+    b = sh.select(F.col("id").alias("sha_b"), F.col("sh").alias("sh_b"))
+    rep_j = (pairs.toDF("sha_a", "sha_b").join(a, "sha_a").join(b, "sha_b")
+             .select("sha_a", "sha_b",
                      (F.size(F.array_intersect("sh_a", "sh_b")) * F.lit(1.0)
                       / F.size(F.array_union("sh_a", "sh_b")))
                      .alias("jaccard"))
              .filter(F.col("jaccard") >= threshold))
 
+    # fan each verified text pair out to all cluster members
     members = ids
-    rep_sha = reps.select(F.col("rid"), F.col("sha"))
-    # rep id -> sha for both sides of a verified pair, then fan out to all
-    # cluster members (cross-cluster expansion)
-    rj = (rep_j
-          .join(rep_sha.select(F.col("rid").alias("id_a"),
-                               F.col("sha").alias("sha_a")), "id_a")
-          .join(rep_sha.select(F.col("rid").alias("id_b"),
-                               F.col("sha").alias("sha_b")), "id_b"))
-    cross = (rj
+    cross = (rep_j
              .join(members.select(F.col("sha").alias("sha_a"),
                                   F.col("id").alias("ma")), "sha_a")
              .join(members.select(F.col("sha").alias("sha_b"),
@@ -599,8 +595,7 @@ def verified_near_dups(df: DataFrame, id_col: str = "doc_id",
     # intra-cluster pairs: identical texts, Jaccard exactly 1.0 — but only
     # for clusters the banding was eligible for (>= shingle_k tokens, i.e.
     # a nonempty shingle set), matching the brute-force oracle's filter
-    eligible = sh.select(F.col("id").alias("rid")).join(rep_sha, "rid") \
-                 .select("sha")
+    eligible = sh.select(F.col("id").alias("sha"))
     m1 = members.join(eligible, "sha")  # AQE picks broadcast when small
     m2 = m1.select(F.col("sha"), F.col("id").alias("id_b"))
     intra = (m1.join(m2, "sha")

@@ -25,6 +25,10 @@ sketch (skipped when the caller passes ``boundaries``).
 ``with_global_order`` is the one ordering primitive; the ntile, lag and
 rank helpers below build on it.
 
+Steps 2 and 3 are built as SQL text with exact boundary literals: as
+Column trees they cost over 100 py4j calls per boundary, so building a
+split-half query took as long as running it.
+
 Skew note: a single key value holding >> 1/B of the table collapses into
 one bucket (correctness unaffected; that bucket's task is large).  For the
 continuous/timestamp keys these statistics run on, the quantile cuts keep
@@ -34,8 +38,14 @@ histogram instead (two-pass rank).
 
 from __future__ import annotations
 
+import datetime
+from decimal import Decimal
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, TimestampType
+
+from qualityspark.scoring import sql_lit
 
 
 def boundary_sketch_expr(key: Column, buckets: int) -> Column:
@@ -62,14 +72,41 @@ def _boundaries(df: DataFrame, key: Column, buckets: int) -> list:
     return dedup_boundaries(row["b"])
 
 
-def _bucket_expr(key: Column, bnds: list) -> Column:
-    """bucket = number of boundaries strictly below the key (equal keys ->
-    equal bucket).  NULL keys -> bucket -1 (they order first, matching
+def _key_lit(x) -> str:
+    """Boundary ``x`` as an exact SQL literal typed the way ``F.lit`` types
+    it, so the SQL-text bucket compares exactly as the Column form did."""
+    if isinstance(x, datetime.datetime):
+        return f"timestamp_micros({TimestampType().toInternal(x)})"
+    if isinstance(x, datetime.date):
+        return f"date_from_unix_date({DateType().toInternal(x)})"
+    if isinstance(x, Decimal):
+        # the parser reads ``<digits>BD`` into the same BigDecimal py4j
+        # passes for F.lit: the value's own precision and scale
+        return f"({x}BD)"
+    if isinstance(x, (int, float)) and not isinstance(x, bool):
+        return sql_lit(x)
+    raise TypeError(f"no exact SQL literal for boundary {x!r}")
+
+
+def _with_bucket(df: DataFrame, key: Column, bnds: list) -> DataFrame:
+    """``df`` plus the order key as ``_okey`` and its bucket as ``_bkt``:
+    the number of boundaries strictly below the key (equal keys -> equal
+    bucket).  NULL keys -> bucket -1 (they order first, matching
     asc_nulls_first; callers on null-free keys are unaffected)."""
-    b = F.lit(0)
-    for x in bnds:
-        b = b + (key > F.lit(x)).cast("int")
-    return F.when(key.isNull(), F.lit(-1)).otherwise(b)
+    terms = "".join(f" + CAST(_okey > {_key_lit(x)} AS INT)" for x in bnds)
+    return (df.withColumn("_okey", key)
+            .withColumn("_bkt", F.expr(
+                f"CASE WHEN _okey IS NULL THEN -1 ELSE 0{terms} END")))
+
+
+def _onto_targets(cnt: DataFrame, n_bnds: int, fields: str) -> DataFrame:
+    """Each row of ``cnt`` (one per bucket) copied onto every possible
+    target bucket ``_tb`` ({-1} U 0..n_bnds, known at plan time), with the
+    ``fields`` SQL (``{t}`` is the target)."""
+    rows = ", ".join(
+        f"struct({sql_lit(t)} AS _tb, {fields.format(t=sql_lit(t))})"
+        for t in range(-1, n_bnds + 1))
+    return cnt.selectExpr(f"inline(array({rows}))")
 
 
 def with_global_order(df: DataFrame, key: Column,
@@ -83,67 +120,51 @@ def with_global_order(df: DataFrame, key: Column,
     and the total row count as ``total_col``) over ORDER BY key
     [, *tiebreaks] without a single-partition sort and without a driver
     action on the rows: the per-bucket offsets are a tiny in-plan
-    aggregate (<= buckets+2 rows, prefix-summed by exploding each count
+    aggregate (<= buckets+2 rows, prefix-summed by copying each count
     onto its later buckets so no SinglePartition node appears anywhere)
     broadcast-joined back on the bucket id.  The quantile boundaries are
-    one sketch action unless the caller passes ``boundaries``."""
+    one sketch action unless the caller passes ``boundaries``.
+    The bucket and offset rows are SQL text over a temporary key column
+    ``_okey``: as Column code they cost over 100 py4j calls a boundary."""
     tiebreaks = tiebreaks or []
     if boundaries is None:
         boundaries = _boundaries(df, key, buckets)
-    df = df.withColumn("_bkt", _bucket_expr(key, boundaries))
+    df = _with_bucket(df, key, boundaries)
     cnt = df.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_c"))
-    # prefix offsets WITHOUT a global-order window (the plan must stay free
-    # of ANY SinglePartition funnel — tests/test_components.py pins that)
-    # and without recomputing cnt: the possible bucket ids are known at
-    # plan time ({-1} ∪ 0..len(boundaries)), so each count row is exploded
-    # onto every possible target bucket, contributing its count to targets
-    # strictly above it (the prefix sum) and to every target's total.  One
-    # scan, <= (buckets+2)^2 tiny rows, hash-keyed aggregation only;
-    # integer addition is order-free so the offsets are exactly the old
-    # ascending-bucket cumulative sums.
-    all_b = [-1] + list(range(len(boundaries) + 1))
-    contrib = cnt.select(F.explode(F.array(*[
-        F.struct(F.lit(b2).alias("_tb"),
-                 F.when(F.col("_bkt") < F.lit(b2), F.col("_c"))
-                 .otherwise(F.lit(0)).alias("_oc"),
-                 F.col("_c").alias("_tc"))
-        for b2 in all_b])).alias("_x")).select("_x.*")
+    # prefix offsets WITHOUT a global-order window (no SinglePartition
+    # funnel — tests/test_components.py pins that) and from one scan of
+    # cnt: each count adds to the offset of every target strictly above it
+    # and to every target's total.  Integer addition is order-free: exact.
+    contrib = _onto_targets(cnt, len(boundaries),
+                            "CASE WHEN _bkt < {t} THEN _c ELSE 0 END AS _oc, "
+                            "_c AS _tc")
     agg_cols = [F.sum("_oc").alias("_off")]
     if total_col is not None:
         agg_cols.append(F.sum("_tc").alias(total_col))
     offs = (contrib.groupBy("_tb").agg(*agg_cols)
             .withColumnRenamed("_tb", "_bkt"))
     df = df.join(F.broadcast(offs), "_bkt")
-    w = Window.partitionBy("_bkt").orderBy(key, *tiebreaks)
+    w = Window.partitionBy("_bkt").orderBy("_okey", *tiebreaks)
     out = df.withColumn(rn_col, F.row_number().over(w) + F.col("_off"))
     if rank_col is not None:
         # min-rank: ties share the smallest row number; ties never straddle
         # buckets (bucket is a pure function of the key), so within-bucket
         # rank + bucket offset is the exact global rank
-        wr = Window.partitionBy("_bkt").orderBy(key)
+        wr = Window.partitionBy("_bkt").orderBy("_okey")
         out = out.withColumn(rank_col, F.rank().over(wr) + F.col("_off"))
-    return out.drop("_bkt", "_off")
+    return out.drop("_okey", "_bkt", "_off")
 
 
-def ntile_from_rn(rn: Column, n, k: int) -> Column:
-    """Exact ntile(k) bucket from a global row_number over n rows: the
-    first (n % k) tiles hold ceil(n/k) rows (ANSI ntile semantics, matching
-    Spark's and DuckDB's window ntile).  ``n`` may be a Python int or an
-    integral Column (the lazy total) — the arithmetic is integer-exact
-    either way (double division of exact ints < 2^53, truncating int cast
-    == floor for non-negatives)."""
-    if isinstance(n, int):
-        big, small, n_big = n // k + 1, max(1, n // k), n % k
-        # max(1, .): when n < k the otherwise-branch is unreachable but
-        # codegen may still evaluate it — keep the divisor nonzero
-        big, small, n_big, cut = (F.lit(big), F.lit(small), F.lit(n_big),
-                                  F.lit(n_big * big))
-    else:
-        nk = (n / F.lit(k)).cast("long")
-        big = nk + 1
-        small = F.greatest(nk, F.lit(1))
-        n_big = n % F.lit(k)
-        cut = n_big * big
+def ntile_from_rn(rn: Column, n: Column, k: int) -> Column:
+    """Exact ntile(k) bucket from a global row_number over ``n`` rows (the
+    lazy integral total): the first (n % k) tiles hold ceil(n/k) rows (ANSI
+    ntile semantics, matching Spark's and DuckDB's window ntile).  The
+    arithmetic is integer-exact (double division of exact ints < 2^53,
+    truncating int cast == floor for non-negatives); ``small`` is kept
+    nonzero because codegen may evaluate the unreachable branch."""
+    nk = (n / F.lit(k)).cast("long")
+    big, small, n_big = nk + 1, F.greatest(nk, F.lit(1)), n % F.lit(k)
+    cut = n_big * big
     return (F.when(rn <= cut,
                    ((rn - 1) / big).cast("int") + 1)
             .otherwise(n_big.cast("int")
@@ -208,34 +229,24 @@ def with_running_sum(df: DataFrame, key: Column, value: Column,
     ~1 ulp relative, far inside the round-4 comparisons these stats use."""
     d2 = df.withColumn("_v", value)
     bnds = _boundaries(d2, key, buckets)
-    d2 = d2.withColumn("_bkt", _bucket_expr(key, bnds))
-    # prior-bucket totals as a lazy in-plan aggregate + broadcast join
-    # (r7 — the collect cost a full scan and a job round-trip).  Same
-    # one-scan explode-onto-targets shape as with_global_order (no
-    # SinglePartition funnel anywhere in the plan); because these totals
-    # are DOUBLES the prior sums are folded over a sort_array'd struct
-    # list in ascending _bkt order — the exact association of the old
-    # sequential Python loop — and NULL bucket totals are filtered out
-    # exactly like the loop's `or 0.0` / SQL sum's null-skip.
+    d2 = _with_bucket(d2, key, bnds)
+    # prior-bucket totals as a lazy in-plan aggregate + broadcast join, in
+    # with_global_order's copy-onto-targets shape (no SinglePartition
+    # funnel); these totals are DOUBLES, so the prior sums are folded over
+    # a sort_array'd struct list in ascending _bkt order (a fixed
+    # association) and NULL bucket totals are skipped as SQL sum skips them.
     cnt = d2.groupBy("_bkt").agg(F.sum("_v").alias("_s"))
-    all_b = [-1] + list(range(len(bnds) + 1))
-    contrib = cnt.select(F.explode(F.array(*[
-        F.struct(F.lit(b2).alias("_tb"), F.col("_bkt"), F.col("_s"))
-        for b2 in all_b])).alias("_x")).select("_x.*")
-    offs = (contrib.groupBy("_tb")
-            .agg(F.sort_array(F.collect_list(
-                F.when(F.col("_bkt") < F.col("_tb"),
-                       F.struct("_bkt", "_s")))).alias("_arr"))
-            .select(F.col("_tb").alias("_bkt"),
-                    F.aggregate(
-                        F.filter("_arr", lambda x: x["_s"].isNotNull()),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["_s"]).alias("_roff")))
+    contrib = _onto_targets(cnt, len(bnds),
+                            "CASE WHEN _bkt < {t} AND _s IS NOT NULL "
+                            "THEN struct(_bkt, _s) END AS _p")
+    offs = (contrib.groupBy("_tb").agg(F.expr(
+        "aggregate(sort_array(collect_list(_p)), 0.0D, (a, p) -> a + p._s)")
+        .alias("_roff")).withColumnRenamed("_tb", "_bkt"))
     d2 = d2.join(F.broadcast(offs), "_bkt")
-    w = (Window.partitionBy("_bkt").orderBy(key, *(tiebreaks or []))
+    w = (Window.partitionBy("_bkt").orderBy("_okey", *(tiebreaks or []))
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (d2.withColumn(col, F.sum("_v").over(w) + F.col("_roff"))
-            .drop("_v", "_bkt", "_roff"))
+            .drop("_v", "_okey", "_bkt", "_roff"))
 
 
 def with_value_ranks(df: DataFrame, value: Column, buckets: int = 32,

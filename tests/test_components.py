@@ -88,14 +88,25 @@ def test_lsh_finds_all_near_dups(spark):
         rows.append((c * 10 + 2, _doc(words)))
     for u in range(10):
         rows.append((1000 + u, _doc([f"u{u}_{i}" for i in range(100)])))
+    # exact copies under 3 tokens have no shingles: no intra pairs
+    rows += [(2000 + i, "too short") for i in range(3)]
+    rows.append((3000, None))
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r["id_a"], r["id_b"])
+    got = {(r["id_a"], r["id_b"]): r["jaccard"]
            for r in ND.verified_near_dups(df, threshold=0.8).collect()}
     want = set()
     for c in range(5):
         want |= {(c * 10 + 0, c * 10 + 1), (c * 10 + 0, c * 10 + 2),
                  (c * 10 + 1, c * 10 + 2)}
-    assert got == want  # perfect recall at these parameters, no spurious
+    assert set(got) == want  # perfect recall at these parameters, no spurious
+
+    def grams(text):
+        t = text.split()
+        return {" ".join(t[i:i + 3]) for i in range(len(t) - 2)}
+    text = dict(rows)
+    for (a, b), j in got.items():
+        ga, gb = grams(text[a]), grams(text[b])
+        assert j == round(len(ga & gb) / len(ga | gb), 4), (a, b, j)
 
 
 def test_simhash_near_identical_collide(spark):
