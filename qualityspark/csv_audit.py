@@ -42,7 +42,6 @@ Remaining ladders (date/format/case) are documented local choices.
 from __future__ import annotations
 
 import math
-import re as _re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -152,9 +151,7 @@ def _pass_a_melted(tv, types, data_cols, date_axis):
     s = F.trim(c)
     ne = TI._nonempty(c)
     val = F.when(ne, s)
-    nl = c.isNull() | s.rlike(
-        "^(?iu:" + "|".join(_re.escape(w)
-                            for w in sorted(C.NULL_LIKE) if w) + ")?$")
+    nl = masks.nullish_mask(c)
     ws = c.isNotNull() & (c != s) & (s != "")
     # DATE_FORMAT_MIX: the FIRST parsing ladder entry, the reference's
     # _parse_date walk (checks/date_checks.py:69-107)

@@ -26,9 +26,10 @@ its categorical / date-value / id-format families:
       TEMPORAL_DRIFT's KS-2-sample rides the same scan.
   monotonicity  — ONE job: a prev-value window partitioned by (column,
       spark partition); partition boundaries are walked driver-side.
-  cross-column  — pair aggregates (Pearson pairs, point-biserial,
-      null-indicator correlations, MCAR conditional moments,
-      null-row-pattern count) in a few concurrently submitted slices
+  cross-column  — ONE groupBy over pairs: the columns it reads projected
+      into one double array per row, each row exploded once per checked
+      pair (Pearson, point-biserial, null-indicator, MCAR) and grouped by
+      the pair index, so the plan stays the same size at any pair count
       (pair caps documented per check).
   temporal pass — ONE groupBy(period, column) job: per-period null rates +
       numeric means; ACF/seasonality/CUSUM finish driver-side on the
@@ -64,7 +65,8 @@ ALPHA = 0.05                 # reference hypothesis_checks.py:21
 _SAMPLE_CAP = 5
 # pair caps for the cross-column job (reference cross_column_checks caps
 # VIF at 50 columns / chi2 at 5 pairs per column; the Spark path also caps
-# the Pearson pair scan so the single aggregate stays codegen-sized)
+# the Pearson pair scan, which bounds the rows the pair explode emits and
+# the checks' report contents)
 MAX_CORR_COLS = 25
 MAX_NULLCORR_COLS = 20
 MAX_PB_BOOL_COLS = 20        # point-biserial bool fan-out cap (r6 ADVICE)
@@ -636,44 +638,53 @@ def monotonicity_melted(tv: DataFrame, date_cols: list[str]) -> dict:
 
 # =========================================================================
 # Cross-column dataset pass (reference cross_column_checks.py,
-# null_pattern_checks.py) — ONE aggregate job
+# null_pattern_checks.py) — ONE pair-melted groupBy
 # =========================================================================
 
-# One cross-column agg can reach ~3,300 aggregate expressions (25-column
-# corr pairs + null-indicator pairs + MCAR moments), far past
-# spark.sql.codegen.maxFields — the whole job then runs interpreted and
-# its single-threaded planning alone dominates wall time (measured 28.6 s
-# of a 46 s 110-col audit).  The aggregates are independent, so they are
-# evaluated as <=XCOL_AGG_CHUNK-expression slices submitted concurrently
-# (guide §2.6); the merged dict is identical key-for-key.  The pair caps
-# (MAX_CORR_COLS etc.) bound the expression count independent of table
-# width, so the slice count stays ~13 at any width, each scanning only
-# the ~60 pruned columns the family touches.
-XCOL_AGG_CHUNK = 250
+# what every pair group aggregates: a_/b_ are the pair's two values where
+# both are present (pairwise-complete co-moments), bm/bp the second value
+# where the first is 1.0 / 0.0 (MCAR pairs only, NULL elsewhere)
+_PAIR_AGGS = (("n", "count(a_)"), ("sa", "sum(a_)"), ("sb", "sum(b_)"),
+              ("sab", "sum(a_ * b_)"), ("saa", "sum(a_ * a_)"),
+              ("sbb", "sum(b_ * b_)"),
+              ("mn", "count(bm)"), ("ma", "avg(bm)"), ("mv", "var_samp(bm)"),
+              ("pn", "count(bp)"), ("pa", "avg(bp)"), ("pv", "var_samp(bp)"))
 
 
-def _agg_chunked(df: DataFrame, aggs: list) -> dict:
-    if len(aggs) <= XCOL_AGG_CHUNK:
-        return df.agg(*aggs).first().asDict()
-    slices = [aggs[i:i + XCOL_AGG_CHUNK]
-              for i in range(0, len(aggs), XCOL_AGG_CHUNK)]
-    from qualityspark.parallel import submit
-    from concurrent.futures import ThreadPoolExecutor
-    out: dict = {}
-    with ThreadPoolExecutor(max_workers=min(6, len(slices))) as pool:
-        futs = [submit(pool, lambda s=s: df.agg(*s).first().asDict())
-                for s in slices]
-        for f in futs:
-            out.update(f.result())
-    return out
+def _pair_moments(df: DataFrame, x: list, pairs: list[tuple],
+                  mcar_from: int) -> dict:
+    """``{f"{key}{agg}": value}`` for each ``(key, i, j)`` of ``pairs``
+    and each _PAIR_AGGS aggregate over ``x[i]``, ``x[j]`` (double
+    Columns), from one plan whose size does not grow with the pair
+    count: ``x`` is projected once into an array, each row is exploded
+    once per pair (two literal int arrays name its elements) and grouped
+    by the pair index.  Each group adds its rows in task row order, as a
+    global aggregate per pair does, so the values are that aggregate's
+    (tests/test_csv_breadth.py pins this on two partitions)."""
+    idx = [", ".join(str(p[k]) for p in pairs) for k in (1, 2)]
+    u = (df.select(F.array(*x).alias("x"))
+         .selectExpr(f"explode(sequence(0, {len(pairs) - 1})) AS p", "x")
+         .selectExpr("p", f"x[array({idx[0]})[p]] AS a",
+                     f"x[array({idx[1]})[p]] AS b")
+         .selectExpr("p", "CASE WHEN b IS NOT NULL THEN a END AS a_",
+                     "CASE WHEN a IS NOT NULL THEN b END AS b_",
+                     f"CASE WHEN p >= {mcar_from} AND a = 1.0D THEN b END"
+                     " AS bm",
+                     f"CASE WHEN p >= {mcar_from} AND a = 0.0D THEN b END"
+                     " AS bp"))
+    rows = u.groupBy("p").agg(*[F.expr(e).alias(n)
+                                for n, e in _PAIR_AGGS]).collect()
+    return {pairs[r["p"]][0] + n: r[n] for r in rows for n, _ in _PAIR_AGGS}
 
 
 def cross_column_pass(tv: DataFrame, types: dict, stats: dict,
                       n_rows: int) -> list[dict]:
-    """HIGH_CORRELATION / MULTICOLLINEARITY_VIF / CHI2-free associations /
-    POINT_BISERIAL / NULL_CORRELATION / NULL_ROW_PATTERN / MCAR_VIOLATION
-    in one aggregation job; a second tiny job fetches the top null
-    patterns only when the pattern check fires."""
+    """HIGH_CORRELATION / MULTICOLLINEARITY_VIF / POINT_BISERIAL /
+    NULL_CORRELATION / NULL_ROW_PATTERN / MCAR_VIOLATION from one
+    ``_pair_moments`` groupBy: each Pearson, point-biserial,
+    null-indicator and MCAR pair, and a self pair per boolean column and
+    for the >50%-null row flag, is one group.  A second tiny job fetches
+    the top null patterns only when the pattern check fires."""
     checks = []
     if not n_rows:
         return checks
@@ -688,8 +699,8 @@ def cross_column_pass(tv: DataFrame, types: dict, stats: dict,
     bool_cols = [c for c, t in types.items() if t == TI.BOOLEAN]
     if len(bool_cols) > MAX_PB_BOOL_COLS:
         # r6 ADVICE: this fan-out was the one uncapped family — a
-        # flag-heavy wide table yielded n_bool x 25 pairs x 6 sums in one
-        # job, recreating the wide-aggregate cliff the caps exist to avoid
+        # flag-heavy wide table yielded n_bool x 25 pairs, each one more
+        # exploded copy of every row
         checks.append(_check(
             "POINT_BISERIAL", "INFO", 0.0,
             f"bool scan capped at first {MAX_PB_BOOL_COLS} of "
@@ -701,60 +712,39 @@ def cross_column_pass(tv: DataFrame, types: dict, stats: dict,
     # MCAR: numeric columns with >1% nulls vs other numeric columns
     mcar_null = [c for c in num_cols if c in null_cols][:MAX_MCAR_NULL_COLS]
 
+    x, groups = [], []
+
+    def put(col) -> int:
+        x.append(col)
+        return len(x) - 1
+
     # Pearson r from division-free shifted sums (ANSI mode makes F.corr
     # throw DIVIDE_BY_ZERO on a zero-variance side; the driver finishes
     # r = S_ab / sqrt(S_aa * S_bb) with the degenerate cases -> None).
     # Values are shifted by the pass-A column means for numerical
     # stability; the pairwise-complete r is shift-invariant.
-    def _corr_aggs(prefix, a_expr, b_expr):
-        both = a_expr.isNotNull() & b_expr.isNotNull()
-        a_ = F.when(both, a_expr)
-        b_ = F.when(both, b_expr)
-        return [
-            F.count(a_).alias(f"{prefix}n"),
-            F.sum(a_).alias(f"{prefix}sa"),
-            F.sum(b_).alias(f"{prefix}sb"),
-            F.sum(a_ * b_).alias(f"{prefix}sab"),
-            F.sum(a_ * a_).alias(f"{prefix}saa"),
-            F.sum(b_ * b_).alias(f"{prefix}sbb")]
-
-    def _shifted(col):
-        mu = (stats.get(col) or {}).get("mean") or 0.0
-        return F.col(f"`{col}_typed`") - float(mu)
-
-    aggs = []
-    for i, a in enumerate(corr_cols):
-        for j in range(i + 1, len(corr_cols)):
-            aggs += _corr_aggs(f"pc::{i}::{j}::", _shifted(a),
-                               _shifted(corr_cols[j]))
+    shifted = [put(F.col(f"`{c}_typed`")
+                   - float((stats.get(c) or {}).get("mean") or 0.0))
+               for c in corr_cols]
+    groups += [(f"pc::{i}::{j}::", shifted[i], shifted[j])
+              for i in range(len(corr_cols))
+              for j in range(i + 1, len(corr_cols))]
     bool_true = ("true", "t", "yes", "y", "si", "sí", "1", "verdadero")
     bool_false = ("false", "f", "no", "n", "0", "falso")
     for bi, b in enumerate(bool_cols):
         s = F.lower(F.trim(quoted_col(b)))
-        binv = (F.when(s.isin(*bool_true), 1.0)
+        k = put(F.when(s.isin(*bool_true), 1.0)
                 .when(s.isin(*bool_false), 0.0))
-        aggs.append(F.countDistinct(binv).alias(f"pbu::{bi}"))
-        for ni, ncol in enumerate(corr_cols):
-            aggs += _corr_aggs(f"pb::{bi}::{ni}::", binv, _shifted(ncol))
+        # self pair: n and sa count the non-null and the 1.0 values
+        groups.append((f"pbu::{bi}::", k, k))
+        groups += [(f"pb::{bi}::{ni}::", k, shifted[ni])
+                  for ni in range(len(corr_cols))]
     nullish = {c: M.nullish_mask(quoted_col(c)) for c in types}
-    for i, a in enumerate(null_cols):
-        for j in range(i + 1, len(null_cols)):
-            aggs += _corr_aggs(f"nc::{i}::{j}::",
-                               nullish[a].cast("double"),
-                               nullish[null_cols[j]].cast("double"))
-    for mi, mc in enumerate(mcar_null):
-        miss = nullish[mc]
-        others = [c for c in num_cols if c != mc][:MAX_MCAR_TESTED_COLS]
-        for oi, oc in enumerate(others):
-            ov = F.col(f"`{oc}_typed`")
-            for tag, pred in (("m", miss), ("p", ~miss)):
-                aggs += [
-                    F.count(F.when(pred, ov)).alias(f"mc{tag}n::{mi}::{oi}"),
-                    F.avg(F.when(pred, ov)).alias(f"mc{tag}a::{mi}::{oi}"),
-                    F.var_samp(F.when(pred, ov))
-                    .alias(f"mc{tag}v::{mi}::{oi}")]
+    ind = {c: put(nullish[c].cast("double")) for c in null_cols}
+    groups += [(f"nc::{i}::{j}::", ind[a], ind[null_cols[j]])
+              for i, a in enumerate(null_cols)
+              for j in range(i + 1, len(null_cols))]
     data_cols = list(types)
-    nullrow_sum = None
     if len(data_cols) >= 3:
         # balanced-tree addition: a left-deep 1000-term `+` chain
         # overflows the JVM stack in the column-to-expression converter
@@ -770,11 +760,19 @@ def cross_column_pass(tv: DataFrame, types: dict, stats: dict,
                      if i + 1 < len(terms) else terms[i]
                      for i in range(0, len(terms), 2)]
         nullrow_sum = terms[0]
-        aggs.append(F.sum((nullrow_sum > len(data_cols) * 0.5)
-                          .cast("long")).alias("nullrow_n"))
-    if not aggs:
+        k = put((nullrow_sum > len(data_cols) * 0.5).cast("double"))
+        groups.append(("nullrow::", k, k))
+    mcar_from = len(groups)
+    raw = {}
+    for mi, mc in enumerate(mcar_null):
+        others = [c for c in num_cols if c != mc][:MAX_MCAR_TESTED_COLS]
+        for oi, oc in enumerate(others):
+            if oc not in raw:
+                raw[oc] = put(F.col(f"`{oc}_typed`"))
+            groups.append((f"mc::{mi}::{oi}::", ind[mc], raw[oc]))
+    if not groups:
         return checks
-    row = _agg_chunked(tv, aggs)
+    row = _pair_moments(tv, x, groups, mcar_from)
 
     def _corr_of(prefix):
         n = row.get(f"{prefix}n") or 0
@@ -832,7 +830,9 @@ def cross_column_pass(tv: DataFrame, types: dict, stats: dict,
     # p<0.05 — INFO, via the exact t transform of the Pearson r.
     assocs = []
     for bi, b in enumerate(bool_cols):
-        if (row.get(f"pbu::{bi}") or 0) < 2:
+        # both values present (the 1.0 count strictly inside (0, n))
+        if not 0 < (row.get(f"pbu::{bi}::sa") or 0) \
+                < (row.get(f"pbu::{bi}::n") or 0):
             continue
         for ni, ncol in enumerate(corr_cols):
             r, nb = _corr_of(f"pb::{bi}::{ni}::")
@@ -873,15 +873,14 @@ def cross_column_pass(tv: DataFrame, types: dict, stats: dict,
     for mi, mc in enumerate(mcar_null):
         others = [c for c in num_cols if c != mc][:MAX_MCAR_TESTED_COLS]
         for oi, oc in enumerate(others):
-            n1 = row.get(f"mcmn::{mi}::{oi}") or 0
-            n2 = row.get(f"mcpn::{mi}::{oi}") or 0
+            key = f"mc::{mi}::{oi}::"
+            n1 = row.get(f"{key}mn") or 0
+            n2 = row.get(f"{key}pn") or 0
             if n1 < 5 or n2 < 5:
                 continue
             _, _, p = statsx.welch(
-                n1, row.get(f"mcma::{mi}::{oi}"),
-                row.get(f"mcmv::{mi}::{oi}"),
-                n2, row.get(f"mcpa::{mi}::{oi}"),
-                row.get(f"mcpv::{mi}::{oi}"))
+                n1, row.get(f"{key}ma"), row.get(f"{key}mv"),
+                n2, row.get(f"{key}pa"), row.get(f"{key}pv"))
             if p < 0.01:
                 violations.append((mc, oc, p))
     if violations:
@@ -895,7 +894,7 @@ def cross_column_pass(tv: DataFrame, types: dict, stats: dict,
 
     # ---- NULL_ROW_PATTERN (null_pattern_checks.py:65-105): rows with
     # >50%% null columns; top patterns fetched only when it fires.
-    nr = row.get("nullrow_n")
+    nr = int(row.get("nullrow::sa") or 0)
     if nr:
         pct = nr / n_rows
         sev = ("HIGH" if pct > 0.10 else "MEDIUM" if pct > 0.05

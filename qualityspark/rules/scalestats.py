@@ -54,8 +54,9 @@ def boundary_sketch_expr(key: Column, buckets: int) -> Column:
     quantile sketch into the SAME pass and hand the deduplicated result
     to ``with_global_order(..., boundaries=...)`` (or the helpers that
     forward it), saving one full scan."""
-    probs = [i / buckets for i in range(1, buckets)]
-    return F.percentile_approx(key, probs, 10_000)
+    # one array literal: a Python list costs one py4j call per probability
+    probs = ", ".join(sql_lit(i / buckets) for i in range(1, buckets))
+    return F.percentile_approx(key, F.expr(f"array({probs})"), 10_000)
 
 
 def dedup_boundaries(bnds) -> list:

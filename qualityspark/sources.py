@@ -76,15 +76,19 @@ def read_csv_audited(spark: SparkSession, path: str,
     return df
 
 
-def typed_view(df: DataFrame, types: dict[str, str]) -> DataFrame:
+def typed_view(df: DataFrame, types: dict[str, str],
+               parsed: dict[str, F.Column] | None = None) -> DataFrame:
     """Adds `<col>_typed` columns with try_cast semantics (null on failure —
-    pandas errors='coerce' analog, SURVEY.md §2.10)."""
-    out = df
-    for col, t in types.items():
-        # backtick-quoted resolution + Column.try_cast (no f-string SQL) so
-        # arbitrary CSV headers (spaces, hyphens, dots, keywords) are safe
-        out = out.withColumn(f"{col}_typed", quoted_col(col).try_cast(t))
-    return out
+    pandas errors='coerce' analog, SURVEY.md §2.10), after the
+    ``parsed`` ones (`<col>_typed` name -> Column built by the caller), in
+    ONE ``withColumns`` projection: a ``withColumn`` per column re-analyses
+    a plan that grows with every call."""
+    # backtick-quoted resolution + Column.try_cast (no f-string SQL) so
+    # arbitrary CSV headers (spaces, hyphens, dots, keywords) are safe
+    cols = dict(parsed or {})
+    cols.update({f"{col}_typed": quoted_col(col).try_cast(t)
+                 for col, t in types.items()})
+    return df.withColumns(cols)
 
 
 def quoted_col(name: str) -> F.Column:

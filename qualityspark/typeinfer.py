@@ -326,18 +326,14 @@ def auto_typed_view(df: DataFrame, types: dict[str, str]) -> DataFrame:
     columns parse through the full detection format ladder (parse_ladder),
     not bare try_cast — detection and typing must agree on what parses."""
     from qualityspark.sources import quoted_col, typed_view
-    out = df
-    casts = {}
+    parsed, casts = {}, {}
     for col, t in types.items():
         if t == DATE:
-            out = out.withColumn(
-                f"{col}_typed",
-                parse_ladder(quoted_col(col), DATE_FORMATS + DATETIME_FORMATS)
-                .cast("date"))
+            parsed[f"{col}_typed"] = parse_ladder(
+                quoted_col(col), DATE_FORMATS + DATETIME_FORMATS).cast("date")
         elif t == DATETIME:
-            out = out.withColumn(
-                f"{col}_typed",
-                parse_ladder(quoted_col(col), DATETIME_FORMATS + DATE_FORMATS))
+            parsed[f"{col}_typed"] = parse_ladder(
+                quoted_col(col), DATETIME_FORMATS + DATE_FORMATS)
         elif t in _CAST_TYPES:
             casts[col] = _CAST_TYPES[t]
-    return typed_view(out, casts)
+    return typed_view(df, casts, parsed)

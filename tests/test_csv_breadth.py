@@ -8,11 +8,14 @@ at least once somewhere — proving the whole selected plan executed, not
 just that the plan object lists it.
 """
 
+import math
 import random
+import struct
 
 import pytest
 from pyspark.sql import functions as F
 
+from qualityspark import csv_breadth as B
 from qualityspark import typeinfer as TI
 from qualityspark.csv_audit import audit_csv
 
@@ -158,9 +161,10 @@ def test_report_independent_of_shuffle_partitions(spark, breadth_report,
 
 def test_family_job_counts(spark, tmp_path):
     """The categorical, date-value and id-format families each read their
-    bounded result in one collect from a window-ranked frame: on the mix
-    fixture they submit at most 12, 3 and 3 jobs, counted by the family
-    name parallel.submit sets as job description."""
+    bounded result in one collect from a window-ranked frame, and the
+    cross-column family runs one pair-melted groupBy: on the mix fixture
+    they submit at most 12, 3, 3 and 4 jobs, counted by the family name
+    parallel.submit sets as job description."""
     from collections import Counter
     from test_r6_perf import _mix_csv
     p = tmp_path / "mix.csv"
@@ -180,6 +184,7 @@ def test_family_job_counts(spark, tmp_path):
     assert jobs["cats"] <= 12, jobs
     assert jobs["datevals"] <= 3, jobs
     assert jobs["idfmt"] <= 3, jobs
+    assert jobs["xcol"] <= 4, jobs
 
 
 def test_date_col_override(spark, tmp_path):
@@ -231,6 +236,94 @@ def test_job_count_constant_in_column_width(spark, tmp_path):
     wide = jobs_for(make(tmp_path / "wide.csv", 6), "r6wide")
     # identical type mix (1 categorical, no ids/dates) -> identical jobs
     assert wide == narrow, (narrow, wide)
+
+
+def _bits(v):
+    """A value compared bit for bit: NaN equals NaN, -0.0 differs from
+    0.0."""
+    return struct.pack(">d", v) if isinstance(v, float) else v
+
+
+def test_pair_moments_equal_spark_sums(spark):
+    """The pair-melted groupBy returns, for every pair, the count, sums,
+    averages and sample variances that one global aggregate of the same
+    pairwise-complete expressions returns, bit for bit, over a
+    2-partition frame with nulls, a NaN, a -0.0, a constant column (a
+    zero-variance pair), an all-null column and a boolean column."""
+    rng = random.Random(4)
+    rows = []
+    for r in range(60):
+        a = None if r % 7 == 0 else rng.gauss(0, 10 ** rng.randint(-3, 9))
+        if r == 5:
+            a = float("nan")
+        elif r == 9:
+            a = -0.0
+        b = None if r % 5 == 2 else rng.uniform(-1e6, 1e6)
+        flag = (None, "true", "no", "YES", "f")[r % 5]
+        rows.append((a, b, 3.5, None, flag))
+    df = spark.sparkContext.parallelize(rows, 2).toDF(
+        "a double, b double, k double, z double, flag string")
+    assert df.rdd.getNumPartitions() == 2
+    s = F.lower(F.trim(F.col("flag")))
+    x = [F.col("a"), F.col("b"), F.col("k"), F.col("z"),
+         F.when(s.isin("true", "yes"), 1.0).when(s.isin("no", "f"), 0.0),
+         F.col("a").isNull().cast("double"),
+         F.col("flag").isNull().cast("double")]
+    pairs = [(f"p{i}{j}:", i, j) for i in range(len(x))
+             for j in range(i, len(x))]
+    mcar_from = len(pairs)
+    pairs += [(f"m{i}{j}:", i, j) for i in (5, 6) for j in (0, 1, 2, 3)]
+    want_aggs = []
+    for key, i, j in pairs:
+        both = x[i].isNotNull() & x[j].isNotNull()
+        a_, b_ = F.when(both, x[i]), F.when(both, x[j])
+        want_aggs += [F.count(a_).alias(f"{key}n"),
+                      F.sum(a_).alias(f"{key}sa"),
+                      F.sum(b_).alias(f"{key}sb"),
+                      F.sum(a_ * b_).alias(f"{key}sab"),
+                      F.sum(a_ * a_).alias(f"{key}saa"),
+                      F.sum(b_ * b_).alias(f"{key}sbb")]
+        if key.startswith("m"):
+            for tag, flag in (("m", 1.0), ("p", 0.0)):
+                v = F.when(x[i] == flag, x[j])
+                want_aggs += [F.count(v).alias(f"{key}{tag}n"),
+                              F.avg(v).alias(f"{key}{tag}a"),
+                              F.var_samp(v).alias(f"{key}{tag}v")]
+    want = df.agg(*want_aggs).first().asDict()
+    got = B._pair_moments(df, x, pairs, mcar_from)
+    assert {k: _bits(got[k]) for k in want} == \
+        {k: _bits(v) for k, v in want.items()}
+    # the fixture reaches the edge cases it names
+    assert math.isnan(want["p00:sa"]) and want["p22:n"] > 0
+    assert want["p33:n"] == 0 and want["p03:sa"] is None
+
+
+def test_cross_column_jobs_constant_in_width(spark):
+    """The cross-column family submits the same jobs, at most 4, for 12
+    and for 24 numeric columns with nulls: its plan grows with the pair
+    count in literals only, never in aggregates or slices."""
+    def jobs_for(width, group):
+        cols = [f"n{j:02d}" for j in range(width)]
+        rows = [tuple(None if (r + j) % 10 == 0 else f"{(r * (j + 3)) % 17}"
+                      for j in range(width)) for r in range(200)]
+        df = spark.createDataFrame(rows, ", ".join(f"{c} string"
+                                                   for c in cols))
+        tv = df.withColumns({f"{c}_typed": F.col(c).try_cast("double")
+                             for c in cols})
+        types = {c: TI.NUMERIC_CONTINUOUS for c in cols}
+        stats = {c: {"n_null": 20, "n_num": 180, "mean": 8.0}
+                 for c in cols}
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "xcol width")
+        try:
+            B.cross_column_pass(tv, types, stats, 200)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    narrow = jobs_for(12, "xcol12")
+    assert narrow == jobs_for(24, "xcol24") and narrow <= 4, narrow
 
 
 def test_selection_map_families():

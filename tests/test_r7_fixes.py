@@ -235,24 +235,6 @@ def test_shingle_sig_pass_matches_jvm_chain(spark):
     assert w == g
 
 
-def test_agg_chunked_equals_single_agg(spark):
-    from qualityspark import csv_breadth as B
-    df = spark.createDataFrame(
-        [(float(i), float(i * i)) for i in range(100)], "a double, b double")
-    aggs = []
-    for i in range(30):
-        aggs += [F.sum(F.col("a") + i).alias(f"s{i}"),
-                 F.count(F.when(F.col("b") > i * 10, 1)).alias(f"c{i}")]
-    want = df.agg(*aggs).first().asDict()
-    old_chunk = B.XCOL_AGG_CHUNK
-    B.XCOL_AGG_CHUNK = 7    # force many slices
-    try:
-        got = B._agg_chunked(df, aggs)
-    finally:
-        B.XCOL_AGG_CHUNK = old_chunk
-    assert got == want
-
-
 def test_nullrow_pattern_survives_1000_columns(spark):
     """r6 ADVICE high: the top-patterns fetch rebuilt the 1000-term sum
     left-deep, so a wide table with >50%-null rows crashed the audit the
